@@ -4,11 +4,12 @@ travel, and compaction that never deletes what a reader might hold.
 The swap-manifest path (executor/reader) makes IN-PLACE compaction
 safe on object stores; this module is the next rung: a tiny log of
 COMPLETE table states under `<root>/_snapshots/v<NNNNNNNNNNNN>.json`.
-Each snapshot lists every live data file (relative path + size) plus
-lineage metadata. Commit is a temp-write + rename onto the next
-version number — rename-if-absent is the optimistic-concurrency
-token, so two concurrent committers can both win consecutive numbers
-but never clobber each other (the loser re-reads and retries).
+Each snapshot names an immutable manifest listing every live data
+file (relative path + size) plus lineage metadata. Commit is a
+temp-write + hard link onto the next version number — link-if-absent
+is the optimistic-concurrency token, so two concurrent committers can
+both win consecutive numbers but never clobber each other (the loser
+re-reads and retries).
 
 Under the log, compaction becomes append-only (`snapshot_compact`):
 rewritten files land beside the old ones under fresh uuid names, the
@@ -29,12 +30,15 @@ manifest for read-during-compaction safety (QHBaseCompact.java flows
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import posixpath
 import re
+import shutil
 import time
 import uuid
 from typing import NamedTuple
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,10 +46,8 @@ from pyspark.sql import functions as F
 from hbase_compact_spark.compaction.executor import (
     _fingerprint,
     _hadoop_fs,
-    _read_json,
     _rm,
     _uri_path,
-    _write_json,
 )
 
 SNAPSHOT_DIR = "_snapshots"
@@ -577,6 +579,15 @@ def _load_manifest(local_path: str) -> dict:
     return out
 
 
+def _remove_local(path: str) -> None:
+    """Remove a local file or directory tree; a missing path is a
+    no-op."""
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    elif os.path.exists(path):
+        os.remove(path)
+
+
 class SnapshotConflictError(RuntimeError):
     """The snapshot a commit was derived from is no longer the latest:
     a concurrent committer won the race. The caller must re-read the
@@ -586,35 +597,68 @@ class SnapshotConflictError(RuntimeError):
 
 
 class SnapshotLog:
-    """The version log for one table root."""
+    """The version log for one table root.
 
-    def __init__(self, spark: SparkSession, table_root: str):
+    Every `_snapshots/` metadata read and write (version JSONs, refs,
+    manifests) is plain local-filesystem I/O — os + pyarrow on the
+    root's path — so one class serves the driver AND a Python
+    data-source worker with no py4j gateway (sources/snapshot_table.py,
+    streaming/table_tail.py). `spark` may be None; only the Spark-only
+    methods need it (`manifest_df`, `commit_append`, `commit_current`),
+    and shared code (scan_plan) branches on it to skip the distributed
+    manifest scan. Manifests and delete entries are read as local
+    paths, so a remote-scheme root raises here instead of being
+    silently misread."""
+
+    def __init__(self, spark: SparkSession | None, table_root: str):
+        scheme = urlparse(table_root).scheme
+        if scheme not in ("", "file"):
+            raise ValueError(
+                f"SnapshotLog is local-filesystem only; got {table_root!r}"
+            )
         self.spark = spark
         self.table_root = table_root
         self.log_dir = posixpath.join(table_root, SNAPSHOT_DIR)
-        self._fs, self._root, self._jvm = _hadoop_fs(spark, table_root)
-        self._Path = self._jvm.org.apache.hadoop.fs.Path
+        self._local_log = posixpath.join(_uri_path(table_root), SNAPSHOT_DIR)
+
+    def _local(self, *parts: str) -> str:
+        return posixpath.join(self._local_log, *parts)
+
+    def _v(self, version: int | None) -> int:
+        """`version`, or the latest one when None."""
+        v = self.latest() if version is None else version
+        if v is None:
+            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
+        return v
+
+    @staticmethod
+    def _write_tmp(directory: str, payload: dict) -> str:
+        """A complete JSON under a `_tmp-` name — readers only ever
+        see the names it is later linked or renamed to."""
+        tmp = posixpath.join(directory, f"_tmp-{uuid.uuid4().hex[:10]}.json")
+        with open(tmp, "w") as f:
+            json.dump(payload, f)
+        return tmp
 
     # ---------------------------------------------------------- reads
     def versions(self) -> list[int]:
-        p = self._Path(self.log_dir)
-        if not self._fs.exists(p):
+        try:
+            names = os.listdir(self._local_log)
+        except FileNotFoundError:
             return []
-        out = []
-        for st in self._fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("v") and name.endswith(".json"):
-                out.append(int(name[1:-5]))
-        return sorted(out)
+        return sorted(
+            int(n[1:-5])
+            for n in names
+            if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
+        )
 
     def latest(self) -> int | None:
         vs = self.versions()
         return vs[-1] if vs else None
 
     def read(self, version: int) -> dict:
-        return _read_json(
-            self._fs, self._jvm, self._Path(self.log_dir, f"v{version:012d}.json")
-        )
+        with open(self._local(f"v{version:012d}.json")) as f:
+            return json.load(f)
 
     # ------------------------------------------------------ named refs
     # Iceberg-style refs: human-stable names for snapshot versions.
@@ -629,16 +673,16 @@ class SnapshotLog:
 
     def refs(self) -> dict[str, dict]:
         """{name: {"version", "kind", "created_at"}} of every ref."""
-        p = self._Path(self.refs_dir)
-        if not self._fs.exists(p):
+        d = self._local(REFS_SUBDIR)
+        try:
+            names = os.listdir(d)
+        except FileNotFoundError:
             return {}
         out = {}
-        for st in self._fs.listStatus(p):
-            name = st.getPath().getName()
+        for name in names:
             if name.endswith(".json") and not name.startswith("_tmp-"):
-                out[name[:-5]] = _read_json(
-                    self._fs, self._jvm, st.getPath()
-                )
+                with open(posixpath.join(d, name)) as f:
+                    out[name[:-5]] = json.load(f)
         return out
 
     def set_ref(
@@ -647,14 +691,14 @@ class SnapshotLog:
         """Create (or, for a branch, move) the named ref. Tags are
         immutable: re-tagging the SAME version is an idempotent no-op,
         any other target raises — drop_ref first if you truly mean it.
-        Publication is tmp-write + rename; a branch move deletes the
-        old pointer first (rename-if-absent is the commit point, same
-        discipline as the version JSONs)."""
-        import re as _re
-
+        A new ref is published by hard-linking a complete temp file
+        into place (fails if the name exists, like the version
+        JSONs); a branch move is one rename(2) over the old pointer,
+        so readers see the old target or the new one and the pointer
+        is never absent."""
         if kind not in ("tag", "branch"):
             raise ValueError(f"ref kind must be tag or branch, got {kind!r}")
-        if not _re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]*", name):
+        if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]*", name):
             raise ValueError(f"invalid ref name {name!r}")
         v = self.latest() if version is None else int(version)
         if v not in self.versions():
@@ -669,57 +713,35 @@ class SnapshotLog:
                     f"v{existing['version']} as a {existing.get('kind')} — "
                     "tags are immutable; drop_ref first"
                 )
-        fs, Path = self._fs, self._Path
-        fs.mkdirs(Path(self.refs_dir))
+        d = self._local(REFS_SUBDIR)
+        os.makedirs(d, exist_ok=True)
         payload = {
             "name": name,
             "version": v,
             "kind": kind,
             "created_at": int(time.time()),
         }
-        tmp = Path(self.refs_dir, f"_tmp-{uuid.uuid4().hex[:10]}.json")
-        _write_json(fs, Path, tmp, payload)
-        dest = Path(self.refs_dir, f"{name}.json")
+        tmp = self._write_tmp(d, payload)
+        dest = posixpath.join(d, f"{name}.json")
         if existing is not None:
-            # branch move: overwrite the pointer ATOMICALLY via
-            # FileContext rename(OVERWRITE) — a delete-then-rename
-            # would leave a window where the branch does not exist
-            # (crash loses it; concurrent resolve_ref sees
-            # FileNotFoundError). ADVICE r9.
-            if not self._rename_overwrite(tmp, dest):
-                fs.delete(tmp, False)
-                raise RuntimeError(
-                    f"could not move branch {name!r} (lost a race?)"
-                )
-        elif not fs.rename(tmp, dest):
-            fs.delete(tmp, False)
-            raise RuntimeError(f"could not publish ref {name!r} (lost a race?)")
+            os.replace(tmp, dest)
+            return payload
+        try:
+            os.link(tmp, dest)
+        except FileExistsError:
+            raise RuntimeError(
+                f"could not publish ref {name!r} (lost a race?)"
+            ) from None
+        finally:
+            os.unlink(tmp)
         return payload
 
-    def _rename_overwrite(self, src, dest) -> bool:
-        """Atomic overwriting rename (FileContext + Options.Rename.
-        OVERWRITE — posix rename(2) semantics on local/HDFS). The
-        target is never absent: readers see old-or-new, nothing else.
-        Varargs cross the py4j bridge as a reflected enum array."""
-        jvm = self._jvm
-        try:
-            overwrite = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-            arr = jvm.java.lang.reflect.Array.newInstance(
-                overwrite.getDeclaringClass(), 1
-            )
-            jvm.java.lang.reflect.Array.set(arr, 0, overwrite)
-            fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-                self._fs.getUri(), self._fs.getConf()
-            )
-            fc.rename(src, dest, arr)
-            return True
-        except Exception:
-            return False
-
     def drop_ref(self, name: str) -> bool:
-        return self._fs.delete(
-            self._Path(self.refs_dir, f"{name}.json"), False
-        )
+        try:
+            os.remove(self._local(REFS_SUBDIR, f"{name}.json"))
+        except FileNotFoundError:
+            return False
+        return True
 
     # ------------------------------------------ merge-on-read deletes
     @property
@@ -735,11 +757,9 @@ class SnapshotLog:
         under `_snapshots/deletes/` and subtract rows from the listed
         data files at read time. Empty for COW-only tables — the read
         path then skips the subtraction entirely."""
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
         return [
-            (str(n), int(r)) for n, r in self.read(v).get("delete_files") or []
+            (str(n), int(r))
+            for n, r in self.read(self._v(version)).get("delete_files") or []
         ]
 
     def resolve_ref(self, name: str) -> int:
@@ -757,81 +777,50 @@ class SnapshotLog:
         return posixpath.join(self.log_dir, MANIFEST_SUBDIR)
 
     def _manifest_local(self, name: str) -> str:
-        """Local filesystem path of a manifest file/dir (same
-        local-path assumption as the footer-stats pass; an
-        object-store deployment routes this through a pyarrow
-        filesystem)."""
-        return posixpath.join(_uri_path(self.manifest_dir), name)
+        """Local filesystem path of a manifest file/dir."""
+        return self._local(MANIFEST_SUBDIR, name)
 
     def _resolve(self, version: int) -> dict:
-        """{"files", "stats", "blooms"} of a snapshot, whichever of
-        the two encodings it uses: `manifest` reference (current — the
-        per-file metadata lives in an immutable parquet manifest, the
-        JSON stays O(1) in file count) or inline lists (legacy
-        snapshots written before the spill; still readable)."""
-        snap = self.read(version)
-        name = snap.get("manifest")
-        if name:
-            return _load_manifest(self._manifest_local(name))
-        return {
-            "files": sorted(
-                (f[0], int(f[1])) for f in snap.get("files") or []
-            ),
-            "stats": snap.get("stats") or {},
-            "blooms": snap.get("blooms") or {},
-        }
+        """{"files", "stats", "blooms"} of a snapshot: the per-file
+        metadata lives in an immutable parquet manifest, so the
+        version JSON stays O(1) in file count."""
+        return _load_manifest(
+            self._manifest_local(self.read(version)["manifest"])
+        )
 
     def files(self, version: int | None = None) -> list[tuple[str, int]]:
         """[(relative path, size)] of the given (default: latest)
         snapshot. Column-pruned: the stats/bloom payload columns are
         never read, so this really is names+sizes only on the driver
         at any file count."""
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        snap = self.read(v)
-        name = snap.get("manifest")
-        if name:
-            return list(_load_manifest_files(self._manifest_local(name)))
-        return sorted((f[0], int(f[1])) for f in snap.get("files") or [])
+        name = self.read(self._v(version))["manifest"]
+        return list(_load_manifest_files(self._manifest_local(name)))
 
     def blooms(self, version: int | None = None) -> dict[str, dict]:
         """Per-file bloom filters {relpath: {col: bloom}} of the given
         (default: latest) snapshot; empty if never annotated."""
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        return self._resolve(v)["blooms"]
+        return self._resolve(self._v(version))["blooms"]
 
     def manifest_df(self, version: int | None = None) -> DataFrame:
         """The snapshot's per-file metadata as a Spark DataFrame
         (relpath, size, stats, blooms — the JSON-string payload
         columns) — the DISTRIBUTED planning path: manifest rows never
-        pass through the driver. Legacy inline snapshots are lifted
-        into the same shape via createDataFrame (bounded: they predate
-        the spill and are small by construction)."""
-        import json as _json
+        pass through the driver."""
+        name = self.read(self._v(version))["manifest"]
+        return self.spark.read.schema(MANIFEST_SCHEMA_DDL).parquet(
+            posixpath.join(self.manifest_dir, name)
+        )
 
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        snap = self.read(v)
-        name = snap.get("manifest")
-        if name:
-            return self.spark.read.schema(MANIFEST_SCHEMA_DDL).parquet(
-                posixpath.join(self.manifest_dir, name)
-            )
-        res = self._resolve(v)
-        rows = [
-            (
-                p,
-                s,
-                _json.dumps(res["stats"][p]) if p in res["stats"] else None,
-                _json.dumps(res["blooms"][p]) if p in res["blooms"] else None,
-            )
-            for p, s in res["files"]
-        ]
-        return self.spark.createDataFrame(rows, MANIFEST_SCHEMA_DDL)
+    def manifest_table(self, version: int):
+        """The version's manifest as a pyarrow table in canonical
+        (relpath, size, stats, blooms) shape — shard directories are
+        read whole. This is the carry payload for worker-side commits:
+        stats/bloom annotations on surviving files ride through
+        untouched."""
+        tbl = _read_manifest_table(
+            self._manifest_local(self.read(version)["manifest"])
+        )
+        return tbl.select(["relpath", "size", "stats", "blooms"])
 
     def write_manifest(
         self,
@@ -844,35 +833,39 @@ class SnapshotLog:
         passes at scale) write a DataFrame in MANIFEST_SCHEMA_DDL shape
         under `manifest_dir/<m-uuid>` instead and pass that name to
         commit() — the payload then never visits the driver."""
-        import json as _json
-
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         stats = stats or {}
         blooms = blooms or {}
-        name = f"m-{uuid.uuid4().hex[:12]}.parquet"
-        self._fs.mkdirs(self._Path(self.manifest_dir))
         tbl = pa.table(
             {
                 "relpath": pa.array([p for p, _ in files], pa.string()),
                 "size": pa.array([int(s) for _, s in files], pa.int64()),
                 "stats": pa.array(
                     [
-                        _json.dumps(stats[p]) if p in stats else None
+                        json.dumps(stats[p]) if p in stats else None
                         for p, _ in files
                     ],
                     pa.string(),
                 ),
                 "blooms": pa.array(
                     [
-                        _json.dumps(blooms[p]) if p in blooms else None
+                        json.dumps(blooms[p]) if p in blooms else None
                         for p, _ in files
                     ],
                     pa.string(),
                 ),
             }
         )
+        return self.write_manifest_table(tbl)
+
+    def write_manifest_table(self, tbl) -> str:
+        """Write a pyarrow table in manifest shape as one immutable
+        manifest parquet and return its name (pass it to commit)."""
+        import pyarrow.parquet as pq
+
+        name = f"m-{uuid.uuid4().hex[:12]}.parquet"
+        os.makedirs(self._local(MANIFEST_SUBDIR), exist_ok=True)
         pq.write_table(tbl, self._manifest_local(name))
         return name
 
@@ -903,24 +896,20 @@ class SnapshotLog:
             manifest=name,
         )
 
-    def copy_manifest(self, version: int) -> str | None:
+    def copy_manifest(self, version: int) -> str:
         """Byte-copy a version's manifest under a fresh name, for
         METADATA-ONLY commits (schema evolution): manifests stay 1:1
         with versions (expire can always delete a dropped version's
         manifest), and the copy is a filesystem transfer of the
-        encoded parquet — no parse, no per-file driver work. Returns
-        None for legacy inline snapshots (no manifest to copy)."""
-        name = self.read(version).get("manifest")
-        if not name:
-            return None
+        encoded parquet — no parse, no per-file driver work."""
+        name = self.read(version)["manifest"]
         suffix = ".parquet" if name.endswith(".parquet") else ""
         new = f"m-{uuid.uuid4().hex[:12]}{suffix}"
-        FileUtil = self._jvm.org.apache.hadoop.fs.FileUtil
-        src = self._Path(self.manifest_dir, name)
-        dst = self._Path(self.manifest_dir, new)
-        conf = self.spark._jsc.hadoopConfiguration()
-        if not FileUtil.copy(self._fs, src, self._fs, dst, False, conf):
-            raise RuntimeError(f"manifest copy failed: {name} -> {new}")
+        src, dst = self._manifest_local(name), self._manifest_local(new)
+        if os.path.isdir(src):
+            shutil.copytree(src, dst)
+        else:
+            shutil.copyfile(src, dst)
         return new
 
     def manifest_summary(self, name: str) -> tuple[int, int]:
@@ -939,10 +928,7 @@ class SnapshotLog:
         never evolved — readers then fall back to parquet inference."""
         from pyspark.sql.types import StructType
 
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        blob = self.read(v).get("schema")
+        blob = self.read(self._v(version)).get("schema")
         if not blob:
             return None, []
         return StructType.fromJson(blob["fields"]), list(blob["partition_cols"])
@@ -951,10 +937,7 @@ class SnapshotLog:
         """Per-file column stats of the given (default: latest)
         snapshot: {relpath: {"rows": n, "cols": {col: [min, max]}}}.
         Empty if the snapshot was never annotated."""
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        return self._resolve(v)["stats"]
+        return self._resolve(self._v(version))["stats"]
 
     # --------------------------------------------------------- writes
     def commit(
@@ -968,9 +951,12 @@ class SnapshotLog:
         manifest: str | None = None,
         extra: dict | None = None,
     ) -> int:
-        """Atomically claim the next version; rename-if-absent is the
-        only commit point. With an EXPLICIT `parent` (every caller
-        whose file list was derived from that snapshot), losing the
+        """Atomically claim the next version. The only commit point is
+        `os.link(tmp, v<N>.json)`: a hard link fails when the name
+        exists, so it is a rename-if-absent (a plain rename(2) would
+        silently overwrite the winner). With an EXPLICIT `parent`
+        (every caller whose file list was derived from that snapshot;
+        0 = derived from the empty table, so exactly v1), losing the
         race raises SnapshotConflictError instead of retrying: the
         stale file list would silently drop the winner's files. Only
         parent-less commits (bootstrap-style full listings, which are
@@ -981,12 +967,12 @@ class SnapshotLog:
         manifest name plus O(1) summary counts, so its size does not
         grow with file count — the Iceberg snapshot/manifest split.
         Callers with driver-side lists pass `files`/`stats`/`blooms`
-        as before (one manifest is written here); callers that built
-        the manifest ON EXECUTORS (DataFrame write in
-        MANIFEST_SCHEMA_DDL shape) pass its name via `manifest` with
-        files=None and the payload never visits the driver."""
-        fs, Path = self._fs, self._Path
-        fs.mkdirs(Path(self.log_dir))
+        (one manifest is written here); callers that built the
+        manifest elsewhere (an executor DataFrame write in
+        MANIFEST_SCHEMA_DDL shape, or write_manifest_table) pass its
+        name via `manifest` with files=None. On a lost race the
+        manifest is removed: it belongs to no committed version."""
+        os.makedirs(self._local_log, exist_ok=True)
         if manifest is None:
             if files is None:
                 raise ValueError("commit needs files or a manifest")
@@ -997,7 +983,7 @@ class SnapshotLog:
             n_files, total_bytes = self.manifest_summary(manifest)
         payload = {
             "op": op,
-            "parent": parent,
+            "parent": parent or None,
             "committed_at": int(time.time()),
             "manifest": manifest,
             "n_files": n_files,
@@ -1021,28 +1007,37 @@ class SnapshotLog:
             carried = self.read(pv).get("delete_files") if pv else None
             if carried:
                 payload["delete_files"] = carried
-        tmp = Path(self.log_dir, f"_tmp-{uuid.uuid4().hex[:10]}.json")
 
-        def _abort() -> None:
-            fs.delete(tmp, False)
-            # the manifest belongs to no committed version: remove it
-            # rather than leaving an orphan for expire to sweep
-            fs.delete(Path(self.manifest_dir, manifest), True)
+        def _conflict() -> SnapshotConflictError:
+            _remove_local(self._manifest_local(manifest))
+            return SnapshotConflictError(
+                f"commit derived from v{parent} but v{parent + 1} already "
+                f"exists in {self.log_dir}; re-read and re-derive"
+            )
 
         for _ in range(50):
-            n = (self.latest() or 0) + 1
-            if parent is not None and n != parent + 1:
-                _abort()
-                raise SnapshotConflictError(
-                    f"commit derived from v{parent} but v{n - 1} is now "
-                    f"latest in {self.log_dir}; re-read and re-derive"
-                )
-            payload["version"], payload["parent"] = n, parent if parent is not None else n - 1 or None
-            _write_json(fs, Path, tmp, payload)
-            dest = Path(self.log_dir, f"v{n:012d}.json")
-            if not fs.exists(dest) and fs.rename(tmp, dest):
+            latest = self.latest() or 0
+            if parent is None:
+                n = latest + 1
+                payload["parent"] = latest or None
+            elif latest > parent:
+                # newer versions exist even when v(parent+1) itself
+                # was expired (a tag can pin the parent): never claim
+                # a number below the head
+                raise _conflict()
+            else:
+                n = parent + 1
+            payload["version"] = n
+            tmp = self._write_tmp(self._local_log, payload)
+            try:
+                os.link(tmp, self._local(f"v{n:012d}.json"))
                 return n
-        _abort()
+            except FileExistsError:
+                if parent is not None:
+                    raise _conflict() from None
+            finally:
+                os.unlink(tmp)
+        _remove_local(self._manifest_local(manifest))
         raise RuntimeError(f"could not claim a snapshot version in {self.log_dir}")
 
     def bootstrap(self) -> int:
@@ -1083,276 +1078,14 @@ class SnapshotLog:
             None, op=op, parent=parent, schema=schema, manifest=name
         )
 
-class PureSnapshotLog:
-    """READ-ONLY duck-type of SnapshotLog over the local filesystem —
-    no SparkSession, no JVM gateway. This is what lets snapshot-log
-    PLANNING run inside a Python data-source worker
-    (sources/snapshot_table.py): the worker has no py4j bridge, but
-    version JSONs, refs, manifests, and delete-entry metadata are all
-    plain files, so every read accessor the pruning path touches
-    (read/files/_resolve/schema/resolve_ref/delete_files/
-    _manifest_local) is reproducible with json + pyarrow alone.
-    Same local-path assumption as SnapshotLog._manifest_local and the
-    streaming tail's _TailLog; an object-store deployment routes
-    through a pyarrow filesystem. `spark` is None by contract — code
-    shared with SnapshotLog (scan_plan) branches on it to skip
-    Spark-only strategies (the distributed manifest scan)."""
-
-    spark = None
-
-    def __init__(self, table_root: str):
-        self.table_root = table_root
-        self._local_root = _uri_path(table_root)
-        self.log_dir = posixpath.join(table_root, SNAPSHOT_DIR)
-        self._local_log = posixpath.join(self._local_root, SNAPSHOT_DIR)
-
-    # ---------------------------------------------------------- reads
-    def versions(self) -> list[int]:
-        try:
-            names = os.listdir(self._local_log)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            int(n[1:-5])
-            for n in names
-            if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
-        )
-
-    def latest(self) -> int | None:
-        vs = self.versions()
-        return vs[-1] if vs else None
-
-    def read(self, version: int) -> dict:
-        import json as _json
-
-        with open(
-            posixpath.join(self._local_log, f"v{version:012d}.json")
-        ) as f:
-            return _json.load(f)
-
-    @property
-    def refs_dir(self) -> str:
-        return posixpath.join(self.log_dir, REFS_SUBDIR)
-
-    def refs(self) -> dict[str, dict]:
-        import json as _json
-
-        d = posixpath.join(self._local_log, REFS_SUBDIR)
-        try:
-            names = os.listdir(d)
-        except FileNotFoundError:
-            return {}
-        out = {}
-        for name in names:
-            if name.endswith(".json") and not name.startswith("_tmp-"):
-                with open(posixpath.join(d, name)) as f:
-                    out[name[:-5]] = _json.load(f)
-        return out
-
-    def resolve_ref(self, name: str) -> int:
-        ref = self.refs().get(name)
-        if ref is None:
-            raise FileNotFoundError(
-                f"no ref {name!r} under {self.refs_dir} "
-                f"(have: {sorted(self.refs())})"
-            )
-        return int(ref["version"])
-
-    @property
-    def deletes_dir(self) -> str:
-        return posixpath.join(self.log_dir, DELETES_SUBDIR)
-
-    def delete_files(self, version: int | None = None) -> list[tuple[str, int]]:
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        return [
-            (str(n), int(r)) for n, r in self.read(v).get("delete_files") or []
-        ]
-
-    @property
-    def manifest_dir(self) -> str:
-        return posixpath.join(self.log_dir, MANIFEST_SUBDIR)
-
-    def _manifest_local(self, name: str) -> str:
-        return posixpath.join(self._local_log, MANIFEST_SUBDIR, name)
-
-    def _resolve(self, version: int) -> dict:
-        snap = self.read(version)
-        name = snap.get("manifest")
-        if name:
-            return _load_manifest(self._manifest_local(name))
-        return {
-            "files": sorted(
-                (f[0], int(f[1])) for f in snap.get("files") or []
-            ),
-            "stats": snap.get("stats") or {},
-            "blooms": snap.get("blooms") or {},
-        }
-
-    def files(self, version: int | None = None) -> list[tuple[str, int]]:
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        snap = self.read(v)
-        name = snap.get("manifest")
-        if name:
-            return list(_load_manifest_files(self._manifest_local(name)))
-        return sorted((f[0], int(f[1])) for f in snap.get("files") or [])
-
-    def stats(self, version: int | None = None) -> dict[str, dict]:
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        return self._resolve(v)["stats"]
-
-    def blooms(self, version: int | None = None) -> dict[str, dict]:
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        return self._resolve(v)["blooms"]
-
-    def schema(self, version: int | None = None):
-        from pyspark.sql.types import StructType
-
-        v = self.latest() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no snapshots under {self.log_dir}")
-        blob = self.read(v).get("schema")
-        if not blob:
-            return None, []
-        return StructType.fromJson(blob["fields"]), list(blob["partition_cols"])
-
-    # --------------------------------------------------------- writes
-    # The pure WRITE path exists for one caller: the Python
-    # data-source writer (sources/snapshot_table.py), whose commit()
-    # runs in a Spark-spawned Python worker with no py4j gateway —
-    # the same process class that plans pure reads. Same local-
-    # filesystem contract as the reads; an object-store deployment
-    # routes the file IO through a pyarrow filesystem and replaces
-    # the os.link claim with its conditional-put (if-none-match)
-    # twin. Scale note: the parent-manifest union below is one
-    # pyarrow concat in one worker (~100 bytes/file ⇒ ~100 MB at
-    # 10⁶ files) — it never visits the Spark driver, and a
-    # deployment with a live driver session can route the same
-    # commit through SnapshotLog.commit_append's fully distributed
-    # union instead.
-
-    def manifest_table(self, version: int):
-        """The version's manifest as a pyarrow table in canonical
-        (relpath, size, stats, blooms) shape — shard directories are
-        read whole, legacy inline snapshots are synthesized. This is
-        the carry payload for pure commits: stats/bloom annotations
-        on surviving files ride through untouched."""
-        import json as _json
-
-        import pyarrow as pa
-
-        snap = self.read(version)
-        name = snap.get("manifest")
-        if name:
-            tbl = _read_manifest_table(self._manifest_local(name))
-            return tbl.select(["relpath", "size", "stats", "blooms"])
-        files = sorted((f[0], int(f[1])) for f in snap.get("files") or [])
-        st = snap.get("stats") or {}
-        bl = snap.get("blooms") or {}
-        return pa.table(
-            {
-                "relpath": pa.array([p for p, _ in files], pa.string()),
-                "size": pa.array([s for _, s in files], pa.int64()),
-                "stats": pa.array(
-                    [
-                        _json.dumps(st[p]) if p in st else None
-                        for p, _ in files
-                    ],
-                    pa.string(),
-                ),
-                "blooms": pa.array(
-                    [
-                        _json.dumps(bl[p]) if p in bl else None
-                        for p, _ in files
-                    ],
-                    pa.string(),
-                ),
-            }
-        )
-
-    def commit_manifest_table(
-        self,
-        tbl,
-        op: str,
-        parent: int | None,
-        *,
-        carry_delete_files: bool = True,
-        schema_blob: dict | None = None,
-    ) -> int:
-        """Atomic JVM-free commit: write `tbl` (pyarrow, manifest
-        shape) as a fresh immutable manifest, then claim version
-        parent+1 by hard-linking the payload JSON into place —
-        os.link fails if the name exists, so rename-if-absent
-        semantics match SnapshotLog.commit exactly and a loser of a
-        concurrent race raises SnapshotConflictError instead of
-        silently dropping the winner's files. The parent's declared
-        schema always carries; its pending MOR delete entries carry
-        unless the caller replaced the files they scope
-        (carry_delete_files=False — the overwrite path)."""
-        import json as _json
-
-        import pyarrow.parquet as pq
-
-        man_dir = posixpath.join(self._local_log, MANIFEST_SUBDIR)
-        os.makedirs(man_dir, exist_ok=True)
-        name = f"m-{uuid.uuid4().hex[:12]}.parquet"
-        man_local = posixpath.join(man_dir, name)
-        pq.write_table(tbl, man_local)
-        payload = {
-            "op": op,
-            "committed_at": int(time.time()),
-            "manifest": name,
-            "n_files": tbl.num_rows,
-            "total_bytes": int(
-                sum(x.as_py() or 0 for x in tbl.column("size"))
-            ),
-        }
-        psnap = self.read(parent) if parent else {}
-        if psnap.get("schema"):
-            payload["schema"] = psnap["schema"]
-        elif schema_blob:
-            # writer-declared schema (the SQL writer knows the INSERT
-            # schema) — what keeps a ZERO-file commit readable as an
-            # empty table instead of an unreadable dead end
-            payload["schema"] = schema_blob
-        if carry_delete_files and psnap.get("delete_files"):
-            payload["delete_files"] = psnap["delete_files"]
-        n = (parent or 0) + 1
-        payload["version"] = n
-        payload["parent"] = parent if parent else None
-        tmp = posixpath.join(
-            self._local_log, f"_tmp-{uuid.uuid4().hex[:10]}.json"
-        )
-        with open(tmp, "w") as f:
-            _json.dump(payload, f)
-        dest = posixpath.join(self._local_log, f"v{n:012d}.json")
-        try:
-            os.link(tmp, dest)
-        except FileExistsError:
-            os.unlink(tmp)
-            os.unlink(man_local)
-            raise SnapshotConflictError(
-                f"commit derived from v{parent} but v{n} already "
-                f"exists in {self.log_dir}; re-read and re-derive"
-            )
-        os.unlink(tmp)
-        return n
-
 
 def version_as_of(log, ts) -> int:
     """The LATEST version whose `committed_at` is <= `ts` — Iceberg /
     Delta `TIMESTAMP AS OF` resolution. `ts` is epoch seconds
     (int/float), a datetime (aware offsets honored; naive = UTC, the
-    engine-wide session zone), or an ISO-8601 string. Works on both
-    SnapshotLog and PureSnapshotLog (read accessors only), so the
-    batch data source resolves it in the planner worker too.
+    engine-wide session zone), or an ISO-8601 string. Read accessors
+    only, so the batch data source resolves it in the planner worker
+    too (`SnapshotLog(None, root)`).
     Versions commit in order, so committed_at is non-decreasing and
     the scan is a tiny O(versions) metadata walk; commits within one
     second resolve to the latest of them (second-granularity
@@ -2090,19 +1823,12 @@ def evolve_schema(
         "fields": StructType(fields).jsonValue(),
         "partition_cols": pcols,
     }
-    manifest = log.copy_manifest(v)
-    if manifest is not None:
-        return log.commit(
-            None, op="evolve", parent=v, schema=new_blob, manifest=manifest
-        )
-    # legacy inline parent: lift its (small, pre-spill) metadata once
     return log.commit(
-        log.files(v),
+        None,
         op="evolve",
         parent=v,
-        stats=log.stats(v),
-        blooms=log.blooms(v),
         schema=new_blob,
+        manifest=log.copy_manifest(v),
     )
 
 
@@ -2204,23 +1930,12 @@ def set_sort_order(
         "order_id": _latest_order_id(log, v) + 1,
         "sort_by": sort_by,
     }
-    manifest = log.copy_manifest(v)
-    if manifest is not None:
-        return log.commit(
-            None,
-            op="set-sort-order",
-            parent=v,
-            schema=log.read(v).get("schema"),
-            manifest=manifest,
-            extra={"sort_order": order},
-        )
     return log.commit(
-        log.files(v),
+        None,
         op="set-sort-order",
         parent=v,
-        stats=log.stats(v),
-        blooms=log.blooms(v),
         schema=log.read(v).get("schema"),
+        manifest=log.copy_manifest(v),
         extra={"sort_order": order},
     )
 
@@ -2354,23 +2069,12 @@ def evolve_partitioning(
         "spec_id": _latest_spec_id(log, v) + 1,
         "partition_by": list(partition_by),
     }
-    manifest = log.copy_manifest(v)
-    if manifest is not None:
-        return log.commit(
-            None,
-            op="evolve-partitioning",
-            parent=v,
-            schema=log.read(v).get("schema"),
-            manifest=manifest,
-            extra={"partition_spec": spec},
-        )
     return log.commit(
-        log.files(v),
+        None,
         op="evolve-partitioning",
         parent=v,
-        stats=log.stats(v),
-        blooms=log.blooms(v),
         schema=log.read(v).get("schema"),
+        manifest=log.copy_manifest(v),
         extra={"partition_spec": spec},
     )
 
@@ -2413,7 +2117,8 @@ def _land_spec_files(
     # declared table sort order (set_sort_order): every landing write
     # range-clusters + sorts, so new files arrive pre-prunable
     df = _apply_sort_order(log, df, base_version)
-    fs, Path = log._fs, log._Path
+    fs, _, jvm = _hadoop_fs(spark, table_root)
+    Path = jvm.org.apache.hadoop.fs.Path
     tmp = posixpath.join(
         table_root, f"_tmp_append-{uuid.uuid4().hex[:10]}"
     )
@@ -2694,7 +2399,7 @@ def shard_manifest(
     log.bootstrap()
     v = log.latest() if version is None else version
     snap = log.read(v)
-    n_files = snap.get("n_files") or len(snap.get("files") or [])
+    n_files = snap["n_files"]
     if shards is None:
         shards = max(2, -(-n_files // files_per_shard))
     shards = max(2, min(int(shards), 1024))
@@ -2986,17 +2691,13 @@ def scan_plan(
     — at 10⁶ files the driver holds the kept list (what it must hand
     to the reader anyway), never the bloom payloads.
 
-    `spark=None` plans through PureSnapshotLog with NO SparkSession —
-    the data-source planner-worker entry (sources/snapshot_table.py).
+    `spark=None` plans with NO SparkSession (`SnapshotLog(None, root)`)
+    — the data-source planner-worker entry (sources/snapshot_table.py).
     The distributed branch is then unavailable and every file count
     prunes in the local loop; with a shard index the loop still only
     touches the surviving shards, which is the same planning posture
     as Iceberg's (driver-side metadata, cost ∝ selectivity)."""
-    log = (
-        SnapshotLog(spark, table_root)
-        if spark is not None
-        else PureSnapshotLog(table_root)
-    )
+    log = SnapshotLog(spark, table_root)
     if isinstance(version, str):
         version = log.resolve_ref(version)
     v = log.latest() if version is None else version
@@ -3018,9 +2719,7 @@ def scan_plan(
     # prune through their own column name)
     norm.update(_spec_derived_predicates(log, v, norm))
     snap = log.read(v)
-    n_files = snap.get("n_files")
-    if n_files is None:
-        n_files = len(snap.get("files") or [])
+    n_files = snap["n_files"]
 
     # two-level metadata (shard_manifest): when the version carries a
     # shard index and the predicate touches the shard key, open ONLY
@@ -3028,7 +2727,7 @@ def scan_plan(
     # cost scales with selectivity, not table size
     shard_info = None
     sharding = snap.get("manifest_shards")
-    if sharding and sharding["by"] in norm and snap.get("manifest"):
+    if sharding and sharding["by"] in norm:
         s_lo, s_hi = norm[sharding["by"]]
         kept_parts = [
             part
@@ -3726,20 +3425,11 @@ def _parent_meta_cols(log: SnapshotLog, version: int) -> tuple[list, list]:
     import json as _json
     import os as _os
 
-    snap = log.read(version)
-    name = snap.get("manifest")
-    stat_cols: set = set()
-    bloom_cols: set = set()
-    if not name:  # legacy inline snapshot
-        for st in (snap.get("stats") or {}).values():
-            stat_cols.update((st.get("cols") or {}).keys())
-        for bl in (snap.get("blooms") or {}).values():
-            bloom_cols.update(bl.keys())
-        return sorted(stat_cols), sorted(bloom_cols)
-
     import pyarrow.parquet as pq
 
-    local = log._manifest_local(name)
+    stat_cols: set = set()
+    bloom_cols: set = set()
+    local = log._manifest_local(log.read(version)["manifest"])
     if _os.path.isdir(local):
         parts = sorted(
             _os.path.join(local, n)
@@ -3935,9 +3625,6 @@ def _snapshot_delete_mor(
     new_list = [[nm, cnt] for nm, cnt in log.delete_files(base_version)]
     new_list.append([name, n])
     manifest = log.copy_manifest(base_version)
-    if manifest is None:  # legacy inline snapshot: re-encode once
-        res = log._resolve(base_version)
-        manifest = log.write_manifest(res["files"], res["stats"], res["blooms"])
     try:
         v = log.commit(
             None,
@@ -3970,8 +3657,6 @@ def _write_delete_file(
     same publication discipline as manifests). Returns (name, n_rows);
     (None, 0) when the frame is empty — callers then commit an empty
     delete_files list instead of referencing a vacuous file."""
-    fs, Path = log._fs, log._Path
-    fs.mkdirs(Path(log.deletes_dir))
     tmp = posixpath.join(log.deletes_dir, f"_tmp-{uuid.uuid4().hex[:10]}")
     (
         entries.select(
@@ -3990,9 +3675,7 @@ def _write_delete_file(
         _rm(spark, tmp)
         return None, 0
     name = f"d-{uuid.uuid4().hex[:12]}"
-    if not fs.rename(Path(tmp), Path(log.deletes_dir, name)):
-        _rm(spark, tmp)
-        raise RuntimeError(f"could not publish delete file under {log.deletes_dir}")
+    os.rename(_uri_path(tmp), log._local(DELETES_SUBDIR, name))
     return name, n
 
 
@@ -4066,8 +3749,6 @@ def _write_eq_delete_dir(
     (keys/ parquet = the key rows, scope/ parquet = the in-scope data
     relpaths) under `_snapshots/deletes/` — tmp-write + rename, the
     manifests' publication discipline. Returns (name, n_keys)."""
-    fs, Path = log._fs, log._Path
-    fs.mkdirs(Path(log.deletes_dir))
     tmp = posixpath.join(log.deletes_dir, f"_tmp-{uuid.uuid4().hex[:10]}")
     keys_df.dropDuplicates().repartition(1).write.mode("overwrite").parquet(
         posixpath.join(tmp, "keys")
@@ -4082,11 +3763,7 @@ def _write_eq_delete_dir(
     )
     n = spark.read.parquet(posixpath.join(tmp, "keys")).count()
     name = f"{EQ_DELETE_PREFIX}{uuid.uuid4().hex[:12]}"
-    if not fs.rename(Path(tmp), Path(log.deletes_dir, name)):
-        _rm(spark, tmp)
-        raise RuntimeError(
-            f"could not publish equality-delete dir under {log.deletes_dir}"
-        )
+    os.rename(_uri_path(tmp), log._local(DELETES_SUBDIR, name))
     return name, n
 
 
@@ -4576,11 +4253,6 @@ def snapshot_delete_by_key(
         new_list = [[nm, cnt] for nm, cnt in log.delete_files(base_version)]
         new_list.append([name, n_keys])
         manifest = log.copy_manifest(base_version)
-        if manifest is None:  # legacy inline snapshot: re-encode once
-            res = log._resolve(base_version)
-            manifest = log.write_manifest(
-                res["files"], res["stats"], res["blooms"]
-            )
         try:
             v = log.commit(
                 None,
@@ -4830,9 +4502,6 @@ def snapshot_rollback(
         return {"version": latest, "rolled_back_to": to_version,
                 "noop": True}
     manifest = log.copy_manifest(to_version)
-    if manifest is None:  # legacy inline snapshot: re-encode once
-        res = log._resolve(to_version)
-        manifest = log.write_manifest(res["files"], res["stats"], res["blooms"])
     # Row-level changelog of the revert (r14): the rollback's diff is
     # read_changes(latest → target) by construction — the new version
     # shares the target's file set AND delete set — so materialize it
@@ -5133,11 +4802,7 @@ def _probe_candidates(
     executors and only candidate NAMES return."""
     import json as _json
 
-    snap = log.read(version)
-    n_files = snap.get("n_files")
-    if n_files is None:
-        n_files = len(snap.get("files") or [])
-    if n_files <= threshold:
+    if log.read(version)["n_files"] <= threshold:
         res = log._resolve(version)
         stats, blooms = res["stats"], res["blooms"]
         return {
@@ -5840,37 +5505,34 @@ def table_manifests_meta(
     if v is None:
         raise FileNotFoundError(f"no snapshots under {table_root}")
     snap = log.read(v)
-    name = snap.get("manifest")
+    name = snap["manifest"]
     rows: list[tuple] = []
     sharding = snap.get("manifest_shards") or {}
     parts_meta = sharding.get("parts") or {}
     by = sharding.get("by")
-    if name:
-        local = log._manifest_local(name)
-        import os as _os
-
-        if _os.path.isdir(local):
-            entries = [
-                (p, _os.path.getsize(_os.path.join(local, p)))
-                for p in sorted(_os.listdir(local))
-                if p.endswith(".parquet")
-            ]
-        else:
-            entries = [(posixpath.basename(local), _os.path.getsize(local))]
-        for part, size in entries:
-            meta = parts_meta.get(part)
-            rows.append(
-                (
-                    name,
-                    part,
-                    int(size),
-                    by,
-                    str(meta[0]) if meta and meta[0] is not None else None,
-                    str(meta[1]) if meta and meta[1] is not None else None,
-                    bool(meta[2]) if meta else None,
-                    int(meta[3]) if meta else None,
-                )
+    local = log._manifest_local(name)
+    if os.path.isdir(local):
+        entries = [
+            (p, os.path.getsize(os.path.join(local, p)))
+            for p in sorted(os.listdir(local))
+            if p.endswith(".parquet")
+        ]
+    else:
+        entries = [(posixpath.basename(local), os.path.getsize(local))]
+    for part, size in entries:
+        meta = parts_meta.get(part)
+        rows.append(
+            (
+                name,
+                part,
+                int(size),
+                by,
+                str(meta[0]) if meta and meta[0] is not None else None,
+                str(meta[1]) if meta and meta[1] is not None else None,
+                bool(meta[2]) if meta else None,
+                int(meta[3]) if meta else None,
             )
+        )
     return spark.createDataFrame(
         rows,
         "manifest string, part string, size_bytes long, shard_by string, "
@@ -6141,17 +5803,9 @@ def expire_snapshots(
         # manifest is reclaimable with it — as is its changelog
         # artifact (written by exactly one rewrite commit)
         snap_v = log.read(v)
-        manifest = snap_v.get("manifest")
-        if manifest:
-            fs.delete(Path(log.manifest_dir, manifest), True)
+        _remove_local(log._manifest_local(snap_v["manifest"]))
         changelog = snap_v.get("changelog")
         if changelog:
-            fs.delete(
-                Path(
-                    posixpath.join(log.log_dir, CHANGES_SUBDIR),
-                    changelog[0],
-                ),
-                True,
-            )
-        fs.delete(Path(log.log_dir, f"v{v:012d}.json"), False)
+            _remove_local(log._local(CHANGES_SUBDIR, changelog[0]))
+        os.remove(log._local(f"v{v:012d}.json"))
     return {"expired": len(drop_vs), "deleted_files": deleted}

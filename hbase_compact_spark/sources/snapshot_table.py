@@ -8,7 +8,7 @@ the Python helpers, can query a logged table with pruning intact.
 The streaming side became a real Spark source in r12
 (streaming/table_tail.py); this is the batch twin, built on the SAME
 planner — `partitions()` calls compaction/snapshots.py:scan_plan
-(spark=None → PureSnapshotLog), so everything the helper read path
+(spark=None → SnapshotLog(None, root)), so everything the helper read path
 has accrues to SQL for free: stats/bloom/transform-spec pruning,
 two-level sharded manifests (planning cost ∝ selectivity, the 24×
 r12 result), version/ref time travel, and merge-on-read delete
@@ -38,8 +38,8 @@ SQL entry point.
 The planner worker has no py4j gateway and no SparkSession, but CAN
 import this package (the driver's sys.path propagates; foreign-cwd
 drivers are covered by the package zip `read_table` ships) — so
-unlike the self-contained streaming tail, planning here reuses
-snapshots.py verbatim instead of mirroring it.
+planning here reuses snapshots.py verbatim through a session-less
+SnapshotLog(None, root), like the streaming tail.
 """
 
 from __future__ import annotations
@@ -134,7 +134,7 @@ def _resolve_version(options: dict) -> tuple[str, tuple | None]:
 
 def _selected_version(log, selector: tuple | None) -> int | None:
     """Resolve a (kind, value) selector to a concrete version number
-    using only PureSnapshotLog read accessors."""
+    using only SnapshotLog read accessors (no SparkSession needed)."""
     if selector is None:
         return None
     kind, v = selector
@@ -270,11 +270,11 @@ class SnapshotTableReader(DataSourceReader):
         in-process with the same code the worker runs."""
         from hbase_compact_spark.compaction.snapshots import (
             EQ_DELETE_PREFIX,
-            PureSnapshotLog,
+            SnapshotLog,
             scan_plan,
         )
 
-        log = PureSnapshotLog(self._root)
+        log = SnapshotLog(None, self._root)
         version = _selected_version(log, self._selector)
         plan = scan_plan(None, self._root, self._preds, version)
         v = plan["version"]
@@ -446,9 +446,9 @@ def table_schema(table_root: str, version=None):
     (kind, value) selector from _resolve_version."""
     from pyspark.sql.types import StringType, StructField, StructType
 
-    from hbase_compact_spark.compaction.snapshots import PureSnapshotLog
+    from hbase_compact_spark.compaction.snapshots import SnapshotLog
 
-    log = PureSnapshotLog(table_root)
+    log = SnapshotLog(None, table_root)
     if isinstance(version, tuple):
         version = _selected_version(log, version)
     elif isinstance(version, str):
@@ -691,7 +691,7 @@ class SnapshotTableWriter(DataSourceArrowWriter):
     under a per-job staging dir (`data-sql/w-<uuid>/`), computing
     min/max stats from the batches already in memory; the driver-side
     commit() — a Python worker with no py4j gateway — performs ONE
-    atomic snapshot-log commit through PureSnapshotLog: append =
+    atomic snapshot-log commit through SnapshotLog(None, root): append =
     parent manifest ∪ new files (stats/bloom payloads carried, MOR
     delete entries carried), overwrite = new files only (pending
     deletes dropped with the files they scoped). A concurrent commit
@@ -726,10 +726,10 @@ class SnapshotTableWriter(DataSourceArrowWriter):
         # path, so SQL ingest arrives path-prunable and
         # stats-clustered instead of waiting for a compaction to
         # migrate it. Resolved here (planning runs on the driver
-        # node, PureSnapshotLog needs only the filesystem) and
+        # node, SnapshotLog(None, root) needs only the filesystem) and
         # shipped to the tasks on self.
         from hbase_compact_spark.compaction.snapshots import (
-            PureSnapshotLog,
+            SnapshotLog,
             parse_partition_field,
             partition_spec_of,
             sort_order_of,
@@ -737,7 +737,7 @@ class SnapshotTableWriter(DataSourceArrowWriter):
 
         self._spec_fields = None
         self._sort_by = None
-        log = PureSnapshotLog(root)
+        log = SnapshotLog(None, root)
         v = log.latest()
         if v:
             spec = partition_spec_of(log, v)
@@ -804,11 +804,11 @@ class SnapshotTableWriter(DataSourceArrowWriter):
         import pyarrow as pa
 
         from hbase_compact_spark.compaction.snapshots import (
-            PureSnapshotLog,
             SnapshotConflictError,
+            SnapshotLog,
         )
 
-        log = PureSnapshotLog(self._root)
+        log = SnapshotLog(None, self._root)
         landed = [
             f for m in messages if m is not None for f in m.files
         ]
@@ -834,38 +834,47 @@ class SnapshotTableWriter(DataSourceArrowWriter):
         # carried, never dropped), and an overwrite is last-writer-
         # wins by definition. So concurrent SQL INSERTs serialize
         # instead of failing — the high-throughput ingest shape.
+        # parent 0 = derived from the empty table: claims exactly v1.
         try:
             for _ in range(10):
-                parent = log.latest()
+                parent = log.latest() or 0
+                # the parent's declared schema carries; else the
+                # INSERT's own, which keeps a ZERO-file commit
+                # readable as an empty table
+                schema = (
+                    log.read(parent).get("schema") if parent else None
+                ) or self._schema_blob
+                extra = None
+                if self._overwrite or not parent:
+                    tbl = added
+                    if not parent and not self._overwrite:
+                        # append against an UNLOGGED root: any
+                        # pre-existing parquet is live data the
+                        # bootstrap must carry (SnapshotLog.
+                        # bootstrap lists the whole tree) — only
+                        # an explicit OVERWRITE may drop it
+                        pre = self._preexisting(
+                            {rel for rel, _, _ in landed}
+                        )
+                        if pre:
+                            tbl = pa.concat_tables([pre, added])
+                    op = "overwrite" if parent else "bootstrap"
+                    # replaced files take their pending deletes along
+                    extra = {"delete_files": []}
+                else:
+                    tbl = pa.concat_tables(
+                        [log.manifest_table(parent), added]
+                    )
+                    op = "append"
                 try:
-                    if self._overwrite or not parent:
-                        boot = added
-                        if not parent and not self._overwrite:
-                            # append against an UNLOGGED root: any
-                            # pre-existing parquet is live data the
-                            # bootstrap must carry (SnapshotLog.
-                            # bootstrap lists the whole tree) — only
-                            # an explicit OVERWRITE may drop it
-                            pre = self._preexisting(
-                                {rel for rel, _, _ in landed}
-                            )
-                            if pre:
-                                boot = pa.concat_tables([pre, added])
-                        log.commit_manifest_table(
-                            boot,
-                            op="overwrite" if parent else "bootstrap",
-                            parent=parent,
-                            carry_delete_files=False,
-                            schema_blob=self._schema_blob,
-                        )
-                    else:
-                        log.commit_manifest_table(
-                            pa.concat_tables(
-                                [log.manifest_table(parent), added]
-                            ),
-                            op="append",
-                            parent=parent,
-                        )
+                    log.commit(
+                        None,
+                        op=op,
+                        parent=parent,
+                        schema=schema,
+                        manifest=log.write_manifest_table(tbl),
+                        extra=extra,
+                    )
                     return
                 except SnapshotConflictError:
                     continue

@@ -40,9 +40,9 @@ with a `read_changes` + `from_version` resume pointer.
 
 from __future__ import annotations
 
-import json
 import os
 import posixpath
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
@@ -72,12 +72,12 @@ FORMAT_NAME = "snapshot_tail"
 # read_changes pointer.
 _CDC_REFUSE = frozenset({"delete", "merge", "rollback"})
 
-# Python data-source PLANNER workers run outside the driver process
-# and do not see sys.path additions or addPyFile shipments, so this
-# module is deliberately SELF-CONTAINED (stdlib + pyarrow + pyspark
-# only) and `tail_stream` registers it for cloudpickle BY-VALUE
-# serialization. That also means the row-changing op set is mirrored
-# here rather than imported from compaction.snapshots — a parity test
+# Python STREAMING data-source planner workers run outside the driver
+# process and see neither sys.path additions nor addPyFile shipments,
+# so `tail_stream` registers this module for cloudpickle BY-VALUE
+# serialization and the planner imports the engine (for SnapshotLog)
+# only through `_snapshot_log`. The row-changing op set is mirrored
+# here rather than imported at module level — a parity test
 # (tests/test_table_tail.py) pins the two frozensets equal.
 _ROW_CHANGING_OPS = frozenset(
     {
@@ -92,6 +92,23 @@ _ROW_CHANGING_OPS = frozenset(
 )
 
 
+# The planner runs on the driver host, so the engine's import root,
+# evaluated here on the driver, is valid there; it travels inside the
+# by-value pickle with the functions that read it.
+_ENGINE_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
+
+def _snapshot_log(root: str):
+    """SnapshotLog(None, root) — importable in the planner worker."""
+    if _ENGINE_ROOT not in sys.path:
+        sys.path.append(_ENGINE_ROOT)
+    from hbase_compact_spark.compaction.snapshots import SnapshotLog
+
+    return SnapshotLog(None, root)
+
+
 def _local_path(root: str) -> str:
     """Strip a file: URI scheme down to a filesystem path (same
     local-path assumption as SnapshotLog._manifest_local; an
@@ -101,82 +118,6 @@ def _local_path(root: str) -> str:
     if root.startswith("file:"):
         return root[len("file:"):]
     return root
-
-
-class _TailLog:
-    """Pure-Python snapshot-log reader for the stream-planning side.
-
-    The DataSource planning hooks run in a Python worker without a
-    SparkSession, so this reads the same on-disk contract as
-    SnapshotLog (version JSONs + column-pruned manifest parquet) with
-    json/pyarrow only. Immutability of committed versions and
-    manifests makes the two readers trivially consistent."""
-
-    def __init__(self, table_root: str):
-        self.root = _local_path(table_root)
-        self.log_dir = posixpath.join(self.root, "_snapshots")
-        self.manifest_dir = posixpath.join(self.log_dir, "manifests")
-
-    def versions(self) -> list[int]:
-        try:
-            names = os.listdir(self.log_dir)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            int(n[1:-5])
-            for n in names
-            if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
-        )
-
-    def latest(self) -> int | None:
-        vs = self.versions()
-        return vs[-1] if vs else None
-
-    def read(self, version: int) -> dict:
-        with open(
-            posixpath.join(self.log_dir, f"v{version:012d}.json")
-        ) as f:
-            return json.load(f)
-
-    def delete_files(self, version: int) -> list[tuple[str, int]]:
-        """[(entry name, n)] of the snapshot's pending MOR delete
-        entries (the version JSON's delete_files list); [] for
-        version 0 / a version that does not exist (the cursor floor
-        before the first commit)."""
-        if version <= 0:
-            return []
-        try:
-            snap = self.read(version)
-        except FileNotFoundError:
-            return []
-        return [(e[0], int(e[1])) for e in snap.get("delete_files") or []]
-
-    def files(self, version: int) -> list[tuple[str, int]]:
-        """(relpath, size) of a snapshot — the same column-pruned
-        manifest read SnapshotLog.files performs (names+sizes only on
-        the planner at any file count), self-contained for the
-        data-source worker. A zero-row manifest may be a Spark-written
-        directory with no part files at all (empty-table bootstrap)."""
-        import pyarrow.parquet as pq
-
-        snap = self.read(version)
-        name = snap.get("manifest")
-        if not name:
-            return sorted(
-                (f[0], int(f[1])) for f in snap.get("files") or []
-            )
-        path = posixpath.join(self.manifest_dir, name)
-        if os.path.isdir(path) and not any(
-            n.endswith(".parquet") for n in os.listdir(path)
-        ):
-            return []
-        tbl = pq.read_table(path, columns=["relpath", "size"])
-        return sorted(
-            zip(
-                tbl.column("relpath").to_pylist(),
-                (int(x) for x in tbl.column("size").to_pylist()),
-            )
-        )
 
 
 class _TailFilePartition(InputPartition):
@@ -259,7 +200,8 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
         self._mode = options.get("mode", "append")
         if self._mode not in ("append", "cdc"):
             raise ValueError(f"snapshot_tail mode must be append|cdc, got {self._mode!r}")
-        self._log = _TailLog(self._root)
+        self._log = _snapshot_log(self._root)
+        self._local_log = posixpath.join(_local_path(self._root), "_snapshots")
 
     # ------------------------------------------------------- offsets
     def initialOffset(self) -> dict:
@@ -376,7 +318,7 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
         artifact — planning is a directory listing, reading a plain
         Arrow scan; per-version cost is O(changed rows) exactly like
         the artifact itself."""
-        base = posixpath.join(self._log.log_dir, "changes", name)
+        base = posixpath.join(self._local_log, "changes", name)
         out: list[InputPartition] = []
         for side, ctype in (("inserts", "insert"), ("deletes", "delete")):
             d = posixpath.join(base, side)
@@ -401,10 +343,11 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
         can mask rows that were logically dead already."""
         import pyarrow.parquet as pq
 
-        deletes_dir = posixpath.join(
-            self._log.log_dir, "deletes"
+        deletes_dir = posixpath.join(self._local_log, "deletes")
+        # the cursor floor (v0) has no pending entries
+        prev_names = (
+            {n for n, _ in self._log.delete_files(v - 1)} if v > 1 else set()
         )
-        prev_names = {n for n, _ in self._log.delete_files(v - 1)}
         new_names = [
             n
             for n, _ in self._log.delete_files(v)
@@ -683,8 +626,6 @@ def tail_stream(
     log-derived schema. The planner and reader workers deserialize
     this module by reference, so the package ships to them first
     (same contract as every Pandas-UDF operator)."""
-    import sys
-
     from pyspark import cloudpickle
 
     # planner workers cannot import this package (no sys.path /

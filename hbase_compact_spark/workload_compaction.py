@@ -2706,8 +2706,8 @@ def snapshot_sql_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # snapshot_sql_write — the SQL WRITE front door (VERDICT r13 task 1):
 # INSERT INTO / INSERT OVERWRITE through the snapshot_table
 # DataSource writer (sources/snapshot_table.py:SnapshotTableWriter),
-# each statement = ONE atomic snapshot commit performed by a JVM-free
-# Python worker (PureSnapshotLog.commit_manifest_table). Generalizes
+# each statement = ONE atomic snapshot commit performed by a Python
+# worker with no SparkSession (SnapshotLog(None, root).commit). Generalizes
 # the reference's write/commit semantics (QHBaseCompact.java:102-115
 # checkpoint persistence, :167 the compaction's atomic mutation) to
 # plain Spark SQL: a user who can type INSERT can mutate a logged

@@ -404,3 +404,115 @@ def test_merge_full_rebases_across_disjoint_append(
     assert rows[10] == 111 and rows[11] == 222
     assert rows[500] == 1000  # the appendee carried through the rebase
     assert got.count() == 41
+
+
+def test_stale_committer_conflicts_without_overwrite(spark, tmp_path):
+    """A committer whose view of latest() is stale (it has not seen the
+    winner's v(p+1) yet) must raise SnapshotConflictError when it
+    commits with parent=p — the claim is a link-if-absent, so the
+    winner's version JSON stays byte-identical and the loser's
+    manifest is removed."""
+    root = _tbl(spark, tmp_path)
+    log = SnapshotLog(spark, root)
+    p = log.latest()
+    winner = log.commit(log.files(p), op="append", parent=p)
+    vpath = os.path.join(root, "_snapshots", f"v{winner:012d}.json")
+    with open(vpath, "rb") as f:
+        before = f.read()
+    mdir = os.path.join(root, "_snapshots", "manifests")
+    manifests = set(os.listdir(mdir))
+
+    stale = SnapshotLog(spark, root)
+    visible = stale.versions
+    stale.versions = lambda: [v for v in visible() if v <= p]
+    assert stale.latest() == p
+    with pytest.raises(SnapshotConflictError):
+        stale.commit(stale.files(p), op="append", parent=p)
+    with open(vpath, "rb") as f:
+        assert f.read() == before
+    assert log.latest() == winner
+    assert set(os.listdir(mdir)) == manifests
+
+
+def test_driver_and_sql_writers_share_one_commit_protocol(spark, tmp_path):
+    """Two writers race on one table: the driver's commit_append and the
+    SQL data-source writer (a session-less SnapshotLog in a Python
+    worker, retrying on conflict). Both claim versions through the same
+    link-if-absent commit, so the final manifest holds every file either
+    writer added and no row is lost."""
+    import threading
+
+    from hbase_compact_spark.sources.snapshot_table import register
+
+    root = _tbl(spark, tmp_path)
+    register(spark)
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY VIEW race_w "
+        f"USING snapshot_table OPTIONS (path '{root}')"
+    )
+    v0 = len(SnapshotLog(spark, root).versions())
+    rounds = 4
+    driver_files: list[str] = []
+    errors: list = []
+
+    def driver_writer():
+        try:
+            for i in range(rounds):
+                tmp = os.path.join(root, f"_drv_tmp{i}")
+                spark.createDataFrame(
+                    [(1000 + i, 0)], "id long, v long"
+                ).coalesce(1).write.parquet(tmp)
+                (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
+                name = f"drv-{i}.parquet"
+                os.replace(part, os.path.join(root, name))
+                shutil.rmtree(tmp)
+                added = [(name, os.path.getsize(os.path.join(root, name)))]
+                log = SnapshotLog(spark, root)
+                for _ in range(20):
+                    try:
+                        log.commit_append(
+                            added, op="append", parent=log.latest()
+                        )
+                        break
+                    except SnapshotConflictError:
+                        continue
+                else:
+                    raise AssertionError("driver writer never committed")
+                driver_files.append(name)
+        except Exception as e:  # surfaced by the main thread
+            errors.append(e)
+
+    def sql_writer():
+        try:
+            for i in range(rounds):
+                spark.sql(
+                    f"INSERT INTO race_w SELECT CAST({2000 + i} AS BIGINT) "
+                    "AS id, CAST(0 AS BIGINT) AS v"
+                )
+        except Exception as e:
+            errors.append(e)
+
+    threads = [
+        threading.Thread(target=driver_writer),
+        threading.Thread(target=sql_writer),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+        assert not t.is_alive()
+    assert not errors, errors
+    log = SnapshotLog(spark, root)
+    final = {p for p, _ in log.files()}
+    sql_files = {
+        os.path.relpath(p, root)
+        for p in glob.glob(
+            os.path.join(root, "data-sql", "**", "*.parquet"), recursive=True
+        )
+    }
+    assert len(driver_files) == rounds and set(driver_files) <= final
+    assert sql_files and sql_files <= final
+    assert len(log.versions()) == v0 + 2 * rounds
+    got = read_table_at(spark, root)
+    assert got.count() == 40 + 2 * rounds
+    assert got.filter("id >= 1000").count() == 2 * rounds

@@ -412,8 +412,8 @@ def test_fuzz_session_window_boundaries(spark, events):
 # filter shapes — IN lists (short and past the IN_PRUNE_MAX cutoff),
 # null-safe equality, mixed AND/OR conjuncts, non-canonical literals
 # (double literals against a long column, negated ranges) — asserting
-# that the PRUNED scan through the Python DataSource (PureSnapshotLog
-# planning in the worker) equals the same WHERE over a full unpruned
+# that the PRUNED scan through the Python DataSource (session-less
+# SnapshotLog planning in the worker) equals the same WHERE over a full unpruned
 # scan of the same files. This is the silent-wrong-prune class the
 # r13 bucket-coercion pin caught by hand, made systematic.
 

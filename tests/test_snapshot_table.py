@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from hbase_compact_spark.compaction import snapshots as snap_mod
 from hbase_compact_spark.compaction.snapshots import (
-    PureSnapshotLog,
     SnapshotLog,
     annotate_stats,
     read_table_at,
@@ -126,8 +125,9 @@ def test_pure_scan_plan_parity(spark, table):
     root, log = table
     for preds in ({"k": (100, 450)}, {"k": 137}, {"g": (8, 9)}):
         assert scan_plan(None, root, preds) == scan_plan(spark, root, preds)
-    # PureSnapshotLog mirrors SnapshotLog's read accessors
-    pure = PureSnapshotLog(root)
+    # the session-less log (the planner worker's) reads what the
+    # driver's does
+    pure = SnapshotLog(None, root)
     assert pure.versions() == log.versions()
     assert pure.files() == log.files()
     assert pure.delete_files() == log.delete_files()
@@ -198,6 +198,10 @@ def test_timestamp_as_of(spark, table, tmp_path):
     from hbase_compact_spark.compaction.snapshots import version_as_of
 
     root, log = table
+    # version JSONs and refs are plain files: no checksum sidecar
+    # that an in-place rewrite could leave stale
+    for d in ("_snapshots", "_snapshots/refs"):
+        assert not [n for n in os.listdir(f"{root}/{d}") if n.endswith(".crc")]
     for i, v in enumerate(log.versions()):
         p = f"{root}/_snapshots/v{v:012d}.json"
         with open(p) as f:
@@ -205,11 +209,6 @@ def test_timestamp_as_of(spark, table, tmp_path):
         snap["committed_at"] = 1_000_000 + i * 100
         with open(p, "w") as f:
             json.dump(snap, f)
-        # the JVM side reads through Hadoop's checksummed local FS —
-        # drop the stale .crc sidecar of the rewritten JSON
-        crc = f"{root}/_snapshots/.v{v:012d}.json.crc"
-        if os.path.exists(crc):
-            os.remove(crc)
     vs = log.versions()
     assert version_as_of(log, 1_000_000) == vs[0]      # exact boundary
     assert version_as_of(log, 1_000_199) == vs[1]      # between commits
@@ -270,7 +269,7 @@ def test_hive_layout_path_values(spark, tmp_path):
 # ----------------------------------------------------------- writes
 # SQL INSERT INTO / INSERT OVERWRITE through SnapshotTableWriter
 # (r14): one atomic snapshot commit per statement, performed by a
-# JVM-free worker via PureSnapshotLog.commit_manifest_table.
+# JVM-free worker via SnapshotLog(None, root).commit.
 
 
 def _mkview(spark, root, name="snap_w", **opts):
@@ -396,15 +395,17 @@ def test_pure_commit_conflict_raises(spark, table):
     )
 
     root, log = table
-    pure = PureSnapshotLog(root)
+    pure = SnapshotLog(None, root)
     parent = pure.latest()
-    tbl = pure.manifest_table(parent)
+    name = pure.write_manifest_table(pure.manifest_table(parent))
     # competing commit claims parent+1 first
     log.commit_current(op="append", parent=parent)
     with pytest.raises(SnapshotConflictError):
-        pure.commit_manifest_table(tbl, op="append", parent=parent)
-    # the loser left nothing behind: no half-claimed version JSON
+        pure.commit(None, op="append", parent=parent, manifest=name)
+    # the loser left nothing behind: no half-claimed version JSON and
+    # no orphan manifest
     assert pure.latest() == parent + 1
+    assert not os.path.exists(pure._manifest_local(name))
 
 
 def test_writer_abort_cleans_staging(spark, table):

@@ -730,9 +730,13 @@ def test_path_pruning_exact_on_large_int_partition_values(spark, tmp_path):
 
 def test_branch_move_is_atomic_overwrite(spark, tmp_path):
     """A branch retarget must never pass through a state where the
-    pointer file is absent — set_ref publishes via an overwriting
-    rename, not delete-then-rename (ADVICE r9). Pin the primitive:
-    _rename_overwrite lands new content over an existing target."""
+    pointer file is absent — set_ref publishes a move as one overwriting
+    rename, not delete-then-rename (ADVICE r9). A reader polling the
+    pointer file on disk while the branch moves back and forth must
+    always find a complete pointer naming one of the two targets."""
+    import json
+    import threading
+
     from hbase_compact_spark.compaction.snapshots import append_partitioned
 
     root = str(tmp_path / "t")
@@ -740,17 +744,43 @@ def test_branch_move_is_atomic_overwrite(spark, tmp_path):
     append_partitioned(spark, root, spark.range(4, 6).selectExpr("id"))
     log = SnapshotLog(spark, root)
     log.set_ref("main", 1, kind="branch")
-    log.set_ref("probe", 1, kind="branch")
-    dest = log._Path(log.refs_dir, "probe.json")
-    src = log._Path(log.refs_dir, "_probe_src.json")
-    with open(os.path.join(str(tmp_path), "probe"), "w") as f:
-        f.write('{"probe": true}')
-    log._fs.copyFromLocalFile(
-        log._Path(os.path.join(str(tmp_path), "probe")), src
-    )
-    assert log._fs.exists(dest)
-    assert log._rename_overwrite(src, dest)  # dest EXISTS: must win
-    assert log._fs.exists(dest) and not log._fs.exists(src)
-    # and the high-level move still resolves end-to-end
+    pointer = os.path.join(root, "_snapshots", "refs", "main.json")
+    seen: set = set()
+    errors: list = []
+    stop = threading.Event()
+
+    def poll():
+        while not stop.is_set():
+            try:
+                with open(pointer) as f:
+                    seen.add(json.load(f)["version"])
+            except (OSError, ValueError) as e:  # absent or torn pointer
+                errors.append(repr(e))
+                return
+
+    reader = threading.Thread(target=poll)
+    reader.start()
+    try:
+        for i in range(200):
+            log.set_ref("main", 2 - i % 2, kind="branch")
+    finally:
+        stop.set()
+        reader.join(timeout=60)
+    assert not reader.is_alive()
+    assert not errors, errors[:3]
+    assert seen <= {1, 2}
+    # the high-level move resolves end-to-end (last move: i=199 -> v1)
+    assert log.resolve_ref("main") == 1
     log.set_ref("main", 2, kind="branch")
     assert log.resolve_ref("main") == 2
+
+
+def test_snapshot_log_rejects_remote_schemes(tmp_path):
+    """Manifests and delete entries are read as local paths, so a
+    remote-scheme root fails at construction instead of being silently
+    misread (the CompactionCheckpoint rule). No SparkSession needed."""
+    for root in ("s3a://b/t", "hdfs://nn:8020/t", "gs://b/t"):
+        with pytest.raises(ValueError, match="local-filesystem"):
+            SnapshotLog(None, root)
+    # file: URIs resolve to their local path
+    assert SnapshotLog(None, f"file://{tmp_path}").versions() == []
