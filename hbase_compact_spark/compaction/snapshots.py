@@ -924,14 +924,63 @@ class SnapshotLog:
 
     def schema(self, version: int | None = None):
         """(StructType, partition_cols) recorded on the given
-        (default: latest) snapshot, or (None, []) if the table has
-        never evolved — readers then fall back to parquet inference."""
+        (default: latest) snapshot. Every non-empty version commit()
+        writes records one, so (None, []) means a version committed
+        before versions recorded their schema (or one listing no
+        readable file) — readers then fall back to parquet inference."""
         from pyspark.sql.types import StructType
 
         blob = self.read(self._v(version)).get("schema")
         if not blob:
             return None, []
         return StructType.fromJson(blob["fields"]), list(blob["partition_cols"])
+
+    def schema_blob(self, version: int) -> dict | None:
+        """The version's recorded schema blob, else (a version
+        committed before versions recorded one) the blob Spark infers
+        for its files."""
+        blob = self.read(version).get("schema") or self._infer_schema(
+            [p for p, _ in self.files(version)]
+        )
+        if blob is None:
+            raise FileNotFoundError(
+                f"v{version} under {self.table_root} records no schema "
+                "and lists no readable file"
+            )
+        return blob
+
+    def _infer_schema(self, relpaths: list[str]) -> dict | None:
+        """Schema blob for a file list whose writer declared none: the
+        schema Spark infers reading it (the schemaless read path's
+        result). Hive-style `k=v` directory components are the
+        partition columns, recorded as strings — the type the
+        snapshot_table source and the table tail give path values;
+        `_hp_` spec dirs are layout, their values are data columns
+        inside the files. None when Spark cannot read the files
+        (synthetic entries, unsupported physical types)."""
+        from pyspark.errors import AnalysisException
+        from pyspark.sql.types import StringType, StructField, StructType
+
+        if not relpaths:
+            return None
+        pcols: list[str] = []
+        for relpath in relpaths:
+            for comp in posixpath.dirname(relpath).split("/"):
+                if "=" in comp and not comp.startswith(PARTITION_DIR_PREFIX):
+                    name = comp.split("=", 1)[0]
+                    if name not in pcols:
+                        pcols.append(name)
+        try:
+            inferred = _read_relpaths(
+                self.spark, self.table_root, relpaths, None
+            ).schema
+        except AnalysisException:
+            return None
+        fields = [
+            StructField(f.name, StringType(), True) if f.name in pcols else f
+            for f in inferred.fields
+        ]
+        return {"fields": StructType(fields).jsonValue(), "partition_cols": pcols}
 
     def stats(self, version: int | None = None) -> dict[str, dict]:
         """Per-file column stats of the given (default: latest)
@@ -971,7 +1020,13 @@ class SnapshotLog:
         manifest elsewhere (an executor DataFrame write in
         MANIFEST_SCHEMA_DDL shape, or write_manifest_table) pass its
         name via `manifest` with files=None. On a lost race the
-        manifest is removed: it belongs to no committed version."""
+        manifest is removed: it belongs to no committed version.
+
+        The table schema is table state too: callers carry the
+        parent's. When neither the caller nor the parent has one and
+        the version lists files, the schema Spark infers for them is
+        recorded here, so every later version carries a declared
+        schema and no read plans a footer-inference job."""
         os.makedirs(self._local_log, exist_ok=True)
         if manifest is None:
             if files is None:
@@ -981,6 +1036,16 @@ class SnapshotLog:
             total_bytes = sum(int(s) for _, s in files)
         else:
             n_files, total_bytes = self.manifest_summary(manifest)
+        pv = parent if parent is not None else self.latest()
+        pv_meta = self.read(pv) if pv else {}
+        if (
+            schema is None
+            and n_files
+            and self.spark is not None
+            and not pv_meta.get("schema")
+        ):
+            listed = _load_manifest_files(self._manifest_local(manifest))
+            schema = self._infer_schema([p for p, _ in listed])
         payload = {
             "op": op,
             "parent": parent or None,
@@ -1003,8 +1068,7 @@ class SnapshotLog:
             # `extra`, possibly []) carries the parent's list forward —
             # otherwise an ordinary append would silently resurrect
             # logically-deleted rows.
-            pv = parent if parent is not None else self.latest()
-            carried = self.read(pv).get("delete_files") if pv else None
+            carried = pv_meta.get("delete_files")
             if carried:
                 payload["delete_files"] = carried
 
@@ -1068,11 +1132,12 @@ class SnapshotLog:
         )
         if parent is None:
             parent = self.latest()
-        # a declared (evolved) schema survives appends — without the
-        # carry, readers of the new version would fall back to parquet
-        # inference, which picks an arbitrary file's physical schema
-        # when generations differ (the pre-evolution files still hold
-        # dropped columns)
+        # the table schema survives appends: carried from the parent,
+        # or, onto a parent that records none, commit() records the
+        # one Spark infers for this listing. Parquet inference on read
+        # would pick an arbitrary file's physical schema when
+        # generations differ (pre-evolution files still hold dropped
+        # columns, files appended outside evolve_schema add some)
         schema = self.read(parent).get("schema") if parent else None
         return self.commit(
             None, op=op, parent=parent, schema=schema, manifest=name
@@ -1127,11 +1192,14 @@ def read_table_at(
     tag or branch) or, via `as_of_ts`, as of a wall-clock instant
     (the latest snapshot committed at or before it — TIMESTAMP AS
     OF). Mid-compaction states are unobservable
-    by construction — uncommitted files are simply not listed. If the
-    snapshot carries an evolved schema, it is applied declaratively:
-    files written before an added column project it as NULL, files
-    still holding a dropped column lose it — per-version schema, the
-    Iceberg contract."""
+    by construction — uncommitted files are simply not listed. The
+    snapshot's recorded schema is applied declaratively, so planning
+    runs no footer-inference job: files written before an added column
+    project it as NULL, files still holding a dropped column lose it,
+    and a column an append added outside `evolve_schema` stays hidden
+    — per-version schema, the Iceberg contract. Only a version
+    committed before versions recorded their schema reads through
+    parquet inference."""
     log = SnapshotLog(spark, table_root)
     if as_of_ts is not None:
         if version is not None:
@@ -1300,7 +1368,9 @@ def _apply_eq_deletes(
         taken = set(df.columns)
         km = _uniq("__eq_k", taken)
         sm = _uniq("__eq_s", taken)
-        keys = spark.read.parquet(keys_path)
+        declared = _eq_keys_schema(keys_path, df)
+        reader = spark.read if declared is None else spark.read.schema(declared)
+        keys = reader.parquet(keys_path)
         key_cols = list(keys.columns)
         keys = keys.withColumn(km, F.lit(True))
         if n_keys <= MOR_BROADCAST_ROWS:
@@ -1320,6 +1390,32 @@ def _apply_eq_deletes(
             .drop(km, sm)
         )
     return df
+
+
+def _eq_keys_schema(keys_path: str, df: DataFrame):
+    """Declared read schema of an equality-delete keys dir: the key
+    columns named by its own footer (read driver-side), typed as in
+    `df`, which they match on — so the read plans no footer-inference
+    job. None (infer) when the dir is not local or a key column's
+    physical type is not `df`'s."""
+    import pyarrow.dataset as pads
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import StructType
+
+    local = _local_meta_path(keys_path)
+    if local is None:
+        return None
+    row = {f.name: f for f in df.schema.fields}
+    fields = []
+    for f in pads.dataset(local, format="parquet").schema:
+        try:
+            physical = from_arrow_type(f.type)
+        except TypeError:
+            return None
+        if f.name not in row or physical != row[f.name].dataType:
+            return None
+        fields.append(row[f.name])
+    return StructType(fields)
 
 
 def _apply_mor(
@@ -1506,7 +1602,7 @@ def _read_relpaths(
             if "=" in comp and not comp.startswith(PARTITION_DIR_PREFIX)
         )
         groups.setdefault(keys, []).append(p)
-    frames = []
+    group_frames = {}
     for keys in sorted(groups, key=sorted):
         paths = [posixpath.join(table_root, p) for p in groups[keys]]
         reader = spark.read
@@ -1516,7 +1612,8 @@ def _read_relpaths(
             reader = reader.option("basePath", table_root)
         if schema is not None:
             reader = reader.schema(schema)
-        frames.append(reader.parquet(*paths))
+        group_frames[keys] = reader.parquet(*paths)
+    frames = list(group_frames.values())
     rel = pos = None
     if mor is not None or with_positions:
         # merge-on-read: tag every row with its (file relpath, row
@@ -1535,15 +1632,13 @@ def _read_relpaths(
             # profile measured the per-row URI mapping at 6-8 s per
             # 2M-row file; a literal costs nothing after constant
             # folding). row_index off _metadata stays — it is cheap.
-            # Schema-less (legacy/bootstrap) tables reuse the GROUP
+            # Versions committed without a schema reuse the GROUP
             # read's already-resolved schema: re-inferring per FILE
             # cost one footer job per file at plan time (r16 —
             # measured 6 jobs -> 2 building the ANN corpus MOR read).
             lit_frames = []
-            for g_idx, keys in enumerate(sorted(groups, key=sorted)):
-                g_schema = (
-                    schema if schema is not None else frames[g_idx].schema
-                )
+            for keys, g_frame in group_frames.items():
+                g_schema = schema if schema is not None else g_frame.schema
                 for p in groups[keys]:
                     reader = spark.read
                     if keys:
@@ -1767,23 +1862,6 @@ def read_changes(
     return inserts.unionByName(deletes)
 
 
-def _capture_schema(spark: SparkSession, log: SnapshotLog, version: int) -> dict:
-    """Snapshot-schema blob for a table that never evolved: inferred
-    from the version's files, partition columns detected from the
-    hive-style `k=v` directory components of the file list."""
-    pcols: list[str] = []
-    for relpath, _ in log.files(version):
-        for comp in posixpath.dirname(relpath).split("/"):
-            # _hp_ spec dirs are layout, not hive partition columns:
-            # their values are data columns inside the files
-            if "=" in comp and not comp.startswith(PARTITION_DIR_PREFIX):
-                name = comp.split("=", 1)[0]
-                if name not in pcols:
-                    pcols.append(name)
-    df = read_table_at(spark, log.table_root, version)
-    return {"fields": df.schema.jsonValue(), "partition_cols": pcols}
-
-
 def evolve_schema(
     spark: SparkSession,
     table_root: str,
@@ -1802,7 +1880,7 @@ def evolve_schema(
     log = SnapshotLog(spark, table_root)
     log.bootstrap()
     v = log.latest()
-    blob = log.read(v).get("schema") or _capture_schema(spark, log, v)
+    blob = log.schema_blob(v)
     schema = StructType.fromJson(blob["fields"])
     pcols = list(blob["partition_cols"])
     names = {f.name for f in schema.fields}
@@ -1916,7 +1994,7 @@ def set_sort_order(
     if len(set(sort_by)) != len(sort_by):
         raise ValueError(f"duplicate column in sort order: {sort_by}")
     if sort_by:
-        blob = log.read(v).get("schema") or _capture_schema(spark, log, v)
+        blob = log.schema_blob(v)
         from pyspark.sql.types import StructType
 
         names = {f.name for f in StructType.fromJson(blob["fields"]).fields}
@@ -2004,7 +2082,7 @@ def evolve_partitioning(
     fields = [parse_partition_field(r) for r in partition_by]
     if len({f.name for f in fields}) != len(fields):
         raise ValueError(f"duplicate field in partition spec: {partition_by}")
-    blob = log.read(v).get("schema") or _capture_schema(spark, log, v)
+    blob = log.schema_blob(v)
     legacy_pcols = set(blob["partition_cols"])
     if legacy_pcols:
         raise ValueError(
@@ -2935,7 +3013,10 @@ def _rebase_keep_or_raise(
        the two rewrites overlap, so rebasing would either resurrect
        rows the winner deleted or drop rows it added;
     2. changed the declared schema — the loser's new files physically
-       materialized the old shape;
+       materialized the old shape. Recording a schema onto a base
+       committed without one is not a change (the first commit onto a
+       log written before versions recorded their schema does that)
+       unless an `evolve` commit landed in between;
     3. added MOR delete entries touching a replaced file — the
        rewrite read effective rows AT old_base, so rows logically
        deleted in between would silently resurrect inside its output.
@@ -2955,7 +3036,16 @@ def _rebase_keep_or_raise(
             "overlapping rewrites cannot rebase; re-derive from the "
             "new latest snapshot"
         )
-    if log.read(new_latest).get("schema") != log.read(old_base).get("schema"):
+    old_schema = log.read(old_base).get("schema")
+    if old_schema is None:
+        evolved = any(
+            log.read(v).get("op") == "evolve"
+            for v in log.versions()
+            if old_base < v <= new_latest
+        )
+    else:
+        evolved = log.read(new_latest).get("schema") != old_schema
+    if evolved:
         raise SnapshotConflictError(
             "concurrent schema evolution landed mid-rewrite — the "
             "rewritten files materialized the old schema; re-derive"
@@ -3144,6 +3234,8 @@ def _commit_rewrite(
             cur_keep = _rebase_keep_or_raise(
                 spark, log, cur, new_latest, replaced
             )
+            # a schemaless base rebased onto a recorded schema: carry it
+            schema = schema or log.read(new_latest).get("schema")
             if validate_rebase is not None:
                 appended = {p for p, _ in log.files(new_latest)} - {
                     p for p, _ in log.files(cur)

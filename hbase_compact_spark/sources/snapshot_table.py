@@ -439,10 +439,10 @@ class SnapshotTableReader(DataSourceReader):
 
 def table_schema(table_root: str, version=None):
     """The table's row schema from snapshot metadata alone (planner-
-    worker safe): the declared (evolved) schema when recorded, else
-    Arrow inference over the snapshot's first file plus legacy hive
-    path columns as strings — the pure twin of the helper readers'
-    fallback ladder. `version` may be an int, a ref name, or a
+    worker safe): the recorded schema, else (a version committed
+    before versions recorded their schema) Arrow inference over the
+    snapshot's first file plus legacy hive path columns as strings —
+    the pure twin of the helper readers' fallback ladder. `version` may be an int, a ref name, or a
     (kind, value) selector from _resolve_version."""
     from pyspark.sql.types import StringType, StructField, StructType
 

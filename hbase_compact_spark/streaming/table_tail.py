@@ -75,38 +75,28 @@ _CDC_REFUSE = frozenset({"delete", "merge", "rollback"})
 # Python STREAMING data-source planner workers run outside the driver
 # process and see neither sys.path additions nor addPyFile shipments,
 # so `tail_stream` registers this module for cloudpickle BY-VALUE
-# serialization and the planner imports the engine (for SnapshotLog)
-# only through `_snapshot_log`. The row-changing op set is mirrored
-# here rather than imported at module level — a parity test
-# (tests/test_table_tail.py) pins the two frozensets equal.
-_ROW_CHANGING_OPS = frozenset(
-    {
-        "compact",
-        "delete",
-        "merge",
-        "mor_delete",
-        "mor_delete_eq",
-        "mor_upsert",
-        "rollback",
-    }
-)
-
-
-# The planner runs on the driver host, so the engine's import root,
-# evaluated here on the driver, is valid there; it travels inside the
-# by-value pickle with the functions that read it.
+# serialization and the planner imports the engine only through
+# `_snapshots`. The planner runs on the driver host, so the engine's
+# import root, evaluated here on the driver, is valid there; it
+# travels inside the by-value pickle with the functions that read it.
 _ENGINE_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
 
-def _snapshot_log(root: str):
-    """SnapshotLog(None, root) — importable in the planner worker."""
+def _snapshots():
+    """The engine's snapshot-log module — importable in the planner
+    worker."""
     if _ENGINE_ROOT not in sys.path:
         sys.path.append(_ENGINE_ROOT)
-    from hbase_compact_spark.compaction.snapshots import SnapshotLog
+    from hbase_compact_spark.compaction import snapshots
 
-    return SnapshotLog(None, root)
+    return snapshots
+
+
+def _snapshot_log(root: str):
+    """SnapshotLog(None, root) — importable in the planner worker."""
+    return _snapshots().SnapshotLog(None, root)
 
 
 def _local_path(root: str) -> str:
@@ -220,7 +210,9 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
         end = start
         served = 0
         refuse = (
-            _CDC_REFUSE if self._mode == "cdc" else _ROW_CHANGING_OPS
+            _CDC_REFUSE
+            if self._mode == "cdc"
+            else _snapshots().ROW_CHANGING_OPS
         )
         for v in range(start + 1, latest + 1):
             snap = self._log.read(v)

@@ -9,6 +9,7 @@ view registration live in one place.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -67,24 +68,32 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+# serializes load_events' session-wide flag set/read/restore: two
+# interleaved callers would restore each other's "true" and leave it
+# on for the whole session
+_NANOS_FLAG_LOCK = threading.Lock()
+
+
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`events.ts` has been written as TIMESTAMP(NANOS) and as plain
     timestamp[us] (NTZ under Spark 4) by different fixture generations;
     normalize_ts handles both. nanosAsLong stays on so the NANOS
     variant loads at all instead of throwing."""
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        # schema inference (where the flag matters) happens eagerly in
-        # this call; restoring afterwards keeps the session-wide
-        # default intact so UNRELATED parquet reads of TIMESTAMP(NANOS)
-        # columns don't silently load them as LongType forever after
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+    with _NANOS_FLAG_LOCK:
+        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        try:
+            # schema inference (where the flag matters) happens eagerly
+            # in this call; restoring afterwards keeps the session-wide
+            # default intact so UNRELATED parquet reads of
+            # TIMESTAMP(NANOS) columns don't silently load them as
+            # LongType forever after
+            df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        finally:
+            if prev is None:
+                spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+            else:
+                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     return normalize_ts(df)
 
 

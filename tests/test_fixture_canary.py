@@ -115,3 +115,66 @@ def test_normalize_ts_all_branches(spark):
         out = normalize_ts(src)
         assert out.schema["ts"].dataType.simpleString() == "timestamp"
         assert out.select(F.col("ts")).first()["ts"] == want
+
+
+def test_concurrent_load_events_never_leaks_nanos_flag(spark, tmp_path):
+    """load_events scopes nanosAsLong to its own read. Concurrent
+    callers (the conftest prebuild threads) must each load the NANOS
+    encoding and leave the session flag as they found it — an
+    interleaved set/restore once left it on, so an UNRELATED read of a
+    TIMESTAMP(NANOS) column silently loaded it as LongType."""
+    import os
+    import sys
+    import threading
+
+    import pyarrow as pa
+    from pyspark import inheritable_thread_target
+    from pyspark.errors import AnalysisException
+
+    from hbase_compact_spark.tables import load_events
+
+    flag = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(flag)
+    nanos = pa.table(
+        {
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array([10**18, 2 * 10**18], pa.timestamp("ns")),
+        }
+    )
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(nanos, str(sf / "events.parquet"))
+    unrelated = str(tmp_path / "unrelated.parquet")
+    pq.write_table(nanos, unrelated)
+
+    errors: list[BaseException] = []
+
+    def worker():
+        for _ in range(12):
+            try:
+                df = load_events(spark, str(sf))
+                assert df.schema["ts"].dataType.simpleString() == "timestamp"
+            except BaseException as exc:  # surfaced below
+                errors.append(exc)
+
+    threads = [
+        threading.Thread(target=inheritable_thread_target(worker))
+        for _ in range(2 * (os.cpu_count() or 2))
+    ]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert spark.conf.get(flag) == before
+    try:
+        dtype = spark.read.parquet(unrelated).schema["ts"].dataType
+    except AnalysisException:
+        dtype = None  # the default: NANOS is not readable at all
+    assert dtype is None or dtype.simpleString() != "bigint"

@@ -60,14 +60,6 @@ def _run_tail(spark, root, ckpt, out_dir, **kw):
     return len(after - before)
 
 
-def test_row_changing_ops_mirror_in_lockstep():
-    """table_tail is self-contained for the data-source worker, so it
-    mirrors ROW_CHANGING_OPS instead of importing it — the two sets
-    must never diverge or the tail would cross (or spuriously refuse)
-    an op class."""
-    assert T._ROW_CHANGING_OPS == S.ROW_CHANGING_OPS
-
-
 def test_planning_is_per_version_file_delta(spark, tmp_path):
     """partitions(start, end) plans EXACTLY the files appended in the
     range, attributed to the version that added them — O(delta)
