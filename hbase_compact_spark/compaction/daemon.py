@@ -20,7 +20,9 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field, replace
+from decimal import ROUND_HALF_UP, Decimal
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,7 +30,9 @@ from hbase_compact_spark.compaction.checkpoint import CompactionCheckpoint
 from hbase_compact_spark.compaction.executor import (
     CompactionReport,
     _in_time_window,
+    _walk_table,
     compact_table,
+    partition_summary,
 )
 
 
@@ -98,22 +102,52 @@ class DaemonRun:
 def stats_report(spark: SparkSession, table_root: str) -> DataFrame:
     """The getTableDetails analog (QHBaseCompact.java:219-270): per
     (partition) file count + size with a grand-total rollup, GB
-    conversion included (:250-252,255). The per-file rows aggregate
-    ON EXECUTORS (executor.partition_summary) — the driver never holds
-    a per-file structure, so the report costs the same at 10⁶ files
-    as at 10."""
-    from hbase_compact_spark.compaction.executor import partition_summary
-
-    df = partition_summary(spark, table_root)
-    return (
-        df.rollup("partition")
-        .agg(
-            F.sum("filenum").alias("filenum"),
-            F.sum("total_bytes").alias("total_bytes"),
+    conversion included (:250-252,255). Under the walk's cap on a
+    local root the rollup is computed on the driver from one
+    `_walk_table` and returned as an Arrow-backed DataFrame, which
+    launches no Spark job, not even on collect. Past the cap or on a
+    remote root the per-file rows aggregate ON EXECUTORS
+    (executor.partition_summary): the driver never holds a per-file
+    structure, so the report costs the same at 10⁶ files as at 10."""
+    walk = _walk_table(table_root)
+    if walk is None:
+        return (
+            partition_summary(spark, table_root)
+            .rollup("partition")
+            .agg(
+                F.sum("filenum").alias("filenum"),
+                F.sum("total_bytes").alias("total_bytes"),
+            )
+            .withColumn("partition", F.coalesce("partition", F.lit("ALL")))
+            .withColumn(
+                "total_gb", F.round(F.col("total_bytes") / (1024.0**3), 6)
+            )
         )
-        .withColumn("partition", F.coalesce("partition", F.lit("ALL")))
-        .withColumn(
-            "total_gb", F.round(F.col("total_bytes") / (1024.0**3), 6)
+    rows = [
+        (rel, len(files), sum(size for _, size in files))
+        for rel, (files, _pure) in sorted(walk.items())
+    ]
+    if rows:
+        rows.append(
+            ("ALL", sum(r[1] for r in rows), sum(r[2] for r in rows))
+        )
+
+    def gb(n: int) -> float:
+        # Spark's round(x, 6): HALF_UP on the double's shortest decimal
+        return float(
+            Decimal(repr(n / 1024.0**3)).quantize(
+                Decimal("1e-6"), ROUND_HALF_UP
+            )
+        )
+
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "partition": pa.array([r[0] for r in rows], pa.string()),
+                "filenum": pa.array([r[1] for r in rows], pa.int64()),
+                "total_bytes": pa.array([r[2] for r in rows], pa.int64()),
+                "total_gb": pa.array([gb(r[2]) for r in rows], pa.float64()),
+            }
         )
     )
 

@@ -27,6 +27,16 @@ one-region-at-a-time design goal (README.md:8-9) — raise
 headroom allows. File moves go through the Hadoop FileSystem API, so
 the same code path works on file://, hdfs:// and s3a://.
 
+Listing: on a local root, one bounded driver-side walk (_walk_table,
+os.scandir) lists the table for a whole pass — the per-partition
+summary, every file list, every purity flag, the batched rewrite's
+re-list — the way the reference lists each store with one client-side
+`listStatus` (QHC.java:144-161). It launches no Spark job, so an idle
+pass and the stats report cost no job at all. Past the walk's cap, or
+on an hdfs:// / s3a:// root, the listing is distributed instead: a
+parallel `binaryFile` listing aggregated ON EXECUTORS, plus one
+`listStatus` per partition about to be rewritten.
+
 Crash durability of the swap: before the first rename, the executor
 writes a per-partition SWAP MANIFEST (hidden `_swap_manifest.json`
 in the partition dir) listing every planned move and every old file
@@ -46,14 +56,18 @@ import json
 import math
 import os
 import posixpath
+import re
 import time
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime
 from urllib.parse import urlparse
 
+import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from hbase_compact_spark.compaction.checkpoint import CompactionCheckpoint
 
@@ -63,6 +77,18 @@ SWAP_MANIFEST_NAME = "_swap_manifest.json"
 # amortizes, and one big rel would straggle the batch's
 # one-file-per-rel write stage)
 _BATCH_MAX_PARTITION_BYTES = 16 * 1024 * 1024
+# Past this many directory entries _walk_table gives up and callers
+# take the distributed listing. Measured on a 4-core host: the walk
+# costs 4-7 us and ~180 B of driver memory per entry (50 500 entries:
+# 0.21-0.36 s, 8.9 MB), while the distributed listing plus summary
+# costs 0.75 s at 252 files and 3.8 s at 50 000. At the cap the walk
+# spends about 1 s and 35 MB, near the distributed listing's fixed
+# cost; the cap bounds the driver's time and memory, and past it the
+# listing scales out instead.
+_WALK_MAX_ENTRIES = 200_000
+# a URI scheme plus optional authority ("file:", "hdfs://nn:8020"); the
+# same pattern serves Python's re and Spark's Java regexes
+_SCHEME_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//[^/]*)?"
 
 
 @dataclass
@@ -130,38 +156,19 @@ def _in_time_window(start: str, end: str, now: datetime | None = None) -> bool:
 def list_partition_files(
     spark: SparkSession, table_root: str
 ) -> dict[str, list[tuple[str, int]]]:
-    """Distributed listing of every data file under `table_root`,
-    grouped by its parent (leaf partition) directory — the Spark
-    analog of per-store `listStatus` (QHC.java:149). Returns relative
-    dir -> [(file_uri, size)]."""
-    df = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .load(table_root)
-        .select("path", "length")
-    )
-    # Spark returns fully-qualified URIs (file:/..., hdfs://nn/...);
-    # qualify the caller's root through the same FileSystem and
-    # compare scheme-stripped absolute paths, so file:///, hostful
-    # hdfs:// and relative roots all resolve to correct relative
-    # partition keys instead of falling back to absolute parents.
-    fs, root_path, _ = _hadoop_fs(spark, table_root)
-    root_abs = _uri_path(str(fs.makeQualified(root_path))).rstrip("/")
+    """Every data file under `table_root`, grouped by its parent (leaf
+    partition) directory — the Spark analog of per-store `listStatus`
+    (QHC.java:149). Returns relative dir -> [(file_uri, size)], each
+    list sorted. One driver-side walk (_walk_table) under its cap on a
+    local root; otherwise the distributed listing, collected one row
+    per FILE."""
+    walk = _walk_table(table_root)
+    if walk is not None:
+        return {rel: files for rel, (files, _pure) in walk.items()}
     out: dict[str, list[tuple[str, int]]] = {}
-    for r in df.collect():  # one row per FILE: bounded metadata
-        path = r["path"]
-        parent_abs = _uri_path(posixpath.dirname(path))
-        if parent_abs == root_abs:
-            rel = ""
-        elif parent_abs.startswith(root_abs + "/"):
-            rel = parent_abs[len(root_abs) + 1 :]
-        else:  # different FS/mount than the root: keep absolute
-            rel = parent_abs
-        if any(c.startswith(("_", ".")) for c in rel.split("/") if c):
-            continue  # temp/trash trees are not data (any _-component)
-        out.setdefault(rel, []).append((path, int(r["length"])))
-    return out
+    for r in _distributed_listing(spark, table_root).collect():
+        out.setdefault(r["partition"], []).append((r["path"], int(r["size"])))
+    return {rel: sorted(files) for rel, files in out.items()}
 
 
 def _uri_path(uri: str) -> str:
@@ -170,16 +177,106 @@ def _uri_path(uri: str) -> str:
     return parsed.path if parsed.scheme else uri
 
 
-def listing_df(spark: SparkSession, table_root: str) -> DataFrame:
-    """Every data file under `table_root` as a DataFrame
-    (partition string, relpath string, size long) — the fully
-    DISTRIBUTED listing: URI→relative-path derivation is pure JVM
-    expression work (whole-stage codegen, no Python workers),
-    temp/trash `_`-component trees are filtered in the same stage, and
-    nothing per-file reaches the driver until a caller aggregates or
-    collects. This is the 10⁶-file path; callers that genuinely need a
-    per-partition dict use list_partition_files (one partition at a
-    time, bounded)."""
+def _hidden(name: str) -> bool:
+    """Whether Spark's file listing skips a directory entry of this
+    name (HadoopFSUtils.shouldFilterOutPathName): a `.` prefix, a `_`
+    prefix without `=` in the name, or an in-progress `._COPYING_`
+    copy. A `_k=v.parquet` file is therefore data to Spark, and so it
+    is to every listing here; a `_k=v` DIRECTORY is read by Spark but
+    never listed as a partition (see _walk_table)."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _local_root(table_root: str) -> str | None:
+    """Absolute local path of a plain or `file:` table root; None for
+    any other scheme or a `file:` URI with an authority. Hadoop
+    resolves a relative root against the JVM's working directory,
+    which an os.chdir in this process after the JVM started does not
+    move, so a relative root resolves against that directory too."""
+    if table_root.startswith("file:"):
+        path = table_root[len("file:") :]
+        if path.startswith("//"):
+            path = path[2:]  # empty authority: file:///t -> /t
+        if not path.startswith("/"):
+            return None
+    elif re.match(_SCHEME_RE, table_root):
+        return None
+    else:
+        path = table_root
+        if not path.startswith("/"):
+            from pyspark import SparkContext
+
+            sc = SparkContext._active_spark_context
+            cwd = (
+                sc._jvm.System.getProperty("user.dir")
+                if sc is not None
+                else os.getcwd()
+            )
+            path = os.path.join(cwd, path)
+    return os.path.normpath(path)
+
+
+def _walk_table(
+    table_root: str,
+) -> dict[str, tuple[list[tuple[str, int]], bool]] | None:
+    """One bounded driver-side listing of a local table: one
+    os.scandir pass over every visible directory, returning
+    rel -> ([(file_uri, size)], pure) for each directory holding at
+    least one data file. It lists exactly what the distributed listing
+    lists: visible `.parquet` files (see _hidden) under directories
+    none of whose components starts with `_` or `.`; URIs are Hadoop's
+    `file:/abs/path` form. `pure` is _list_one_partition's flag: the
+    directory holds nothing else Spark's reader would read (no stray
+    visible file, no visible subdirectory).
+
+    Returns None — the caller takes the distributed listing — for a
+    root that is not local or not a directory, and as soon as the walk
+    has seen more than _WALK_MAX_ENTRIES directory entries."""
+    root = _local_root(table_root)
+    if root is None or not os.path.isdir(root):
+        return None
+    out: dict[str, tuple[list[tuple[str, int]], bool]] = {}
+    seen = 0
+    stack = [""]
+    while stack:
+        rel = stack.pop()
+        files: list[tuple[str, int]] = []
+        pure = True
+        try:
+            with os.scandir(os.path.join(root, rel) if rel else root) as it:
+                for e in it:
+                    seen += 1
+                    if seen > _WALK_MAX_ENTRIES:
+                        return None
+                    name = e.name
+                    if e.is_dir():
+                        if not name.startswith(("_", ".")):
+                            stack.append(f"{rel}/{name}" if rel else name)
+                        pure = pure and _hidden(name)
+                    elif _hidden(name):
+                        continue
+                    elif name.endswith(".parquet") and e.is_file():
+                        files.append((f"file:{e.path}", e.stat().st_size))
+                    else:
+                        pure = False  # a stray visible file
+        except FileNotFoundError:
+            continue  # removed while walking: nothing left to list
+        if files:
+            out[rel] = (sorted(files), pure)
+    return out
+
+
+def _distributed_listing(spark: SparkSession, table_root: str) -> DataFrame:
+    """(path, partition, relpath, size) of every data file under
+    `table_root`, from one parallel `binaryFile` listing: URI→relative
+    path derivation is pure JVM expression work (whole-stage codegen,
+    no Python workers), temp/trash `_`-component trees are filtered in
+    the same stage, and nothing per-file reaches the driver until a
+    caller aggregates or collects. The 10⁶-file path."""
     fs, root_path, _ = _hadoop_fs(spark, table_root)
     root_abs = _uri_path(str(fs.makeQualified(root_path))).rstrip("/")
 
@@ -192,8 +289,7 @@ def listing_df(spark: SparkSession, table_root: str) -> DataFrame:
     )
     # scheme strip mirrors _uri_path: "file:/a", "file:///a" and
     # "hdfs://nn:8020/a" all reduce to the filesystem path component
-    scheme_re = r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//[^/]*)?"
-    abs_path = F.regexp_replace(F.col("path"), scheme_re, "")
+    abs_path = F.regexp_replace(F.col("path"), _SCHEME_RE, "")
     parent = F.regexp_replace(abs_path, r"/[^/]*$", "")
     name = F.regexp_extract(abs_path, r"[^/]+$", 0)
     partition = (
@@ -205,6 +301,7 @@ def listing_df(spark: SparkSession, table_root: str) -> DataFrame:
         .otherwise(parent)  # different FS/mount: keep absolute
     )
     out = df.select(
+        "path",
         partition.alias("partition"),
         F.col("length").cast("long").alias("size"),
         name.alias("name"),
@@ -213,6 +310,7 @@ def listing_df(spark: SparkSession, table_root: str) -> DataFrame:
         ~F.col("partition").rlike(r"(^|/)[_.]")
     )
     return out.select(
+        "path",
         "partition",
         F.when(F.col("partition") == "", F.col("name"))
         .otherwise(F.concat_ws("/", "partition", "name"))
@@ -221,17 +319,46 @@ def listing_df(spark: SparkSession, table_root: str) -> DataFrame:
     )
 
 
+def listing_df(spark: SparkSession, table_root: str) -> DataFrame:
+    """Every data file under `table_root` as a DataFrame
+    (partition string, relpath string, size long). Under the walk's
+    cap on a local root it is a driver-built table from _walk_table
+    (no listing job; consumers run over local rows). Past the cap or
+    on a remote root it is the distributed listing: nothing per-file
+    reaches the driver until a caller aggregates or collects."""
+    walk = _walk_table(table_root)
+    if walk is None:
+        return _distributed_listing(spark, table_root).drop("path")
+    rows = [
+        (rel, posixpath.basename(uri), size)
+        for rel, (files, _pure) in sorted(walk.items())
+        for uri, size in files
+    ]
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "partition": pa.array([r for r, _n, _s in rows], pa.string()),
+                "relpath": pa.array(
+                    [f"{r}/{n}" if r else n for r, n, _s in rows], pa.string()
+                ),
+                "size": pa.array([s for _r, _n, s in rows], pa.int64()),
+            }
+        )
+    )
+
+
 def _list_one_partition(
     spark: SparkSession, table_root: str, rel: str
 ) -> tuple[list[tuple[str, int]], bool]:
     """([(file_uri, size)], pure) of ONE leaf partition directory via
     a single listStatus — the bounded on-demand companion to the
-    distributed listing: compact_table resolves file lists only for
-    partitions it is about to rewrite. `pure` is True when the
-    directory holds nothing beyond those visible .parquet files and
-    hidden (_/. prefixed) entries — i.e. reading the DIRECTORY is
-    equivalent to reading the file list (no stray files, no
-    subdirectories that Spark's reader would partition-discover)."""
+    distributed listing, for roots _walk_table does not cover:
+    compact_table resolves file lists only for partitions it is about
+    to rewrite. `pure` is True when the directory holds nothing beyond
+    those visible .parquet files and hidden entries (_hidden) — i.e.
+    reading the DIRECTORY is equivalent to reading the file list (no
+    stray files, no subdirectories that Spark's reader would
+    partition-discover)."""
     fs, root, jvm = _hadoop_fs(spark, table_root)
     Path = jvm.org.apache.hadoop.fs.Path
     part = Path(posixpath.join(table_root, rel)) if rel else root
@@ -239,12 +366,9 @@ def _list_one_partition(
     pure = True
     for st in fs.listStatus(part):
         name = st.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue  # hidden: ignored by Spark's reader too
-        if (
-            st.isFile()
-            and name.endswith(".parquet")
-        ):
+        if _hidden(name):
+            continue  # ignored by Spark's reader too
+        if st.isFile() and name.endswith(".parquet"):
             out.append((str(st.getPath()), int(st.getLen())))
         else:
             pure = False  # subdir or non-parquet visible file
@@ -252,10 +376,12 @@ def _list_one_partition(
 
 
 def partition_summary(spark: SparkSession, table_root: str) -> DataFrame:
-    """Per-partition (partition, filenum, total_bytes) aggregated ON
-    EXECUTORS — the driver receives one row per PARTITION, never one
-    per file. This is the stats-report / compaction-ordering input at
-    any file count."""
+    """Per-partition (partition, filenum, total_bytes) over listing_df.
+    Past the walk's cap or on a remote root the per-file rows
+    aggregate ON EXECUTORS and the driver receives one row per
+    PARTITION, never one per file; under the cap listing_df is the
+    driver's own walk, and compact_table and stats_report aggregate
+    that walk directly instead of calling this."""
     return listing_df(spark, table_root).groupBy("partition").agg(
         F.count(F.lit(1)).alias("filenum"),
         F.sum("size").alias("total_bytes"),
@@ -361,7 +487,8 @@ def _compact_one(
             (int(metrics["fp"] or 0), int(metrics["fpsum"] or 0)),
         )
 
-    rewritten = spark.read.parquet(tmp_dir)
+    # the source's schema, declared: no footer-inference job
+    rewritten = spark.read.schema(src.schema).parquet(tmp_dir)
     n_after, *fps_after = _fingerprint(rewritten)
     fp_after = tuple(fps_after)
     if (n_before, fp_before) != (n_after, fp_after):
@@ -482,8 +609,7 @@ def _compact_batch(
         root_abs = _uri_path(str(fs_root.makeQualified(root_path))).rstrip(
             "/"
         )
-        scheme_re = r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//[^/]*)?"
-        fname_abs = F.regexp_replace(fname, scheme_re, "")
+        fname_abs = F.regexp_replace(fname, _SCHEME_RE, "")
         tag = F.regexp_extract(
             fname_abs,
             ".*\\Q" + root_abs + "\\E/(.*)/[^/]+$",
@@ -520,7 +646,9 @@ def _compact_batch(
             except BaseException as exc:  # surfaced after join
                 count_out["err"] = exc
 
-        count_thread = threading.Thread(target=run_count, daemon=True)
+        count_thread = threading.Thread(
+            target=inheritable_thread_target(spark)(run_count), daemon=True
+        )
         count_thread.start()
         obs = Observation()
         observed = (
@@ -571,14 +699,17 @@ def _compact_batch(
         # any file the read could have seen is visible to the re-list
         # — and later swap only those whose listing still equals the
         # planned fileset; a changed partition is left untouched for
-        # the next run to re-plan. The re-list is ONE recursive
-        # binaryFile listing over just the batched dirs (JVM-parallel,
-        # no per-file py4j round trips — the 10^5-partition path),
-        # OVERLAPPED with the read-back verification job below. A late
-        # NON-parquet visible file is invisible to this listing, but
-        # also harmless: one present during the read fails the parquet
-        # read outright, one arriving after it contributes no read
-        # rows and merely survives the swap untouched.
+        # the next run to re-plan. The re-list is the driver-side walk
+        # under its cap (an impure directory counts as changed: it
+        # gained something the reader would have read), else ONE
+        # recursive binaryFile listing over just the batched dirs
+        # (JVM-parallel, no per-file py4j round trips — the
+        # 10^5-partition path), OVERLAPPED with the read-back
+        # verification job below. A late NON-parquet visible file is
+        # invisible to the binaryFile listing, but also harmless: one
+        # present during the read fails the parquet read outright, one
+        # arriving after it contributes no read rows and merely
+        # survives the swap untouched.
         relist_out: dict = {}
         relist_thread = None
         if dirs_ok:
@@ -592,21 +723,32 @@ def _compact_batch(
                     found: dict[str, list[str]] = {
                         rel: [] for rel, _f, _n, _r in items
                     }
-                    rows = (
-                        bspark.read.format("binaryFile")
-                        .option("pathGlobFilter", "*.parquet")
-                        .option("recursiveFileLookup", "true")
-                        .load(
-                            [
-                                posixpath.join(table_root, rel)
-                                for rel, _f, _n, _r in items
-                            ]
-                        )
-                        .select("path")
-                        .collect()
-                    )
-                    for row in rows:
-                        p = _uri_path(row["path"])
+                    walk = _walk_table(table_root)
+                    impure = set()
+                    if walk is not None:
+                        paths = [
+                            uri
+                            for files, _pure in walk.values()
+                            for uri, _ in files
+                        ]
+                        impure = {r for r, (_f, ok) in walk.items() if not ok}
+                    else:
+                        paths = [
+                            row["path"]
+                            for row in bspark.read.format("binaryFile")
+                            .option("pathGlobFilter", "*.parquet")
+                            .option("recursiveFileLookup", "true")
+                            .load(
+                                [
+                                    posixpath.join(table_root, rel)
+                                    for rel, _f, _n, _r in items
+                                ]
+                            )
+                            .select("path")
+                            .collect()
+                        ]
+                    for path in paths:
+                        p = _uri_path(path)
                         if not p.startswith(r_abs + "/"):
                             continue  # foreign mount: cannot be planned
                         tail = p[len(r_abs) + 1 :]
@@ -616,14 +758,23 @@ def _compact_batch(
                         if d:
                             found[d].append(tail)
                     relist_out["found"] = {
-                        rel: sorted(tails) for rel, tails in found.items()
+                        rel: None if rel in impure else sorted(tails)
+                        for rel, tails in found.items()
                     }
                 except BaseException as exc:  # surfaced after join
                     relist_out["err"] = exc
 
-            relist_thread = threading.Thread(target=run_relist, daemon=True)
+            relist_thread = threading.Thread(
+                target=inheritable_thread_target(spark)(run_relist),
+                daemon=True,
+            )
             relist_thread.start()
-        rewritten = bspark.read.parquet(tmp_batch)
+        # the batch's data schema plus the tag declared a STRING:
+        # inference would type numeric partition values ("2024", "007")
+        # as int, and their counts would never meet the planned rels
+        rewritten = bspark.read.schema(
+            StructType(src.schema.fields + [StructField(bcol, StringType())])
+        ).parquet(tmp_batch)
         after_rows = (
             rewritten.withColumn(h_col, F.expr(hashes))
             .groupBy(bcol)
@@ -767,15 +918,25 @@ def compact_table(
     report = CompactionReport(table_root)
     reconcile_swaps(spark, table_root)  # finish any crash-interrupted
     # swap BEFORE listing, so the listing never sees an old+new mix
-    # Per-file rows aggregate ON EXECUTORS: the driver receives one
-    # (filenum, bytes) row per PARTITION, and only partitions that
-    # might actually be rewritten get their file list (one bounded
-    # listStatus each) — O(partitions + files-in-touched-partitions)
-    # driver memory instead of O(all files).
-    summary = {
-        r["partition"]: (int(r["filenum"]), int(r["total_bytes"]))
-        for r in partition_summary(spark, table_root).collect()
-    }
+    walk = _walk_table(table_root)
+    if walk is not None:
+        # one driver-side walk gives the summary, every file list and
+        # every purity flag: no listing job, no per-partition py4j
+        summary = {
+            rel: (len(files), sum(size for _, size in files))
+            for rel, (files, _pure) in walk.items()
+        }
+    else:
+        # past the walk's cap or on a remote root, per-file rows
+        # aggregate ON EXECUTORS: the driver receives one (filenum,
+        # bytes) row per PARTITION, and only partitions that might
+        # actually be rewritten get their file list (one bounded
+        # listStatus each) — O(partitions + files-in-touched-
+        # partitions) driver memory instead of O(all files).
+        summary = {
+            r["partition"]: (int(r["filenum"]), int(r["total_bytes"]))
+            for r in partition_summary(spark, table_root).collect()
+        }
     trash_dir = (
         posixpath.join(table_root, "_trash", str(int(time.time())))
         if trash
@@ -809,7 +970,11 @@ def compact_table(
             # here; the label difference is cosmetic, the skip is not)
             res.skipped = "pacing_budget"
         else:
-            files, pure = _list_one_partition(spark, table_root, rel)
+            files, pure = (
+                walk[rel]
+                if walk is not None
+                else _list_one_partition(spark, table_root, rel)
+            )
             ck_entry = ck_state.get(rel)
             cur_sig = fileset_signature([p for p, _ in files])
             if ck_entry is not None and ck_entry.get("fileset") in (None, cur_sig):
@@ -913,8 +1078,10 @@ def compact_table(
 
         ckpt.mark_done = locked_mark  # type: ignore[method-assign]
         try:
+            # the workers' jobs join the caller's job group
+            target = inheritable_thread_target(spark)(run_one)
             with ThreadPoolExecutor(max_workers=concurrency) as pool:
-                list(pool.map(run_one, todo))
+                list(pool.map(target, todo))
         finally:
             ckpt.mark_done = real_mark  # type: ignore[method-assign]
     return report

@@ -79,8 +79,8 @@ def consistent_file_listing(spark: SparkSession, table_root: str) -> list[str]:
                 if p not in dest_paths:
                     out.append(uri)
         if swap_complete:
-            # destinations are authoritative even if the binaryFile
-            # listing snapshot predates some of their landings
+            # destinations are authoritative even if the listing
+            # snapshot predates some of their landings
             listed = {_uri_path(uri) for uri, _ in files}
             out.extend(d for d in dests if _uri_path(d) not in listed)
     return sorted(out)

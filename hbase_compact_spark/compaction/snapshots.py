@@ -1117,8 +1117,9 @@ class SnapshotLog:
         version — bootstrap's listing move, reusable after
         out-of-band data lands under the root (e.g. an appended
         directory): the new snapshot references everything on disk.
-        The listing flows from the distributed enumeration straight
-        into the manifest parquet — no per-file driver list."""
+        The listing (executor.listing_df: the driver's walk under its
+        cap on a local root, else the distributed enumeration) flows
+        straight into the manifest parquet."""
         from hbase_compact_spark.compaction.executor import listing_df
 
         df = listing_df(self.spark, self.table_root).select(

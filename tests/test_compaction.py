@@ -1100,6 +1100,39 @@ def test_batch_compacts_uri_root_multilevel(spark, tmp_path):
     assert _fingerprint(spark.read.parquet(plain)) == before
 
 
+def test_batch_compacts_numeric_partition_names(spark, tmp_path):
+    """Partition directories named like numbers ("2024", "007") go
+    through the batched rewrite. Regression: the read-back inferred
+    the batch's tag column as int, so its per-rel counts were keyed
+    2024 and 7 and never met the planned "2024" and "007" — every run
+    failed verification and such tables never compacted."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "numeric")
+    rels = ["2024", "2025", "007"]
+    for p, rel in enumerate(rels):
+        os.makedirs(os.path.join(root, rel))
+        for f in range(5):
+            keys = np.arange(100 * p + 10 * f, 100 * p + 10 * f + 10)
+            pq.write_table(
+                pa.table({"key": keys, "v": [f"v{k}" for k in keys]}),
+                os.path.join(root, rel, f"part-{f}.parquet"),
+            )
+    before = {
+        rel: _fingerprint(spark.read.parquet(os.path.join(root, rel)))
+        for rel in rels
+    }
+    report = compact_table(spark, root, target_bytes=64 * 1024 * 1024)
+    assert sorted(r.partition for r in report.compacted) == sorted(rels)
+    for rel in rels:
+        path = os.path.join(root, rel)
+        files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+        assert len(files) == 1, (rel, files)
+        assert _fingerprint(spark.read.parquet(path)) == before[rel]
+
+
 def test_batch_skips_partition_with_concurrent_arrival(
     spark, small_files_table, tmp_path, monkeypatch
 ):
@@ -1120,21 +1153,21 @@ def test_batch_skips_partition_with_concurrent_arrival(
         load_table(spark, SF_DIR, "events").drop("ts").limit(7)
         .localCheckpoint()
     )
-    real_list = ex._list_one_partition
+    real_walk = ex._walk_table
     state = {"dropped": False}
 
-    def listing(sp, tr, rel):
-        out = real_list(sp, tr, rel)
-        if rel == "region=p1" and not state["dropped"]:
+    def walk(tr):
+        out = real_walk(tr)
+        if not state["dropped"]:
             # simulate a concurrent writer: a file lands right after
-            # this partition was planned, before the batch read
+            # the table was planned, before the batch read
             state["dropped"] = True
             extra.coalesce(1).write.mode("append").parquet(
                 os.path.join(root, "region=p1")
             )
         return out
 
-    monkeypatch.setattr(ex, "_list_one_partition", listing)
+    monkeypatch.setattr(ex, "_walk_table", walk)
     ckpt = CompactionCheckpoint(str(tmp_path / "ca.json"))
     report = compact_table(
         spark, root, target_bytes=64 * 1024 * 1024, checkpoint=ckpt
@@ -1156,7 +1189,7 @@ def test_batch_skips_partition_with_concurrent_arrival(
 
     # the skipped partition was NOT checkpointed: the next run
     # re-plans it with the late file included and compacts cleanly
-    monkeypatch.setattr(ex, "_list_one_partition", real_list)
+    monkeypatch.setattr(ex, "_walk_table", real_walk)
     report2 = compact_table(
         spark, root, target_bytes=64 * 1024 * 1024, checkpoint=ckpt
     )
