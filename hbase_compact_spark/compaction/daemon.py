@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field, replace
-from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -111,7 +110,7 @@ def stats_report(spark: SparkSession, table_root: str) -> DataFrame:
     structure, so the report costs the same at 10⁶ files as at 10."""
     walk = _walk_table(table_root)
     if walk is None:
-        return (
+        report = (
             partition_summary(spark, table_root)
             .rollup("partition")
             .agg(
@@ -119,36 +118,27 @@ def stats_report(spark: SparkSession, table_root: str) -> DataFrame:
                 F.sum("total_bytes").alias("total_bytes"),
             )
             .withColumn("partition", F.coalesce("partition", F.lit("ALL")))
-            .withColumn(
-                "total_gb", F.round(F.col("total_bytes") / (1024.0**3), 6)
+        )
+    else:
+        rows = [
+            (rel, len(files), sum(size for _, size in files))
+            for rel, (files, _pure) in sorted(walk.items())
+        ]
+        if rows:
+            rows.append(
+                ("ALL", sum(r[1] for r in rows), sum(r[2] for r in rows))
+            )
+        report = spark.createDataFrame(
+            pa.table(
+                {
+                    "partition": pa.array([r[0] for r in rows], pa.string()),
+                    "filenum": pa.array([r[1] for r in rows], pa.int64()),
+                    "total_bytes": pa.array([r[2] for r in rows], pa.int64()),
+                }
             )
         )
-    rows = [
-        (rel, len(files), sum(size for _, size in files))
-        for rel, (files, _pure) in sorted(walk.items())
-    ]
-    if rows:
-        rows.append(
-            ("ALL", sum(r[1] for r in rows), sum(r[2] for r in rows))
-        )
-
-    def gb(n: int) -> float:
-        # Spark's round(x, 6): HALF_UP on the double's shortest decimal
-        return float(
-            Decimal(repr(n / 1024.0**3)).quantize(
-                Decimal("1e-6"), ROUND_HALF_UP
-            )
-        )
-
-    return spark.createDataFrame(
-        pa.table(
-            {
-                "partition": pa.array([r[0] for r in rows], pa.string()),
-                "filenum": pa.array([r[1] for r in rows], pa.int64()),
-                "total_bytes": pa.array([r[2] for r in rows], pa.int64()),
-                "total_gb": pa.array([gb(r[2]) for r in rows], pa.float64()),
-            }
-        )
+    return report.withColumn(
+        "total_gb", F.round(F.col("total_bytes") / (1024.0**3), 6)
     )
 
 

@@ -1,9 +1,10 @@
-"""The driver-side table walk (executor._walk_table) that lists a local
-table for a whole daemon cycle: it lists exactly what the distributed
+"""The driver-side table walk (executor._walk_table) behind every
+listing of a local table: it lists exactly what the distributed
 listing lists on every root spelling, its purity flag equals the
-per-partition listStatus's, past its cap compaction takes the
-distributed path with the same outcome, and under the cap the stats
-report and an idle pass launch no Spark job."""
+per-partition listStatus's, a file removed mid-walk drops only that
+file, past its cap compaction takes the distributed path with the
+same outcome, and under the cap the stats report and an idle pass
+launch no Spark job."""
 
 from __future__ import annotations
 
@@ -121,6 +122,37 @@ def test_walk_declines_remote_roots_and_past_its_cap(tmp_path, monkeypatch):
     assert ex._walk_table(root) is not None
     monkeypatch.setattr(ex, "_WALK_MAX_ENTRIES", 3)
     assert ex._walk_table(root) is None
+
+
+def test_walk_skips_only_a_file_removed_while_listing(tmp_path, monkeypatch):
+    """A swap retires old files one at a time; a file that vanishes
+    between scandir and its stat is left out alone, as Hadoop's
+    listStatus does, and its directory's other files stay listed."""
+    root = str(tmp_path / "t")
+    for name in ("a", "b", "c"):
+        _write(os.path.join(root, "p=0", f"{name}.parquet"), 0, 2)
+    _write(os.path.join(root, "p=1", "d.parquet"), 0, 2)
+    real_scandir = os.scandir
+
+    class _RemovingScandir:
+        def __init__(self, path):
+            with real_scandir(path) as it:
+                self.entries = list(it)
+            if os.path.basename(path) == "p=0":
+                os.remove(os.path.join(path, "b.parquet"))
+
+        def __enter__(self):
+            return iter(self.entries)
+
+        def __exit__(self, *exc):
+            return False
+
+    monkeypatch.setattr(ex.os, "scandir", _RemovingScandir)
+    walk = ex._walk_table(root)
+    assert {rel: [os.path.basename(u) for u, _s in files] for rel, (files, _p) in walk.items()} == {
+        "p=0": ["a.parquet", "c.parquet"],
+        "p=1": ["d.parquet"],
+    }
 
 
 def _fragmented(root: str) -> int:
