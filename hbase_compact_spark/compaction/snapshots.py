@@ -490,6 +490,20 @@ def _path_value_disjoint(raw: str, lo, hi) -> bool:
     return False
 
 
+def _manifest_arrow_schema():
+    """MANIFEST_SCHEMA_DDL as a pyarrow schema."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            ("relpath", pa.string()),
+            ("size", pa.int64()),
+            ("stats", pa.string()),
+            ("blooms", pa.string()),
+        ]
+    )
+
+
 def _read_manifest_table(local_path: str, columns=None):
     """pyarrow table of a manifest file/dir. A ZERO-ROW manifest
     (bootstrap of an empty table) may have been written by Spark as a
@@ -497,20 +511,12 @@ def _read_manifest_table(local_path: str, columns=None):
     table in the manifest schema rather than a read error."""
     import os as _os
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     if _os.path.isdir(local_path) and not any(
         n.endswith(".parquet") for n in _os.listdir(local_path)
     ):
-        empty = pa.table(
-            {
-                "relpath": pa.array([], pa.string()),
-                "size": pa.array([], pa.int64()),
-                "stats": pa.array([], pa.string()),
-                "blooms": pa.array([], pa.string()),
-            }
-        )
+        empty = _manifest_arrow_schema().empty_table()
         return empty.select(columns) if columns else empty
     return pq.read_table(local_path, columns=columns)
 
@@ -604,11 +610,22 @@ class SnapshotLog:
     root's path — so one class serves the driver AND a Python
     data-source worker with no py4j gateway (sources/snapshot_table.py,
     streaming/table_tail.py). `spark` may be None; only the Spark-only
-    methods need it (`manifest_df`, `commit_append`, `commit_current`),
-    and shared code (scan_plan) branches on it to skip the distributed
+    methods need it (`manifest_df`, `commit_current`, and
+    `commit_append` past DISTRIBUTED_PRUNE_THRESHOLD files), and
+    shared code (scan_plan) branches on it to skip the distributed
     manifest scan. Manifests and delete entries are read as local
     paths, so a remote-scheme root raises here instead of being
-    silently misread."""
+    silently misread.
+
+    Manifests and merge-on-read delete entries are WRITTEN on the
+    driver too while they are bounded, by the caps the read path
+    already sizes driver memory with: a child manifest up to
+    DISTRIBUTED_PRUNE_THRESHOLD files (scan_plan loads a manifest
+    that size on the driver for every read), equality keys up to
+    MERGE_KEY_PROBE_CAP rows (the merge probe collects that many),
+    entry retirement up to MOR_BROADCAST_ROWS pending rows (the read
+    broadcasts that many). Past a cap the same metadata is written
+    by a distributed Spark job."""
 
     def __init__(self, spark: SparkSession | None, table_root: str):
         scheme = urlparse(table_root).scheme
@@ -839,23 +856,18 @@ class SnapshotLog:
         blooms = blooms or {}
         tbl = pa.table(
             {
-                "relpath": pa.array([p for p, _ in files], pa.string()),
-                "size": pa.array([int(s) for _, s in files], pa.int64()),
-                "stats": pa.array(
-                    [
-                        json.dumps(stats[p]) if p in stats else None
-                        for p, _ in files
-                    ],
-                    pa.string(),
-                ),
-                "blooms": pa.array(
-                    [
-                        json.dumps(blooms[p]) if p in blooms else None
-                        for p, _ in files
-                    ],
-                    pa.string(),
-                ),
-            }
+                "relpath": [p for p, _ in files],
+                "size": [int(s) for _, s in files],
+                "stats": [
+                    json.dumps(stats[p]) if p in stats else None
+                    for p, _ in files
+                ],
+                "blooms": [
+                    json.dumps(blooms[p]) if p in blooms else None
+                    for p, _ in files
+                ],
+            },
+            schema=_manifest_arrow_schema(),
         )
         return self.write_manifest_table(tbl)
 
@@ -873,21 +885,14 @@ class SnapshotLog:
         self, added: list[tuple[str, int]], op: str, parent: int
     ) -> int:
         """Append-only commit: child manifest = the parent's manifest
-        rows UNION the added entries, written distributed — the
-        parent's file list (and any stats/bloom payloads, which carry
-        through untouched) never visits the driver, so a streaming
-        ingest's per-batch commit cost is O(added) driver work at any
-        table size. Raises SnapshotConflictError like commit()."""
-        added_df = self.spark.createDataFrame(
-            [(p, int(s), None, None) for p, s in added],
-            MANIFEST_SCHEMA_DDL,
-        )
-        name = _write_manifest_distributed(
-            self,
-            self.manifest_df(parent).unionByName(added_df),
-            stat_cols=False,
-            bloom_cols=None,
-        )
+        rows (stats/bloom payloads carried untouched) UNION the added
+        entries, each annotated with footer stats and blooms for the
+        columns the parent tracks — `_carried_manifest` keeping every
+        parent row. Up to DISTRIBUTED_PRUNE_THRESHOLD files the
+        manifest is built and written on the driver with pyarrow and
+        no Spark job; past it, on executors. Raises
+        SnapshotConflictError like commit()."""
+        name = _carried_manifest(self.spark, self, parent, None, added)
         return self.commit(
             None,
             op=op,
@@ -1397,20 +1402,33 @@ def _eq_keys_schema(keys_path: str, df: DataFrame):
     """Declared read schema of an equality-delete keys dir: the key
     columns named by its own footer (read driver-side), typed as in
     `df`, which they match on — so the read plans no footer-inference
-    job. None (infer) when the dir is not local or a key column's
-    physical type is not `df`'s."""
+    job. An INT96 column is a TIMESTAMP, as Spark reads it (pyarrow
+    types it as a naive timestamp). None (infer) when the dir is not
+    local or a key column's physical type is not `df`'s."""
     import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_type
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import StructType, TimestampType
 
     local = _local_meta_path(keys_path)
     if local is None:
         return None
     row = {f.name: f for f in df.schema.fields}
+    dataset = pads.dataset(local, format="parquet")
+    int96 = set()
+    if dataset.files:
+        footer = pq.ParquetFile(dataset.files[0]).schema
+        int96 = {
+            footer.column(i).path
+            for i in range(len(footer))
+            if footer.column(i).physical_type == "INT96"
+        }
     fields = []
-    for f in pads.dataset(local, format="parquet").schema:
+    for f in dataset.schema:
         try:
-            physical = from_arrow_type(f.type)
+            physical = (
+                TimestampType() if f.name in int96 else from_arrow_type(f.type)
+            )
         except TypeError:
             return None
         if f.name not in row or physical != row[f.name].dataType:
@@ -1483,25 +1501,41 @@ def _local_meta_path(p: str) -> str | None:
     return None
 
 
-def _entry_relpaths_pyarrow(paths: list[str], cap: int) -> set[str] | None:
-    """Driver-side pyarrow read of the (bounded) `relpath` column of
-    delete-entry / scope parquets — the same local-path discipline as
-    _load_manifest, so a plan-time probe costs milliseconds instead
-    of a Spark job per MOR read. Returns None past `cap` (mirroring
-    the distributed probe's truncation contract); raises OSError for
-    non-local paths so the caller falls back to the Spark read."""
+def _entry_relpaths(
+    spark: SparkSession, paths: list[str], cap: int | None = None
+) -> set[str] | None:
+    """Distinct `relpath` values of delete-entry / scope parquets —
+    positional entries and equality scopes share the column — or None
+    past `cap` (None = uncapped). Entry parquets are bounded metadata
+    living next to the manifests, so a local path is read on the
+    driver with pyarrow (r15: a plan-time probe costs milliseconds
+    instead of a ~0.3-0.5 s Spark job per MOR read). A non-local or
+    unreadable path falls back to ONE schema-pruned Spark job over
+    every path: the explicit one-column schema makes the entry kinds'
+    differing full schemas irrelevant."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    out: set[str] = set()
-    for p in paths:
-        local = _local_meta_path(p)
-        if local is None:
-            raise OSError(f"non-local metadata path: {p}")
-        tbl = pq.read_table(local, columns=["relpath"])
-        out.update(tbl.column("relpath").to_pylist())
-        if len(out) > cap:
-            return None
-    return out
+    try:
+        out: set[str] = set()
+        for p in paths:
+            local = _local_meta_path(p)
+            if local is None:
+                raise OSError(f"non-local metadata path: {p}")
+            tbl = pq.read_table(local, columns=["relpath"])
+            out.update(tbl.column("relpath").to_pylist())
+            if cap is not None and len(out) > cap:
+                return None
+        return out
+    except (OSError, pa.ArrowException):
+        pass
+    df = spark.read.schema("relpath string").parquet(*paths).distinct()
+    if cap is not None:
+        df = df.limit(cap + 1)
+    rows = df.collect()
+    if cap is not None and len(rows) > cap:
+        return None
+    return {r["relpath"] for r in rows}
 
 
 def _mor_touched_relpaths(spark: SparkSession, pending) -> set[str] | None:
@@ -1518,29 +1552,7 @@ def _mor_touched_relpaths(spark: SparkSession, pending) -> set[str] | None:
     paths += [scope for _n, _k, scope, _c in pending.eq]
     if not paths:
         return set()
-    # r15: entry parquets are bounded metadata — read them driver-side
-    # with pyarrow when local (they live next to the manifests, same
-    # assumption) so every MOR read stops paying a ~0.3-0.5 s Spark
-    # job at PLAN time; any non-local/unreadable path falls back to
-    # the schema-pruned distributed read below.
-    try:
-        return _entry_relpaths_pyarrow(paths, cap)
-    except Exception:
-        pass
-    # ONE schema-pruned job over every entry parquet: positional
-    # entries and eq scope files share the relpath column, and the
-    # explicit one-column schema makes their differing full schemas
-    # irrelevant
-    rows = (
-        spark.read.schema("relpath string")
-        .parquet(*paths)
-        .distinct()
-        .limit(cap + 1)
-        .collect()
-    )
-    if len(rows) > cap:
-        return None
-    return {r["relpath"] for r in rows}
+    return _entry_relpaths(spark, paths, cap)
 
 
 def _read_relpaths(
@@ -2249,8 +2261,10 @@ def _footer_stats(local_path: str, cols: list[str] | None) -> tuple[int, dict]:
     """(num_rows, {col: [min, max]}) from ONE parquet footer — metadata
     only, no data pages. Values are kept only for JSON-stable types
     (int/float/str; binary stats decoded as UTF-8); anything else
-    (timestamps, decimals, missing writer stats) is skipped, which the
+    (timestamps, decimals, missing writer stats, stats pyarrow cannot
+    decode such as an INT32-encoded decimal's) is skipped, which the
     pruner treats as "cannot prune" — always conservative."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(local_path).metadata
@@ -2266,8 +2280,12 @@ def _footer_stats(local_path: str, cols: list[str] | None) -> tuple[int, dict]:
             if st is None or not st.has_min_max:
                 mns = []
                 break
-            mns.append(st.min)
-            mxs.append(st.max)
+            try:
+                mns.append(st.min)
+                mxs.append(st.max)
+            except pa.ArrowNotImplementedError:
+                mns = []
+                break
         if not mns:
             continue
         mn, mx = min(mns), max(mxs)
@@ -2289,13 +2307,13 @@ def _meta_row(
     blooms_json: str | None,
     stat_cols,
     bloom_cols,
-    fpp: float,
-    max_bits: int,
+    fpp: float = 0.01,
+    max_bits: int = 1 << 16,
 ) -> tuple[str | None, str | None]:
-    """Executor-side per-file metadata computation for ONE manifest
-    row: footer stats for `stat_cols` (replacing the stats payload)
-    and/or bloom bitsets for `bloom_cols` (merged into the existing
-    bloom payload). `None` for either col list = leave that payload
+    """Per-file metadata computation for ONE manifest row (on
+    executors, or on the driver for a bounded manifest): footer stats
+    for `stat_cols` (replacing the stats payload) and/or bloom bitsets
+    for `bloom_cols` (merged into the existing bloom payload). `None` for either col list = leave that payload
     untouched. Failures (vanished/corrupt file) clear the payload —
     no metadata means no pruning, always conservative."""
     import json as _json
@@ -3173,8 +3191,8 @@ def _commit_rewrite(
 ) -> int:
     """Commit a rewrite (compact / COW delete / merge) with the
     optimistic validate-rebase-retry loop. Each attempt rebuilds the
-    child manifest (kept rows carried on executors + added files
-    footer-annotated) and re-derives the surviving MOR delete entries
+    child manifest (kept rows carried + added files footer-annotated,
+    `_carried_manifest`) and re-derives the surviving MOR delete entries
     against the CURRENT base, so a rebase carries a concurrent
     committer's appends and delete entries forward instead of
     dropping them. The losing attempt's manifest is deleted by
@@ -3590,32 +3608,76 @@ def _parent_meta_cols(log: SnapshotLog, version: int) -> tuple[list, list]:
 
 
 def _carried_manifest(
-    spark: SparkSession,
+    spark: SparkSession | None,
     log: SnapshotLog,
     base_version: int,
-    keep: list[tuple[str, int]],
+    keep: list[tuple[str, int]] | None,
     added: list[tuple[str, int]],
 ) -> str:
-    """Child manifest for a rewrite (compact/delete/merge), built
-    WITHOUT driver-side metadata: kept files' manifest rows (stats +
-    bloom payloads intact) are filtered from the parent manifest on
-    executors; added files get a footer/bloom pass for the SAME
-    columns the parent tracks, also on executors; the union writes
-    straight to the new manifest. The driver holds only names+sizes —
-    the bounded-delta shape of the file list itself."""
-    keep_rels = [p for p, _ in keep]
+    """The one child-manifest builder, for appends (`keep=None`: every
+    parent row) and rewrites (compact/delete/merge/upsert: only the
+    `keep` rows). Kept files' manifest rows carry their stats + bloom
+    payloads intact; added files get a footer/bloom pass
+    (`_meta_row`) for the SAME columns the parent tracks, so an
+    appended file prunes like a compacted one. Returns the manifest
+    name.
+
+    Up to DISTRIBUTED_PRUNE_THRESHOLD files (parent rows + added) the
+    manifest is built on the driver with pyarrow and written as one
+    parquet — no Spark job. That is the bound under which scan_plan
+    and _probe_candidates already load the whole manifest on the
+    driver for every read, so the memory is already assumed. The
+    bound counts files, not bytes: footer stats cost ≈0.2 ms per added
+    file, but a bloom reads the bloomed column of each added file on
+    the driver — ≈0.87 s for a 1M-row append (≈115 ms per MB of int64
+    keys; a 13.5 MB file with a 7.6 MB key column, one core of a
+    4-core host). Past the bound, the filter, the annotation
+    pass and the write run on executors and the driver holds only the
+    names+sizes of the file list itself."""
+    stat_cols, bloom_cols = _parent_meta_cols(log, base_version)
+    stat_cols, bloom_cols = stat_cols or False, bloom_cols or None
+    n_parent = log.read(base_version)["n_files"]
+    if n_parent + len(added) <= DISTRIBUTED_PRUNE_THRESHOLD:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        schema = _manifest_arrow_schema()
+        parent = log.manifest_table(base_version).cast(schema)
+        if keep is not None:
+            parent = parent.filter(
+                pc.is_in(
+                    parent["relpath"],
+                    value_set=pa.array([p for p, _ in keep], pa.string()),
+                )
+            )
+        root_local = _uri_path(log.table_root)
+        metas = [
+            _meta_row(root_local, p, None, None, stat_cols, bloom_cols)
+            for p, _ in added
+        ]
+        added_tbl = pa.table(
+            {
+                "relpath": [p for p, _ in added],
+                "size": [int(s) for _, s in added],
+                "stats": [st for st, _ in metas],
+                "blooms": [bl for _, bl in metas],
+            },
+            schema=schema,
+        )
+        return log.write_manifest_table(pa.concat_tables([parent, added_tbl]))
     parent_df = log.manifest_df(base_version)
-    if keep_rels:
+    if keep is None:
+        keep_df = parent_df
+    elif keep:
         keep_df = parent_df.join(
             spark.createDataFrame(
-                [(p,) for p in keep_rels], "relpath string"
+                [(p,) for p, _ in keep], "relpath string"
             ),
             "relpath",
             "left_semi",
         )
     else:
         keep_df = parent_df.limit(0)
-    stat_cols, bloom_cols = _parent_meta_cols(log, base_version)
     added_src = spark.createDataFrame(
         [(p, int(s), None, None) for p, s in added],
         MANIFEST_SCHEMA_DDL,
@@ -3623,8 +3685,8 @@ def _carried_manifest(
     added_df = _annotate_df(
         log,
         added_src,
-        stat_cols=stat_cols if stat_cols else False,
-        bloom_cols=bloom_cols or None,
+        stat_cols=stat_cols,
+        bloom_cols=bloom_cols,
         n_files_hint=max(1, len(added)),
     )
     return _write_manifest_distributed(
@@ -3742,33 +3804,97 @@ def _snapshot_delete_mor(
     }
 
 
-def _write_delete_file(
-    spark: SparkSession, log: SnapshotLog, entries: DataFrame
-) -> tuple[str | None, int]:
-    """Land a (relpath, pos) entries DataFrame as ONE immutable
-    delete parquet under `_snapshots/deletes/` (tmp-write + rename,
-    same publication discipline as manifests). Returns (name, n_rows);
-    (None, 0) when the frame is empty — callers then commit an empty
-    delete_files list instead of referencing a vacuous file."""
-    tmp = posixpath.join(log.deletes_dir, f"_tmp-{uuid.uuid4().hex[:10]}")
-    (
-        entries.select(
-            F.col("relpath").cast("string"), F.col("pos").cast("long")
-        )
-        # one file: a delete set is orders of magnitude smaller than
-        # the data it subtracts; sorted by (relpath, pos) so the
-        # parquet footer carries tight per-file relpath ranges
-        .repartition(1)
-        .sortWithinPartitions("relpath", "pos")
-        .write.mode("overwrite")
-        .parquet(tmp)
+def _parquet_rows(local_dir: str) -> int:
+    """Row count of a Spark-written parquet dir, from its part files'
+    footers — metadata only, no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(posixpath.join(local_dir, n)).metadata.num_rows
+        for n in os.listdir(local_dir)
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
     )
-    n = spark.read.parquet(tmp).count()
+
+
+def _spark_parquet_options(spark: SparkSession, schema) -> dict | None:
+    """`pq.write_table` options under which a driver-written entry
+    file encodes its columns the way Spark's own parquet writer does,
+    so Spark and the pyarrow entry readers (sources/snapshot_table.py,
+    streaming/table_tail.py) see driver- and Spark-written entries
+    alike. Only timestamps differ: Spark writes TIMESTAMP_NTZ as int64
+    micros and TIMESTAMP per `spark.sql.parquet.outputTimestampType`
+    (INT96 by default, which pyarrow reads back as naive
+    timestamp[ns]). None when one pyarrow call cannot match both (an
+    INT96 or millis TIMESTAMP beside a TIMESTAMP_NTZ): the caller then
+    writes through Spark."""
+    import pyarrow as pa
+
+    opts: dict = {"store_schema": False}
+    ts = [f.type for f in schema if pa.types.is_timestamp(f.type)]
+    if not any(t.tz for t in ts):
+        return opts
+    out = spark.conf.get("spark.sql.parquet.outputTimestampType").upper()
+    if out == "TIMESTAMP_MICROS":
+        return opts
+    if out == "INT96" and all(t.tz for t in ts):
+        opts["use_deprecated_int96_timestamps"] = True
+        return opts
+    return None
+
+
+def _write_entry_part(tbl, local_dir: str, **opts) -> None:
+    """One driver-written part file under a new entry dir — the dir
+    shape Spark's writer gives entries, so every reader lists both
+    alike."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(local_dir)
+    pq.write_table(
+        tbl,
+        posixpath.join(local_dir, f"part-00000-{uuid.uuid4().hex}.parquet"),
+        **opts,
+    )
+
+
+def _write_delete_file(spark: SparkSession, log: SnapshotLog, entries):
+    """Land (relpath, pos) positional entries as ONE immutable delete
+    parquet under `_snapshots/deletes/` (tmp-write + rename, same
+    publication discipline as manifests), sorted by (relpath, pos) so
+    the footer carries tight relpath ranges. `entries` is a pyarrow
+    table (bounded: written on the driver, no Spark job) or a
+    DataFrame (written by Spark into one file: a delete set is orders
+    of magnitude smaller than the data it subtracts). The row count
+    comes from the written footers, never from a re-read. Returns
+    (name, n_rows); (None, 0) when there are no entries — callers
+    then commit an empty delete_files list instead of referencing a
+    vacuous file."""
+    tmp_uri = posixpath.join(log.deletes_dir, f"_tmp-{uuid.uuid4().hex[:10]}")
+    tmp = _uri_path(tmp_uri)
+    if isinstance(entries, DataFrame):
+        (
+            entries.select(
+                F.col("relpath").cast("string"), F.col("pos").cast("long")
+            )
+            .repartition(1)
+            .sortWithinPartitions("relpath", "pos")
+            .write.mode("overwrite")
+            .parquet(tmp_uri)
+        )
+        n = _parquet_rows(tmp)
+    else:
+        n = entries.num_rows
+        if n:
+            _write_entry_part(
+                entries.select(["relpath", "pos"]).sort_by(
+                    [("relpath", "ascending"), ("pos", "ascending")]
+                ),
+                tmp,
+            )
     if n == 0:
-        _rm(spark, tmp)
+        _remove_local(tmp)
         return None, 0
     name = f"d-{uuid.uuid4().hex[:12]}"
-    os.rename(_uri_path(tmp), log._local(DELETES_SUBDIR, name))
+    os.rename(tmp, log._local(DELETES_SUBDIR, name))
     return name, n
 
 
@@ -3788,46 +3914,76 @@ def _retire_delete_entries(
     ONE fresh delete file; an equality entry survives with its scope
     intersected against the kept set — carried by name when the
     rewrite touched none of its scope, rewritten into a fresh `e-` dir
-    (same keys, shrunk scope) when it touched some, dropped when it
-    consumed all of it."""
+    (same keys, linked; shrunk scope) when it touched some, dropped
+    when it consumed all of it.
+
+    Up to MOR_BROADCAST_ROWS total pending entry rows the
+    intersections run on the driver with pyarrow and no Spark job:
+    every read of the table already broadcasts a delete set that
+    size, so holding it once on the driver is within the memory the
+    read path assumes. Past it, the same intersections run as Spark
+    semi-joins."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     entries = log.delete_files(base_version)
     if not entries:
         return None
-    kept_df = spark.createDataFrame(
-        [(p,) for p in kept_relpaths], "relpath string"
-    )
-    new_list: list[list] = []
-    pos_paths = [
-        posixpath.join(log.deletes_dir, n)
-        for n, _ in entries
-        if not n.startswith(EQ_DELETE_PREFIX)
-    ]
-    if pos_paths:
-        surviving = spark.read.parquet(*pos_paths).join(
-            F.broadcast(kept_df), "relpath", "left_semi"
+    kept = list(kept_relpaths)
+    on_driver = sum(n for _, n in entries) <= MOR_BROADCAST_ROWS
+    if on_driver:
+        kept_arr = pa.array(kept, pa.string())
+    else:
+        kept_df = F.broadcast(
+            spark.createDataFrame([(p,) for p in kept], "relpath string")
         )
+    new_list: list[list] = []
+    pos_names = [n for n, _ in entries if not n.startswith(EQ_DELETE_PREFIX)]
+    if pos_names:
+        if on_driver:
+            pos_tbl = pa.concat_tables(
+                pq.read_table(
+                    log._local(DELETES_SUBDIR, n), columns=["relpath", "pos"]
+                ).cast(
+                    pa.schema([("relpath", pa.string()), ("pos", pa.int64())])
+                )
+                for n in pos_names
+            )
+            surviving = pos_tbl.filter(
+                pc.is_in(pos_tbl["relpath"], value_set=kept_arr)
+            )
+        else:
+            surviving = (
+                spark.read.schema("relpath string, pos long")
+                .parquet(
+                    *[posixpath.join(log.deletes_dir, n) for n in pos_names]
+                )
+                .join(kept_df, "relpath", "left_semi")
+            )
         name, n = _write_delete_file(spark, log, surviving)
         if n:
             new_list.append([name, n])
     for name, n_keys in entries:
         if not name.startswith(EQ_DELETE_PREFIX):
             continue
-        old_scope = spark.read.parquet(
-            posixpath.join(log.deletes_dir, name, "scope")
-        )
-        new_scope = old_scope.join(
-            F.broadcast(kept_df), "relpath", "left_semi"
-        )
-        n_new = new_scope.count()
+        scope_path = posixpath.join(log.deletes_dir, name, "scope")
+        if on_driver:
+            old_scope = _entry_relpaths(spark, [scope_path])
+            new_scope = sorted(old_scope.intersection(kept))
+            n_old, n_new = len(old_scope), len(new_scope)
+        else:
+            old_df = spark.read.schema("relpath string").parquet(scope_path)
+            new_scope = old_df.join(kept_df, "relpath", "left_semi")
+            n_old, n_new = old_df.count(), new_scope.count()
         if n_new == 0:
             continue  # every scoped file rewritten: entry fully applied
-        if n_new == old_scope.count():
+        if n_new == n_old:
             new_list.append([name, n_keys])  # scope untouched: carry
             continue
-        keys_df = spark.read.parquet(
-            posixpath.join(log.deletes_dir, name, "keys")
+        nm, nk = _write_eq_delete_dir(
+            spark, log, log._local(DELETES_SUBDIR, name, "keys"), new_scope
         )
-        nm, nk = _write_eq_delete_dir(spark, log, keys_df, new_scope)
         new_list.append([nm, nk])
     return {"delete_files": new_list}
 
@@ -3835,28 +3991,67 @@ def _retire_delete_entries(
 def _write_eq_delete_dir(
     spark: SparkSession,
     log: SnapshotLog,
-    keys_df: DataFrame,
-    scope_df: DataFrame,
+    keys,
+    scope,
 ) -> tuple[str, int]:
     """Land an equality-delete entry as ONE immutable `e-<uuid>/` dir
     (keys/ parquet = the key rows, scope/ parquet = the in-scope data
     relpaths) under `_snapshots/deletes/` — tmp-write + rename, the
-    manifests' publication discipline. Returns (name, n_keys)."""
-    tmp = posixpath.join(log.deletes_dir, f"_tmp-{uuid.uuid4().hex[:10]}")
-    keys_df.dropDuplicates().repartition(1).write.mode("overwrite").parquet(
-        posixpath.join(tmp, "keys")
-    )
-    (
-        scope_df.select(F.col("relpath").cast("string"))
-        .dropDuplicates()
-        .repartition(1)
-        .sortWithinPartitions("relpath")
-        .write.mode("overwrite")
-        .parquet(posixpath.join(tmp, "scope"))
-    )
-    n = spark.read.parquet(posixpath.join(tmp, "keys")).count()
+    manifests' publication discipline. Returns (name, n_keys), the
+    count taken from what was written, never from a re-read.
+
+    `keys` is a pyarrow table of UNIQUE key rows (the bounded case —
+    snapshot_upsert_mor collects at most MERGE_KEY_PROBE_CAP keys,
+    the size the merge probe already collects), written on the
+    driver; an existing entry's keys dir path, hard-linked file by
+    file (a retired entry's keys are unchanged, immutable bytes); or
+    a DataFrame, deduplicated and written by Spark. `scope` is a list
+    of relpaths (a file list the caller already holds), written on
+    the driver, or a DataFrame, written by Spark. With table + list
+    the entry costs no Spark job."""
+    tmp_uri = posixpath.join(log.deletes_dir, f"_tmp-{uuid.uuid4().hex[:10]}")
+    tmp = _uri_path(tmp_uri)
+    keys_dir = posixpath.join(tmp, "keys")
+    scope_dir = posixpath.join(tmp, "scope")
+    if isinstance(keys, str):
+        shutil.copytree(keys, keys_dir, copy_function=os.link)
+        n = _parquet_rows(keys_dir)
+    elif isinstance(keys, DataFrame):
+        keys.dropDuplicates().repartition(1).write.mode("overwrite").parquet(
+            posixpath.join(tmp_uri, "keys")
+        )
+        n = _parquet_rows(keys_dir)
+    else:
+        opts = _spark_parquet_options(spark, keys.schema)
+        if opts is None:
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            # naive Arrow timestamps are TIMESTAMP_NTZ keys (toArrow
+            # gives TIMESTAMP ones a zone)
+            schema = from_arrow_schema(keys.schema, prefer_timestamp_ntz=True)
+            return _write_eq_delete_dir(
+                spark, log, spark.createDataFrame(keys, schema), scope
+            )
+        _write_entry_part(keys, keys_dir, **opts)
+        n = keys.num_rows
+    if isinstance(scope, DataFrame):
+        (
+            scope.select(F.col("relpath").cast("string"))
+            .dropDuplicates()
+            .repartition(1)
+            .sortWithinPartitions("relpath")
+            .write.mode("overwrite")
+            .parquet(posixpath.join(tmp_uri, "scope"))
+        )
+    else:
+        import pyarrow as pa
+
+        _write_entry_part(
+            pa.table({"relpath": pa.array(sorted(set(scope)), pa.string())}),
+            scope_dir,
+        )
     name = f"{EQ_DELETE_PREFIX}{uuid.uuid4().hex[:12]}"
-    os.rename(_uri_path(tmp), log._local(DELETES_SUBDIR, name))
+    os.rename(tmp, log._local(DELETES_SUBDIR, name))
     return name, n
 
 
@@ -3868,30 +4063,19 @@ def _mor_affected_relpaths(
     pending entries). Positional files name their relpaths directly;
     an equality entry affects every file in its SCOPE (any of them may
     hold a key match — the keys are values, not positions). Bounded by
-    the file count of the snapshots involved, never by row count."""
+    the file count of the snapshots involved, never by row count, and
+    read on the driver (`_entry_relpaths`)."""
     if not names:
         return set()
-    pos_paths = [
-        posixpath.join(log.deletes_dir, n)
-        for n in names
-        if not n.startswith(EQ_DELETE_PREFIX)
-    ]
-    scope_paths = [
-        posixpath.join(log.deletes_dir, n, "scope")
-        for n in names
-        if n.startswith(EQ_DELETE_PREFIX)
-    ]
-    out: set[str] = set()
-    for paths in (pos_paths, scope_paths):
-        if paths:
-            out |= {
-                r["relpath"]
-                for r in spark.read.parquet(*paths)
-                .select("relpath")
-                .distinct()
-                .collect()
-            }
-    return out
+    return _entry_relpaths(
+        spark,
+        [
+            posixpath.join(log.deletes_dir, n, "scope")
+            if n.startswith(EQ_DELETE_PREFIX)
+            else posixpath.join(log.deletes_dir, n)
+            for n in names
+        ],
+    )
 
 
 def snapshot_delete(
@@ -4154,28 +4338,14 @@ def mor_pending_keys(
     frames: list[DataFrame] = []
     if pending is not None and pending.pos is not None:
         # bounded entry metadata: pyarrow driver-side when local (r15,
-        # see _mor_touched_relpaths), Spark job otherwise. The entry
-        # schema is fixed by _write_delete_file, so the fallback (and
-        # the broadcast read below) declare it explicitly — no
+        # see _entry_relpaths), Spark job otherwise. The entry schema
+        # is fixed by _write_delete_file, so the fallback (and the
+        # broadcast read below) declare it explicitly — no
         # schema-inference footer pass, and no DataFrame is built at
         # all on the probe-only path (r16, VERDICT task 7).
-        _entry_schema = "relpath string, pos long"
-        try:
-            touched = _entry_relpaths_pyarrow(
-                pending.pos[0], 1 << 62
-            )
-        except Exception:
-            touched = {
-                r["relpath"]
-                for r in spark.read.schema(_entry_schema)
-                .parquet(*pending.pos[0])
-                .select("relpath")
-                .distinct()
-                .collect()
-            }
-        affected = sorted(touched or ())
+        affected = sorted(_entry_relpaths(spark, pending.pos[0]))
         if affected:
-            dels = spark.read.schema(_entry_schema).parquet(
+            dels = spark.read.schema("relpath string, pos long").parquet(
                 *pending.pos[0]
             )
             src, rel, pos = _read_relpaths(
@@ -4198,19 +4368,8 @@ def mor_pending_keys(
         if set(key_cols) <= set(keys.columns):
             frames.append(keys.select(*key_cols))
             continue
-        try:
-            scope = sorted(
-                _entry_relpaths_pyarrow([scope_path], 1 << 62) or ()
-            )
-        except Exception:
-            scope = [
-                r["relpath"]
-                for r in spark.read.parquet(scope_path)
-                .select("relpath")
-                .collect()
-            ]
         live = {p for p, _ in log.files(v)}
-        scope = [p for p in scope if p in live]
+        scope = sorted(_entry_relpaths(spark, [scope_path]) & live)
         if not scope:
             continue
         src = _read_relpaths(spark, table_root, scope, declared)
@@ -4330,10 +4489,7 @@ def snapshot_delete_by_key(
                 "scanned_files": 0,
                 "delete_files": len(log.delete_files(base_version)),
             }
-        scope_df = spark.createDataFrame(
-            [(p,) for p in scope_rels], "relpath string"
-        )
-        name, n_keys = _write_eq_delete_dir(spark, log, keys, scope_df)
+        name, n_keys = _write_eq_delete_dir(spark, log, keys, scope_rels)
         if n_keys == 0:
             _rm(spark, posixpath.join(log.deletes_dir, name))
             return {
@@ -4716,12 +4872,35 @@ def snapshot_rollback(
     return {"version": v, "rolled_back_to": to_version, "noop": False}
 
 
+def _arrow_key_rows(tbl) -> list[tuple]:
+    """Rows of a driver-held key table as the Python values Spark's
+    `collect()` gives for the same rows. pyarrow agrees for every type
+    but TIMESTAMP, which it returns UTC-aware where Spark returns a
+    naive local-time datetime — converted here with Spark's own
+    `fromInternal`, because a probe value of another type can miss
+    its bloom (a false negative: the file leaves the scope and its
+    deleted rows come back)."""
+    import pyarrow as pa
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    cols = []
+    for col in tbl.columns:
+        t = col.type
+        if pa.types.is_timestamp(t):
+            conv = (TimestampType() if t.tz else TimestampNTZType())
+            micros = col.cast(pa.timestamp("us", t.tz)).cast(pa.int64())
+            cols.append([conv.fromInternal(v) for v in micros.to_pylist()])
+        else:
+            cols.append(col.to_pylist())
+    return list(zip(*cols))
+
+
 def _eq_scope(
     spark: SparkSession,
     log: SnapshotLog,
     base_version: int,
     key_cols: list[str],
-    keys_df: DataFrame,
+    keys,
     relpaths: list[str],
 ) -> list[str]:
     """Scope of a new equality-delete entry: the base snapshot's files
@@ -4733,11 +4912,16 @@ def _eq_scope(
     retire the entry), so a keyed GDPR delete on a stats-annotated
     sort column scopes O(matching files), not O(table). Falls back to
     the full file list whenever the probe cannot PROVE exclusion
-    (no metadata, key set past MERGE_KEY_PROBE_CAP)."""
+    (no metadata, key set past MERGE_KEY_PROBE_CAP). `keys` is a
+    DataFrame (collected here, capped) or a pyarrow table of unique
+    keys the caller already holds on the driver."""
     stat_cols, bloom_cols = _parent_meta_cols(log, base_version)
     if not (stat_cols or bloom_cols):
         return relpaths
-    klist = keys_df.dropDuplicates().limit(MERGE_KEY_PROBE_CAP + 1).collect()
+    if isinstance(keys, DataFrame):
+        klist = keys.dropDuplicates().limit(MERGE_KEY_PROBE_CAP + 1).collect()
+    else:
+        klist = _arrow_key_rows(keys)
     if len(klist) > MERGE_KEY_PROBE_CAP:
         return relpaths
     # a key with a NULL component matches no row (SQL equality), so it
@@ -4801,6 +4985,11 @@ def snapshot_upsert_mor(
     added = _land_spec_files(spark, log, table_root, source_df, base_version)
     if not added:
         raise ValueError("snapshot_upsert_mor: the frame wrote no files")
+    # the keys are unique (checked above): up to MERGE_KEY_PROBE_CAP of
+    # them are collected ONCE, the bound the merge probe already
+    # collects, and both the scope probe and the entry's keys/ write
+    # use them on the driver; past it both stay distributed
+    keys = keys_df.toArrow() if n_source <= MERGE_KEY_PROBE_CAP else keys_df
     # optimistic retry: the EXPENSIVE half (landing the batch's data
     # files) happened exactly once above and stays valid — a lost race
     # re-derives only the metadata half (delete-entry scope + carried
@@ -4814,14 +5003,11 @@ def snapshot_upsert_mor(
         new_list = [[nm, cnt] for nm, cnt in log.delete_files(base_version)]
         name = None
         scope_rels = _eq_scope(
-            spark, log, base_version, key_cols, keys_df,
+            spark, log, base_version, key_cols, keys,
             [p for p, _ in base_files],
         ) if base_files else []
         if scope_rels:
-            scope_df = spark.createDataFrame(
-                [(p,) for p in scope_rels], "relpath string"
-            )
-            name, n_keys = _write_eq_delete_dir(spark, log, keys_df, scope_df)
+            name, n_keys = _write_eq_delete_dir(spark, log, keys, scope_rels)
             new_list.append([name, n_keys])
         manifest = _carried_manifest(
             spark, log, base_version, base_files, added

@@ -92,9 +92,10 @@ def _commit_batch(
     for _ in range(50):
         base = log.latest()
         try:
-            # manifest-append: parent rows union the new files, built
-            # distributed — the table's file list never visits the
-            # driver, so per-batch commit cost is O(batch) at any size
+            # manifest-append: parent rows union the new files, each
+            # annotated like the parent's (SnapshotLog.commit_append:
+            # on the driver under DISTRIBUTED_PRUNE_THRESHOLD files,
+            # distributed past it)
             return log.commit_append(added, op=op, parent=base)
         except SnapshotConflictError:
             continue

@@ -422,7 +422,8 @@ def test_fuzz_session_window_boundaries(spark, events):
 def pushdown_table(spark, tmp_path_factory):
     """A logged table engineered for pruning traps: 8 range files
     with stats on k, NULL ks in a side file, a g column with strings,
-    and one stats-less appended file (must never be pruned)."""
+    and appended files whose footers hold no k range (all-NULL k, must
+    never be pruned on k) or no g range."""
     from hbase_compact_spark.compaction.snapshots import (
         SnapshotLog,
         annotate_stats,
@@ -443,10 +444,12 @@ def pushdown_table(spark, tmp_path_factory):
     log.bootstrap()
     annotate_stats(spark, root, cols=["k", "g"])
     # NULL ks + fresh keys appended AFTER the stats pass:
-    # append_partitioned carries the parent's stats payload but the
-    # appended files land WITHOUT their own — conservative pruning
-    # must always keep them (the fuzz exercises exactly that edge,
-    # plus NULL-k rows that only IS NULL / <=> NULL may match)
+    # append_partitioned carries the parent's stats payload and gives
+    # the appended files their own footer stats on the parent's
+    # columns — but an all-NULL column has no min/max, so a file
+    # holding only NULL k carries no k range and conservative pruning
+    # must always keep it (the fuzz exercises exactly that edge, plus
+    # NULL-k rows that only IS NULL / <=> NULL may match)
     import posixpath
 
     extra = spark.createDataFrame(
@@ -544,8 +547,10 @@ def test_fuzz_pushdown_prune_equals_full_scan(spark, pushdown_table, where):
 
 def test_fuzz_pushdown_actually_prunes(spark, pushdown_table):
     """The fuzz above proves safety; this pins POWER — a selective
-    range really drops files at planning (and keeps the stats-less
-    appended file, which can never be ruled out)."""
+    range really drops files at planning, appended files included
+    (they carry their own footer stats), and keeps the appended file
+    with no k range, which can never be ruled out."""
+    from hbase_compact_spark.compaction.snapshots import SnapshotLog
     from hbase_compact_spark.sources.snapshot_table import (
         SnapshotTableReader,
         table_schema,
@@ -555,11 +560,18 @@ def test_fuzz_pushdown_actually_prunes(spark, pushdown_table):
     reader = SnapshotTableReader(table_schema(root), {"path": root})
     reader._preds = {"k": (130, 140)}
     plan, parts = reader.plan()
-    # [130, 140] lives inside ONE of the 8 annotated range files; the
-    # stats-less appended files can never be ruled out and must all
-    # survive — conservative, the exact filter re-applies on top
+    # [130, 140] lives inside ONE of the 8 annotated range files; of
+    # the appended files (k 5000, 6000 and NULL) exactly those with no
+    # k range survive — conservative, the exact filter re-applies on
+    # top
+    log = SnapshotLog(None, root)
+    stats = log.stats(log.latest())
+    appended = [p for p, _ in log.files(log.latest()) if p.startswith("append-")]
+    no_k = {p for p in appended if "k" not in stats[p]["cols"]}
+    assert appended and all(p in stats for p in appended)
     kept = plan["paths"]
-    assert plan["pruned_files"] == 7
+    assert plan["pruned_files"] == 7 + len(appended) - len(no_k)
+    assert {p for p in kept if p.startswith("append-")} == no_k
     assert sum(p.startswith("part-") for p in kept) == 1
     assert all(
         p.startswith(("part-", "append-")) for p in kept
