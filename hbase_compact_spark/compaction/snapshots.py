@@ -3156,26 +3156,6 @@ def _write_change_frames(
     return name, n_del, n_ins
 
 
-def read_changelog(
-    spark: SparkSession, table_root: str, version: int
-) -> DataFrame | None:
-    """The commit-time change artifact of a rewrite version as a
-    DataFrame with `_change_type` ('delete'/'insert'), or None when
-    the version carries none — same shape as read_changes(v-1, v)."""
-    log = SnapshotLog(spark, table_root)
-    entry = log.read(version).get("changelog")
-    if not entry:
-        return None
-    base = posixpath.join(
-        table_root, SNAPSHOT_DIR, CHANGES_SUBDIR, entry[0]
-    )
-    deletes = spark.read.parquet(posixpath.join(base, "deletes"))
-    inserts = spark.read.parquet(posixpath.join(base, "inserts"))
-    return inserts.withColumn("_change_type", F.lit("insert")).unionByName(
-        deletes.withColumn("_change_type", F.lit("delete"))
-    )
-
-
 def _commit_rewrite(
     spark: SparkSession,
     log: SnapshotLog,

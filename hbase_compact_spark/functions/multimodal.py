@@ -350,29 +350,6 @@ def _det_bytes(seed: str, n: int) -> bytes:
     return bytes(out[:n])
 
 
-def with_bmp_payload(df: DataFrame, side: int = 16) -> DataFrame:
-    """Attach a synthetic (side x side) 24-bit BMP payload derived
-    deterministically from each row's text — real container bytes, so
-    the downstream decode exercises the actual parser."""
-    ensure_package_on_executors(df.sparkSession)
-
-    def attach(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                encode_bmp(
-                    np.frombuffer(
-                        _det_bytes(f"bmp:{t}", side * side * 3), dtype=np.uint8
-                    ).reshape(side, side, 3)
-                )
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return fan_out(df.select("doc_id", "text")).mapInPandas(
-        attach, schema="doc_id long, payload binary"
-    )
-
-
 def with_image_payload(df: DataFrame, side: int = 16) -> DataFrame:
     """Attach a synthetic image payload in a MIXED container format —
     even doc_ids get 24-bit BMP, odd doc_ids get 8-bit truecolor PNG

@@ -1344,7 +1344,7 @@ def compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END compaction of a ~1k-small-file table: hardlink-copy
     the fragmented staging into a fresh working dir, then
     compact_table() — per-partition bin planning (QHC.java:151 >1-file
-    gate), distributed rewrite, count+fingerprint verification and
+    gate), rewrite, count+fingerprint verification and
     manifest-guarded atomic swap (executor.py). Returns one row per
     partition with before/after file counts and row counts — the
     stats report the reference prints per region (QHC.java:219-270) —
@@ -1354,11 +1354,13 @@ def compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     25.6 MB/s (QHC.java:170, BASELINE.md) is part of the report
     itself; the pinned test requires the bar to be beaten. The
     per-partition rows stay deterministic (only the total row carries
-    timing; BENCH_r{N} carries the wall time as before). Scale: each
-    partition rewrite is its own distributed
-    job and partitions run concurrently (adaptive concurrency), so
-    the shape scales to region counts the way the reference's serial
-    loop cannot."""
+    timing; BENCH_r{N} carries the wall time as before). Scale: a
+    partition under executor._ARROW_REWRITE_MAX_BYTES (every one of a
+    local staging up to sf0.1) is rewritten on the driver by the
+    pyarrow kernel with no Spark job, a larger or remote one by its
+    own distributed job, and partitions run concurrently (adaptive
+    concurrency), so the shape scales to region counts the way the
+    reference's serial loop cannot."""
     import shutil
     import time
     import uuid

@@ -196,10 +196,15 @@ def test_compaction_two_level_partitions(spark, tmp_path):
     assert _fingerprint(spark.read.parquet(root)) == before
 
 
-def test_compaction_preserves_sorted_runs(spark, tmp_path):
+def test_compaction_preserves_sorted_runs(spark, tmp_path, monkeypatch):
     """sort_by keeps the HFile sorted-run property in the rewritten
-    parquet: every output file is internally sorted on the key."""
+    parquet: every output file is internally sorted on the key. The
+    cap at 0 keeps this on the Spark rewrite; tests/test_arrow_rewrite.py
+    covers the driver-side kernel's order."""
+    import hbase_compact_spark.compaction.executor as ex
     from hbase_compact_spark.tables import load_table
+
+    monkeypatch.setattr(ex, "_ARROW_REWRITE_MAX_BYTES", 0)
 
     root = str(tmp_path / "sorted")
     ev = load_table(spark, SF_DIR, "events").drop("ts")
@@ -297,7 +302,7 @@ def test_compaction_trash_and_purge(spark, small_files_table):
     assert purge_trash(spark, root, older_than_s=0) == 0
 
 
-def test_batch_tag_adversarial_partition_names(spark, tmp_path):
+def test_batch_tag_adversarial_partition_names(spark, tmp_path, monkeypatch):
     """The batched rewrite derives each row's partition tag from
     input_file_name; partition dirs with regex metacharacters, spaces,
     %-signs (partitionBy escape-sensitive) and NESTED levels (which
@@ -308,6 +313,7 @@ def test_batch_tag_adversarial_partition_names(spark, tmp_path):
     import hbase_compact_spark.compaction.executor as ex
     from hbase_compact_spark.tables import load_table
 
+    monkeypatch.setattr(ex, "_ARROW_REWRITE_MAX_BYTES", 0)  # the batch
     root = str(tmp_path / "adv")
     ev = load_table(spark, SF_DIR, "events").drop("ts").limit(2000)
     rels = ["k=a.b+c", "k=x y(1)", "n=1/m=2.2%f", "n=1/m=d-e"]
@@ -375,6 +381,7 @@ def test_concurrent_partial_failure_heals_on_rerun(
     is the swap — inject there."""
     import hbase_compact_spark.compaction.executor as ex
 
+    monkeypatch.setattr(ex, "_ARROW_REWRITE_MAX_BYTES", 0)  # the batch
     root = small_files_table
     before = _fingerprint(spark.read.parquet(root))
     ckpt = CompactionCheckpoint(str(tmp_path / "pf.json"))
@@ -388,13 +395,12 @@ def test_concurrent_partial_failure_heals_on_rerun(
         return real(spark_, tmp_dir, dest_dir, old_files, trash_dir,
                     rel=rel)
 
-    monkeypatch.setattr(ex, "_swap_files", flaky)
-    with pytest.raises(RuntimeError, match="injected"):
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="injected"):
+        m.setattr(ex, "_swap_files", flaky)
         compact_table(
             spark, root, target_bytes=64 * 1024 * 1024,
             checkpoint=ckpt, concurrency=4,
         )
-    monkeypatch.undo()
 
     # data never corrupted; p1 not checkpointed; no batch tmp left
     assert _fingerprint(spark.read.parquet(root)) == before
@@ -431,6 +437,7 @@ def test_pool_partial_failure_heals_on_rerun(
     target = max(1, min(sizes) // 4)
     before = _fingerprint(spark.read.parquet(root))
     ckpt = CompactionCheckpoint(str(tmp_path / "pf2.json"))
+    monkeypatch.setattr(ex, "_ARROW_REWRITE_MAX_BYTES", 0)  # _compact_one
 
     real = ex._compact_one
 
@@ -442,13 +449,12 @@ def test_pool_partial_failure_heals_on_rerun(
         return real(spark_, table_root, rel, files, n_bins, sort_by,
                     trash_dir, **kw)
 
-    monkeypatch.setattr(ex, "_compact_one", flaky)
-    with pytest.raises(RuntimeError, match="injected"):
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="injected"):
+        m.setattr(ex, "_compact_one", flaky)
         compact_table(
             spark, root, target_bytes=target, checkpoint=ckpt,
             concurrency=4,
         )
-    monkeypatch.undo()
 
     assert _fingerprint(spark.read.parquet(root)) == before
     assert "region=p1" not in ckpt.load()
@@ -477,10 +483,12 @@ def test_compaction_verification_failure_aborts(spark, small_files_table, monkey
     }
 
     # the per-partition path verifies via _fingerprint; the batched
-    # path combines per-rel lanes via _xor_all — poison both seams so
+    # path combines per-rel lanes via _xor_all; the driver-side kernel
+    # compares each file with _arrow_equal — poison all three seams so
     # whichever path runs must detect a "corrupted" rewrite
     monkeypatch.setattr(ex, "_fingerprint", lambda df: (-1, -1))
     monkeypatch.setattr(ex, "_xor_all", lambda vals: -12345)
+    monkeypatch.setattr(ex, "_arrow_equal", lambda a, b: False)
     with pytest.raises(RuntimeError, match="verification failed"):
         compact_table(spark, root, target_bytes=64 * 1024 * 1024)
     monkeypatch.undo()
@@ -1059,7 +1067,7 @@ def test_reconcile_handles_glob_metachar_root(spark, tmp_path):
     assert reconcile_swaps(spark, root) == 0  # idempotent
 
 
-def test_batch_compacts_uri_root_multilevel(spark, tmp_path):
+def test_batch_compacts_uri_root_multilevel(spark, tmp_path, monkeypatch):
     """compact_table with the TABLE ROOT given as a file:// URI and
     MULTI-LEVEL partitions (forces the regexp tag branch of the
     batched rewrite). Regression: the tag anchor used
@@ -1067,8 +1075,10 @@ def test_batch_compacts_uri_root_multilevel(spark, tmp_path):
     cwd, collapses //) — every row tagged '' and the unknown-tag
     guard killed the whole batch after the rewrite. The anchor now
     derives from the scheme-stripped qualified root, like listing_df."""
+    import hbase_compact_spark.compaction.executor as ex
     from hbase_compact_spark.tables import load_table
 
+    monkeypatch.setattr(ex, "_ARROW_REWRITE_MAX_BYTES", 0)  # the batch
     plain = str(tmp_path / "uri_tbl")
     ev = load_table(spark, SF_DIR, "events").drop("ts").limit(2000)
     rels = ["n=1/m=a", "n=1/m=b", "n=2/m=c"]
@@ -1100,7 +1110,7 @@ def test_batch_compacts_uri_root_multilevel(spark, tmp_path):
     assert _fingerprint(spark.read.parquet(plain)) == before
 
 
-def test_batch_compacts_numeric_partition_names(spark, tmp_path):
+def test_batch_compacts_numeric_partition_names(spark, tmp_path, monkeypatch):
     """Partition directories named like numbers ("2024", "007") go
     through the batched rewrite. Regression: the read-back inferred
     the batch's tag column as int, so its per-rel counts were keyed
@@ -1110,6 +1120,9 @@ def test_batch_compacts_numeric_partition_names(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    import hbase_compact_spark.compaction.executor as ex
+
+    monkeypatch.setattr(ex, "_ARROW_REWRITE_MAX_BYTES", 0)  # the batch
     root = str(tmp_path / "numeric")
     rels = ["2024", "2025", "007"]
     for p, rel in enumerate(rels):
@@ -1147,6 +1160,7 @@ def test_batch_skips_partition_with_concurrent_arrival(
     import hbase_compact_spark.compaction.executor as ex
     from hbase_compact_spark.tables import load_table
 
+    monkeypatch.setattr(ex, "_ARROW_REWRITE_MAX_BYTES", 0)  # the batch
     root = small_files_table
     n_before = spark.read.parquet(root).count()
     extra = (
@@ -1195,3 +1209,67 @@ def test_batch_skips_partition_with_concurrent_arrival(
     )
     assert {r.partition for r in report2.compacted} == {"region=p1"}
     assert spark.read.parquet(root).count() == n_before + 7
+
+
+def test_driver_rewrite_keeps_concurrent_arrival(
+    spark, small_files_table, tmp_path, monkeypatch
+):
+    """The driver-side kernel's twin of the concurrent-arrival test: it
+    reads the PLANNED file list, never the directory, so a file landing
+    after planning is neither read nor retired. The partition still
+    compacts, and the late file survives untouched beside the output."""
+    import hbase_compact_spark.compaction.executor as ex
+    from hbase_compact_spark.tables import load_table
+
+    root = small_files_table
+    n_before = spark.read.parquet(root).count()
+    extra = (
+        load_table(spark, SF_DIR, "events").drop("ts").limit(7)
+        .localCheckpoint()
+    )
+    p1 = os.path.join(root, "region=p1")
+    real_walk = ex._walk_table
+    late: list[str] = []
+
+    def walk(tr):
+        out = real_walk(tr)
+        if not late:
+            # a concurrent writer lands one file right after planning
+            names = set(os.listdir(p1))
+            extra.coalesce(1).write.mode("append").parquet(p1)
+            late.extend(
+                f for f in set(os.listdir(p1)) - names if f.endswith(".parquet")
+            )
+        return out
+
+    before = _fingerprint(spark.read.parquet(root))
+    p1_before = _fingerprint(spark.read.parquet(p1))
+    added = _fingerprint(extra)
+    monkeypatch.setattr(ex, "_walk_table", walk)
+
+    def spark_rewrite(*a, **kw):
+        raise AssertionError("the kernel handed a partition to Spark")
+
+    monkeypatch.setattr(ex, "_compact_one", spark_rewrite)
+    report = compact_table(
+        spark, root, target_bytes=64 * 1024 * 1024,
+        checkpoint=CompactionCheckpoint(str(tmp_path / "ka.json")),
+    )
+    assert len(late) == 1
+    assert {r.partition for r in report.compacted} == {
+        "region=p0", "region=p1", "region=p2",
+    }
+    # p1 is exactly the compacted output plus the untouched late file
+    p1_files = sorted(f for f in os.listdir(p1) if f.endswith(".parquet"))
+    assert len(p1_files) == 2 and late[0] in p1_files
+    (out,) = [f for f in p1_files if f != late[0]]
+    assert out.startswith("compacted-")
+    assert _fingerprint(spark.read.parquet(os.path.join(p1, out))) == p1_before
+    assert _fingerprint(spark.read.parquet(os.path.join(p1, late[0]))) == added
+    # the table is the old rows plus the 7 late ones: none lost, none
+    # duplicated (count and both fingerprint lanes add up)
+    assert spark.read.parquet(root).count() == n_before + 7
+    late_fp = _fingerprint(extra.withColumn("region", F.lit("p1")))
+    assert _fingerprint(spark.read.parquet(root)) == (
+        before[0] + late_fp[0], before[1] ^ late_fp[1], before[2] + late_fp[2],
+    )
