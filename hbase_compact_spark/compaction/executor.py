@@ -22,10 +22,11 @@ Differences from the reference, by design:
 
 Scale: a partition of a local table that the driver-side walk
 listed, of at most _ARROW_REWRITE_MAX_BYTES and not z-ordered, is
-rewritten on the driver by one pyarrow kernel (_rewrite_arrow) with no
-Spark job, the way Chukonu runs small work in a native engine beside
-Spark; it reads, sorts, cuts, writes and verifies the same way the
-Spark rewrite does, and hands a partition it cannot encode to it.
+rewritten on the driver by one pyarrow kernel (_arrow_kernel, which
+the snapshot log's compaction shares) with no Spark job, the way
+Chukonu runs small work in a native engine beside Spark; it reads,
+sorts, cuts, writes and verifies the same way the Spark rewrite does,
+and hands a partition it cannot encode to it.
 Every other partition is a distributed Spark job: its own
 (_compact_one), or one shared batch for many small single-bin
 partitions (_compact_batch). Rewrites run concurrently, enough to
@@ -95,9 +96,10 @@ _BATCH_MAX_PARTITION_BYTES = 16 * 1024 * 1024
 # entries walk in 0.8-1.2 s and hold 36 MB.
 _WALK_MAX_ENTRIES = 200_000
 # A partition of at most this many bytes, in a table listed by
-# _walk_table, is rewritten on the driver by _rewrite_arrow, with no
-# Spark job. The cap bounds the driver's memory: the kernel holds the
-# partition decoded, its sorted copy and one output file read back.
+# _walk_table or in a local snapshot-logged table, is rewritten on the
+# driver by _arrow_kernel, with no Spark job. The cap bounds the
+# driver's memory: the kernel holds the partition decoded, its sorted
+# copy and one output file read back.
 # Measured on a 4-core host, a 16 MB partition of 88 files (206k
 # events rows) at the cap: 0.40 s (0.66 s sorted), Arrow pool peak
 # 62 MB, driver RSS +112 MB. The rewrite pool runs up to 16 such
@@ -525,8 +527,8 @@ def _compact_one(
             f"compaction verification failed for {rel}: "
             f"rows {n_before}->{n_after}, fingerprint changed"
         )
-    new_names = _swap_files(
-        spark, tmp_dir, part_dir, [p for p, _ in files], trash_dir, rel=rel
+    new_names = _swap_or_clean(
+        spark, tmp_dir, part_dir, [p for p, _ in files], trash_dir, rel
     )
     return n_after, new_names
 
@@ -606,42 +608,44 @@ def _sort_indices(tbl: pa.Table, sort_by: list[str]) -> pa.Array | None:
     )
 
 
-def _rewrite_arrow(
-    spark: SparkSession,
-    table_root: str,
-    rel: str,
-    files: list[tuple[str, int]],
+def _arrow_kernel(
+    paths: list[str],
+    tmp: str,
     n_bins: int,
     sort_by: list[str] | None,
-    trash_dir: str | None = None,
-) -> tuple[int, list[str]] | None:
-    """Rewrite one small partition of a local table on the driver with
-    pyarrow, launching no Spark job; returns (verified row count, new
-    file names), as _compact_one does, or None when the partition
-    needs Spark's semantics and _compact_one must rewrite it.
+    rel: str,
+    *,
+    schema: StructType | None = None,
+    row_filter=None,
+) -> int | None:
+    """The driver-side rewrite kernel, shared by compact_table
+    (_rewrite_arrow) and snapshot_compact: rewrite the local Parquet
+    files `paths` into new files under the local dir `tmp` with
+    pyarrow, launching no Spark job. Returns the verified row count
+    written, or None when the files need Spark's semantics (the caller
+    then runs its Spark rewrite). On None or an exception `tmp` is
+    gone; on success it holds only the new files.
 
-    It reads the PLANNED files (`files`, `file:` URIs from _walk_table),
-    never the directory, so a file that lands meanwhile is neither read
-    nor retired. Files whose Parquet schemas or key-value metadata
-    differ go to Spark, which owns schema merging; so do files pyarrow
-    16 cannot write alike: int32/int64 decimals (Spark's encoding up to
-    precision 18) and codecs outside _ARROW_CODECS. The rows are
-    concatenated in file order, stably ordered by `sort_by` (Spark's
-    ascending NULLS FIRST, _sort_indices), and cut into
-    min(n_bins, rows) contiguous slices of equal row count, one file
-    each, written in the source's encoding: its codec, INT96 when it
-    used INT96, its key-value metadata. A written footer whose schema
-    tree or metadata differs from the source's (_parquet_layout) drops
-    the tmp dir and hands the partition to Spark.
+    Files whose Parquet schemas or key-value metadata differ go to
+    Spark, which owns schema merging; so do files pyarrow 16 cannot
+    write alike: int32/int64 decimals (Spark's encoding up to
+    precision 18) and codecs outside _ARROW_CODECS. With a declared
+    Spark `schema`, the files' columns must be exactly its fields, by
+    name and Spark type in order, or Spark reads them through it.
+    `row_filter(i, table)`, given the rows of `paths[i]` as read,
+    returns the rows to keep, or None to hand the files to Spark. The
+    kept rows are concatenated in file order, stably ordered by
+    `sort_by` (Spark's ascending NULLS FIRST, _sort_indices), and cut
+    into min(n_bins, rows) contiguous slices of equal row count, one
+    file each, written in the source's encoding: its codec, INT96 when
+    it used INT96, its key-value metadata. A written footer whose
+    schema tree or metadata differs from the source's
+    (_parquet_layout) hands the files to Spark.
 
     Verification is no weaker than _compact_one's: the rows read equal
     the source footers' row total, and every written file, read back,
-    equals its slice of the ordered source exactly (_arrow_equal).
-    Otherwise the tmp dir is removed and RuntimeError raised, before
-    any swap. The tmp dir and the swap are _compact_one's: the same
-    stable `_compact_tmp_<md5(rel)>` name, then _swap_files' manifest
-    protocol."""
-    paths = [uri[len("file:") :] for uri, _ in files]
+    equals its slice of the ordered rows exactly (_arrow_equal).
+    Otherwise RuntimeError is raised."""
     metas = [pq.read_metadata(p) for p in paths]
     layout = _parquet_layout(metas[0])
     if any(_parquet_layout(m) != layout for m in metas[1:]):
@@ -659,6 +663,7 @@ def _rewrite_arrow(
         for c in cols
     ):
         return None
+    int96 = {c.path for c in cols if c.physical_type == "INT96"}
     # Spark reads INT96 at microseconds: the same values, and no
     # nanosecond overflow outside 1677-2262
     tables = [
@@ -666,13 +671,22 @@ def _rewrite_arrow(
     ]
     if any(not t.schema.equals(tables[0].schema) for t in tables[1:]):
         return None
-    src = pa.concat_tables(tables)
-    n = src.num_rows
-    if n != sum(m.num_rows for m in metas):
+    if schema is not None and _spark_fields(tables[0].schema, int96) != [
+        (f.name, f.dataType) for f in schema.fields
+    ]:
+        return None
+    n_read = sum(t.num_rows for t in tables)
+    if n_read != sum(m.num_rows for m in metas):
         raise RuntimeError(
-            f"compaction verification failed for {rel}: read {n} rows, "
+            f"compaction verification failed for {rel}: read {n_read} rows, "
             f"footers hold {sum(m.num_rows for m in metas)}"
         )
+    if row_filter is not None:
+        tables = [row_filter(i, t) for i, t in enumerate(tables)]
+        if any(t is None for t in tables):
+            return None
+    src = pa.concat_tables(tables)
+    n = src.num_rows
     if sort_by:
         order = _sort_indices(src, sort_by)
         if order is None:
@@ -683,21 +697,26 @@ def _rewrite_arrow(
     bounds = [n * i // k for i in range(k + 1)]
     opts = {
         "compression": codec,
-        "use_deprecated_int96_timestamps": any(
-            c.physical_type == "INT96" for c in cols
-        ),
+        # dictionary pages only where the source has them: Spark's
+        # writer drops a dictionary that does not pay, pyarrow keeps
+        # every one (files 18% larger on the served benchmark table)
+        "use_dictionary": [
+            first.row_group(0).column(i).path_in_schema
+            for i in range(first.num_columns)
+            if first.row_group(0).column(i).has_dictionary_page
+        ]
+        if first.num_row_groups
+        else True,
+        "use_deprecated_int96_timestamps": bool(int96),
         # pyarrow 16 drops ALL key-value metadata unless it also stores
         # its Arrow schema; the read-back check below shows that entry
         # changes no type pyarrow reads, and Spark ignores it
         "store_schema": True,
     }
 
-    root = _local_root(table_root)
-    tmp_name = f"_compact_tmp_{hashlib.md5(rel.encode()).hexdigest()[:12]}"
-    tmp = os.path.join(root, tmp_name)
     shutil.rmtree(tmp, ignore_errors=True)  # a crashed run's leftover
     os.makedirs(tmp)
-    swapped = False
+    done = False
     try:
         written = []
         slices = [src.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])]
@@ -716,21 +735,66 @@ def _rewrite_arrow(
                     f"compaction verification failed for {rel}: "
                     f"{posixpath.basename(path)} differs from its source rows"
                 )
-        new_names = _swap_files(
-            spark,
-            posixpath.join(table_root, tmp_name),
-            posixpath.join(table_root, rel) if rel else table_root,
-            [uri for uri, _ in files],
-            trash_dir,
-            rel=rel,
-        )
-        swapped = True
+        done = True
     finally:
-        # once the swap manifest is down, the tmp dir is reconcile_swaps'
-        if not swapped and not os.path.exists(
-            os.path.join(root, rel, SWAP_MANIFEST_NAME)
-        ):
+        if not done:
             shutil.rmtree(tmp, ignore_errors=True)
+    return n
+
+
+def _spark_fields(schema: pa.Schema, int96: set[str]) -> list | None:
+    """[(name, Spark type)] of the columns of an Arrow schema read from
+    Parquet, as Spark's reader types them: a naive timestamp is
+    TIMESTAMP_NTZ unless it was stored as INT96. None when a column has
+    no Spark type."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    out = []
+    for f in schema:
+        naive = f.name not in int96
+        try:
+            out.append((f.name, from_arrow_type(f.type, prefer_timestamp_ntz=naive)))
+        except TypeError:
+            return None
+    return out
+
+
+def _rewrite_arrow(
+    spark: SparkSession,
+    table_root: str,
+    rel: str,
+    files: list[tuple[str, int]],
+    n_bins: int,
+    sort_by: list[str] | None,
+    trash_dir: str | None = None,
+) -> tuple[int, list[str]] | None:
+    """Rewrite one small partition of a local table on the driver
+    (_arrow_kernel), launching no Spark job; returns (verified row
+    count, new file names), as _compact_one does, or None when the
+    partition needs Spark's semantics and _compact_one must rewrite it.
+
+    It reads the PLANNED files (`files`, `file:` URIs from _walk_table),
+    never the directory, so a file that lands meanwhile is neither read
+    nor retired. The tmp dir and the swap are _compact_one's: the same
+    stable `_compact_tmp_<md5(rel)>` name, then _swap_or_clean."""
+    tmp_name = f"_compact_tmp_{hashlib.md5(rel.encode()).hexdigest()[:12]}"
+    n = _arrow_kernel(
+        [uri[len("file:") :] for uri, _ in files],
+        os.path.join(_local_root(table_root), tmp_name),
+        n_bins,
+        sort_by,
+        rel,
+    )
+    if n is None:
+        return None
+    new_names = _swap_or_clean(
+        spark,
+        posixpath.join(table_root, tmp_name),
+        posixpath.join(table_root, rel) if rel else table_root,
+        [uri for uri, _ in files],
+        trash_dir,
+        rel,
+    )
     return n, new_names
 
 
@@ -1395,6 +1459,30 @@ def _swap_files(
     fs.delete(Path(tmp_dir), True)
     fs.delete(mpath, False)
     return [posixpath.basename(_uri_path(d)) for _, d in moves]
+
+
+def _swap_or_clean(
+    spark: SparkSession,
+    tmp_dir: str,
+    dest_dir: str,
+    old_files: list[str],
+    trash_dir: str | None,
+    rel: str,
+) -> list[str]:
+    """_swap_files, and on its failure the tmp dir removed unless the
+    swap manifest is down: before it, the partition is untouched and
+    the tmp dir is garbage; after it, the tmp dir is reconcile_swaps'
+    to finish from."""
+    try:
+        return _swap_files(
+            spark, tmp_dir, dest_dir, old_files, trash_dir, rel=rel
+        )
+    except BaseException:
+        fs, _, jvm = _hadoop_fs(spark, dest_dir)
+        manifest = jvm.org.apache.hadoop.fs.Path(dest_dir, SWAP_MANIFEST_NAME)
+        if not fs.exists(manifest):
+            _rm(spark, tmp_dir)
+        raise
 
 
 def _write_json(fs, Path, path, payload: dict) -> None:

@@ -43,9 +43,12 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hbase_compact_spark.compaction import executor
 from hbase_compact_spark.compaction.executor import (
+    _arrow_kernel,
     _fingerprint,
     _hadoop_fs,
+    _local_root,
     _rm,
     _uri_path,
 )
@@ -1370,6 +1373,7 @@ def _apply_eq_deletes(
             name += "_"
         return name
 
+    cols = df.columns
     for _name, keys_path, scope_path, n_keys in eq:
         taken = set(df.columns)
         km = _uniq("__eq_k", taken)
@@ -1395,7 +1399,8 @@ def _apply_eq_deletes(
             .filter(~(F.col(km).isNotNull() & F.col(sm).isNotNull()))
             .drop(km, sm)
         )
-    return df
+    # a join on key columns puts them first: restore the frame's order
+    return df.select(*cols)
 
 
 def _eq_keys_schema(keys_path: str, df: DataFrame):
@@ -1474,6 +1479,98 @@ def _mor_filter_scan(
     )
     df = _apply_mor(spark, df, rel, pos, pending)
     return df.drop(rel, pos)
+
+
+def _driver_mor_filter(log: SnapshotLog, version: int):
+    """The snapshot's pending delete entries as a driver-side row
+    filter for the rewrite kernel (executor._arrow_kernel):
+    `drop(relpath, table)` returns the rows of that data file, as read
+    with pyarrow, that survive every entry, or None when an entry
+    needs Spark's join. The entries are read once, here; the caller
+    holds them to MOR_BROADCAST_ROWS rows.
+
+    The semantics are _apply_mor's: a positional entry drops its row
+    index; an equality entry drops a row only in a file inside its
+    scope, and only when every key column equals a key row's value —
+    a NULL never matches, as in _apply_eq_deletes' join. A key column
+    whose Arrow type differs from the data column's, or whose values
+    Spark compares otherwise (floating NaN and -0.0, nested values),
+    goes to Spark."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    entries = [n for n, _ in log.delete_files(version)]
+    pos_names = [n for n in entries if not n.startswith(EQ_DELETE_PREFIX)]
+    pos_tbl = (
+        pa.concat_tables(
+            pq.read_table(
+                log._local(DELETES_SUBDIR, n), columns=["relpath", "pos"]
+            ).cast(pa.schema([("relpath", pa.string()), ("pos", pa.int64())]))
+            for n in pos_names
+        )
+        if pos_names
+        else None
+    )
+    eq = [
+        (
+            pq.read_table(
+                log._local(DELETES_SUBDIR, n, "keys"),
+                coerce_int96_timestamp_unit="us",
+            ),
+            set(
+                pq.read_table(
+                    log._local(DELETES_SUBDIR, n, "scope"), columns=["relpath"]
+                )
+                .column("relpath")
+                .to_pylist()
+            ),
+        )
+        for n in entries
+        if n.startswith(EQ_DELETE_PREFIX)
+    ]
+
+    def drop(relpath: str, tbl):
+        n = tbl.num_rows
+        dead = np.zeros(n, dtype=bool)
+        if pos_tbl is not None:
+            mine = pos_tbl.filter(pc.equal(pos_tbl["relpath"], relpath))
+            dead[mine["pos"].to_numpy()] = True
+        for keys, scope in eq:
+            if relpath not in scope:
+                continue
+            cols = keys.column_names
+            for c in cols:
+                t = keys.schema.field(c).type
+                if (
+                    tbl.column_names.count(c) != 1
+                    or tbl.schema.field(c).type != t
+                    or pa.types.is_floating(t)
+                    or pa.types.is_nested(t)
+                    or pa.types.is_dictionary(t)
+                ):
+                    return None
+            if len(cols) == 1:
+                hit = pc.is_in(
+                    tbl[cols[0]], value_set=keys[cols[0]], skip_nulls=True
+                )
+                dead |= hit.to_numpy(zero_copy_only=False)
+                continue
+            # a semi-join of the row indices: Arrow's join keys never
+            # match a NULL, like Spark's equi-join
+            idx = "__row"
+            while idx in cols:
+                idx += "_"
+            tagged = tbl.select(cols).append_column(idx, pa.array(np.arange(n)))
+            try:
+                hit = tagged.join(keys, keys=cols, join_type="left semi")
+            except (pa.ArrowNotImplementedError, pa.ArrowInvalid):
+                return None
+            dead[hit[idx].to_numpy()] = True
+        return tbl.filter(pa.array(~dead)) if dead.any() else tbl
+
+    return drop
 
 
 # MOR split-scan gate: past this many entry-affected files the read
@@ -2296,6 +2393,10 @@ def _footer_stats(local_path: str, cols: list[str] | None) -> tuple[int, dict]:
                 continue
         if isinstance(mn, bool) or not isinstance(mn, (int, float, str)):
             continue
+        if isinstance(mn, float):
+            # a zero bound is 0.0 whoever wrote the file: pyarrow writes
+            # a zero min as -0.0 (PARQUET-1222), Spark's writer as 0.0
+            mn, mx = mn + 0.0, mx + 0.0
         out[c] = [mn, mx]
     return int(md.num_rows), out
 
@@ -3269,11 +3370,26 @@ def snapshot_compact(
     """Append-only compaction under the snapshot log: qualifying
     partitions (>1 file and a strictly lower planned bin count — the
     reference's filenum>1 gate, QHC.java:151) are rewritten into fresh
-    uuid-named files, verified (row count + order-insensitive content
-    fingerprint, same gate as executor._compact_one), and ONE new
-    snapshot referencing old-files-minus-replaced-plus-new is
-    committed. Old files are not touched — readers of any retained
-    version keep working; `expire_snapshots` reclaims.
+    uuid-named files, verified, and ONE new snapshot referencing
+    old-files-minus-replaced-plus-new is committed. Old files are not
+    touched — readers of any retained version keep working;
+    `expire_snapshots` reclaims. A failed verification raises
+    RuntimeError and commits nothing; files this call already landed
+    are removed.
+
+    A partition of a local table of at most the executor's
+    _ARROW_REWRITE_MAX_BYTES, without `cluster_by`, while the pending
+    delete entries hold at most MOR_BROADCAST_ROWS rows, is rewritten
+    on the driver by the executor's kernel (executor._arrow_kernel)
+    with no Spark job: it applies the pending entries
+    (_driver_mor_filter), orders by `sort_by`, else the declared sort
+    order, and compares every written file exactly with its slice of
+    the rows. It hands back to Spark a partition whose files do not
+    hold exactly the declared data schema (an evolved schema), or that
+    it cannot encode or filter alike. Every other partition, and the
+    spec migration, is a Spark rewrite verified by a row count and
+    order-insensitive content fingerprint of both sides
+    (executor._fingerprint, the gate of executor._compact_one).
 
     `cluster_by` z-orders each rewrite (functions/zorder.py) so the
     new files carry tight per-file min/max on every clustered column;
@@ -3344,115 +3460,75 @@ def snapshot_compact(
     for relpath, size in base:
         by_part.setdefault(posixpath.dirname(relpath), []).append((relpath, size))
 
+    # a partition under the executor's cap takes its driver-side
+    # kernel, pending deletes applied by _driver_mor_filter, when the
+    # entries fit the bound every MOR read already holds them to
+    local_root = _local_root(table_root)
+    kernel_ok = (
+        local_root is not None
+        and not cluster_by
+        and sum(n for _, n in log.delete_files(base_version))
+        <= MOR_BROADCAST_ROWS
+    )
+    mor_drop = _driver_mor_filter(log, base_version) if kernel_ok else None
+
     keep: list[tuple[str, int]] = []
     added: list[tuple[str, int]] = []
     rewritten = 0
-    for part_rel in sorted(by_part):
-        files = by_part[part_rel]
-        total = sum(s for _, s in files)
-        n_bins = max(1, math.ceil(total / target_bytes))
-        has_pending = any(p in affected for p, _ in files)
-        if (len(files) <= 1 or n_bins >= len(files)) and not has_pending:
-            keep.extend(files)
-            continue
-        n_bins = min(n_bins, len(files))
-        srcs = [posixpath.join(table_root, p) for p, _ in files]
-        tmp_dir = posixpath.join(
-            table_root,
-            f"_snapcompact_tmp_{hashlib.md5(part_rel.encode()).hexdigest()[:12]}",
-        )
-        src = (
-            spark.read.schema(data_schema).parquet(*srcs)
-            if data_schema is not None
-            else spark.read.parquet(*srcs)
-        )
-        src = _mor_filter_scan(spark, table_root, src, pending)
-        if cluster_by:
-            from hbase_compact_spark.functions.zorder import cluster_by_zorder
-
-            writer = cluster_by_zorder(src, cluster_by, n_bins)
-        elif sort_by:
-            writer = src.repartition(n_bins).sortWithinPartitions(*sort_by)
-        elif declared_sort and all(c in src.columns for c in declared_sort):
-            # the table's DECLARED sort order (set_sort_order) is the
-            # default rewrite shape: range-clustered bins give each
-            # output file a disjoint key range, so compaction makes
-            # stats-pruning selectivity BETTER, never worse
-            writer = src.repartitionByRange(
-                n_bins, *declared_sort
-            ).sortWithinPartitions(*declared_sort)
-        else:
-            writer = src.repartition(n_bins)
-        writer.write.mode("overwrite").parquet(tmp_dir)
-        out = spark.read.parquet(tmp_dir)
-        if _fingerprint(src) != _fingerprint(out):
-            _rm(spark, tmp_dir)
-            raise RuntimeError(f"snapshot compaction verification failed: {part_rel}")
-        added.extend(
-            _move_tmp_files(
-                fs, Path, tmp_dir, table_root, part_rel, "compacted"
+    try:
+        for part_rel in sorted(by_part):
+            files = by_part[part_rel]
+            total = sum(s for _, s in files)
+            n_bins = max(1, math.ceil(total / target_bytes))
+            has_pending = any(p in affected for p, _ in files)
+            if (len(files) <= 1 or n_bins >= len(files)) and not has_pending:
+                keep.extend(files)
+                continue
+            n_bins = min(n_bins, len(files))
+            tmp_name = (
+                "_snapcompact_tmp_"
+                + hashlib.md5(part_rel.encode()).hexdigest()[:12]
             )
-        )
-        _rm(spark, tmp_dir)
-        rewritten += 1
-    migrated = 0
-    if migrate:
-        relpaths = [p for p, _ in migrate]
-        src = _read_relpaths(
-            spark, table_root, relpaths, data_schema, mor=pending
-        )
-        total = sum(s for _, s in migrate)
-        n_bins = max(1, math.ceil(total / target_bytes))
-        hp_cols = []
-        aug = src
-        for raw in spec["partition_by"]:
-            fld = parse_partition_field(raw)
-            hp = PARTITION_DIR_PREFIX + fld.name
-            aug = aug.withColumn(hp, _partition_field_expr(src, fld))
-            hp_cols.append(hp)
-        tmp_dir = posixpath.join(
-            table_root, f"_snapmigrate_tmp_{uuid.uuid4().hex[:10]}"
-        )
-        (
-            aug.repartition(n_bins, *hp_cols)
-            .write.partitionBy(*hp_cols)
-            .mode("overwrite")
-            .parquet(tmp_dir)
-        )
-        out = spark.read.parquet(tmp_dir).select(*src.columns)
-        if _fingerprint(src) != _fingerprint(out):
-            _rm(spark, tmp_dir)
-            raise RuntimeError(
-                f"spec-migration verification failed under {table_root}"
-            )
-        # move each `_hp_` value dir under the root, layout preserved
-        # (same recursive walk as append_partitioned's spec write)
-        stack = [("", fs.listStatus(Path(tmp_dir)))]
-        while stack:
-            rel, entries = stack.pop()
-            for st in entries:
-                name = st.getPath().getName()
-                if st.isDirectory():
-                    stack.append(
-                        (
-                            posixpath.join(rel, name) if rel else name,
-                            fs.listStatus(st.getPath()),
-                        )
-                    )
-            if any(not s.isDirectory() for s in entries):
-                added.extend(
-                    _move_tmp_files(
-                        fs,
-                        Path,
-                        posixpath.join(tmp_dir, rel) if rel else tmp_dir,
-                        table_root,
-                        rel,
-                        "compacted",
-                    )
+            tmp_dir = posixpath.join(table_root, tmp_name)
+            n = None
+            if kernel_ok and total <= executor._ARROW_REWRITE_MAX_BYTES:
+                rels = [p for p, _ in files]
+                n = _arrow_kernel(
+                    [os.path.join(local_root, p) for p in rels],
+                    os.path.join(local_root, tmp_name),
+                    n_bins,
+                    sort_by or declared_sort,
+                    part_rel,
+                    schema=data_schema,
+                    row_filter=lambda i, t: mor_drop(rels[i], t),
                 )
-        _rm(spark, tmp_dir)
-        migrated = len(migrate)
-        rewritten += 1
+            if n is None:
+                _spark_compact_partition(
+                    spark, table_root, part_rel, files, tmp_dir, n_bins,
+                    data_schema, pending, sort_by, cluster_by, declared_sort,
+                )
+            added.extend(
+                _move_tmp_files(
+                    fs, Path, tmp_dir, table_root, part_rel, "compacted"
+                )
+            )
+            _rm(spark, tmp_dir)
+            rewritten += 1
+        migrated = 0
+        if migrate:
+            added.extend(
+                _migrate_spec(
+                    spark, table_root, migrate, spec, data_schema, pending,
+                    target_bytes,
+                )
+            )
+            migrated = len(migrate)
+            rewritten += 1
+    except BaseException:
+        # no snapshot references what this call landed so far
+        for p, _ in added:
+            fs.delete(Path(posixpath.join(table_root, p)), False)
+        raise
     if not rewritten:
         return {
             "version": base_version,
@@ -3475,6 +3551,127 @@ def snapshot_compact(
         "new_files": len(added),
         "migrated": migrated,
     }
+
+
+def _spark_compact_partition(
+    spark: SparkSession,
+    table_root: str,
+    part_rel: str,
+    files: list[tuple[str, int]],
+    tmp_dir: str,
+    n_bins: int,
+    data_schema,
+    pending: _MorPending | None,
+    sort_by: list[str] | None,
+    cluster_by: list[str] | None,
+    declared_sort: list[str] | None,
+) -> None:
+    """snapshot_compact's Spark rewrite of one partition into
+    `tmp_dir`, verified by a row count and content fingerprint of both
+    sides (executor._fingerprint); on a mismatch the tmp dir is
+    removed and RuntimeError raised."""
+    srcs = [posixpath.join(table_root, p) for p, _ in files]
+    src = (
+        spark.read.schema(data_schema).parquet(*srcs)
+        if data_schema is not None
+        else spark.read.parquet(*srcs)
+    )
+    src = _mor_filter_scan(spark, table_root, src, pending)
+    if cluster_by:
+        from hbase_compact_spark.functions.zorder import cluster_by_zorder
+
+        writer = cluster_by_zorder(src, cluster_by, n_bins)
+    elif sort_by:
+        writer = src.repartition(n_bins).sortWithinPartitions(*sort_by)
+    elif declared_sort and all(c in src.columns for c in declared_sort):
+        # the table's DECLARED sort order (set_sort_order) is the
+        # default rewrite shape: range-clustered bins give each output
+        # file a disjoint key range, so compaction makes stats-pruning
+        # selectivity BETTER, never worse
+        writer = src.repartitionByRange(
+            n_bins, *declared_sort
+        ).sortWithinPartitions(*declared_sort)
+    else:
+        writer = src.repartition(n_bins)
+    writer.write.mode("overwrite").parquet(tmp_dir)
+    out = spark.read.parquet(tmp_dir)
+    if _fingerprint(src) != _fingerprint(out):
+        _rm(spark, tmp_dir)
+        raise RuntimeError(
+            f"snapshot compaction verification failed: {part_rel}"
+        )
+
+
+def _migrate_spec(
+    spark: SparkSession,
+    table_root: str,
+    migrate: list[tuple[str, int]],
+    spec: dict,
+    data_schema,
+    pending: _MorPending | None,
+    target_bytes: int,
+) -> list[tuple[str, int]]:
+    """Rewrite the files `migrate` into the partition spec's `_hp_`
+    layout with Spark, verified like _spark_compact_partition; returns
+    [(relpath, size)] of what landed."""
+    import math
+
+    fs, _, jvm = _hadoop_fs(spark, table_root)
+    Path = jvm.org.apache.hadoop.fs.Path
+    relpaths = [p for p, _ in migrate]
+    src = _read_relpaths(spark, table_root, relpaths, data_schema, mor=pending)
+    total = sum(s for _, s in migrate)
+    n_bins = max(1, math.ceil(total / target_bytes))
+    hp_cols = []
+    aug = src
+    for raw in spec["partition_by"]:
+        fld = parse_partition_field(raw)
+        hp = PARTITION_DIR_PREFIX + fld.name
+        aug = aug.withColumn(hp, _partition_field_expr(src, fld))
+        hp_cols.append(hp)
+    tmp_dir = posixpath.join(
+        table_root, f"_snapmigrate_tmp_{uuid.uuid4().hex[:10]}"
+    )
+    (
+        aug.repartition(n_bins, *hp_cols)
+        .write.partitionBy(*hp_cols)
+        .mode("overwrite")
+        .parquet(tmp_dir)
+    )
+    out = spark.read.parquet(tmp_dir).select(*src.columns)
+    if _fingerprint(src) != _fingerprint(out):
+        _rm(spark, tmp_dir)
+        raise RuntimeError(
+            f"spec-migration verification failed under {table_root}"
+        )
+    # move each `_hp_` value dir under the root, layout preserved
+    # (same recursive walk as append_partitioned's spec write)
+    added: list[tuple[str, int]] = []
+    stack = [("", fs.listStatus(Path(tmp_dir)))]
+    while stack:
+        rel, entries = stack.pop()
+        for st in entries:
+            name = st.getPath().getName()
+            if st.isDirectory():
+                stack.append(
+                    (
+                        posixpath.join(rel, name) if rel else name,
+                        fs.listStatus(st.getPath()),
+                    )
+                )
+        if any(not s.isDirectory() for s in entries):
+            added.extend(
+                _move_tmp_files(
+                    fs,
+                    Path,
+                    posixpath.join(tmp_dir, rel) if rel else tmp_dir,
+                    table_root,
+                    rel,
+                    "compacted",
+                )
+            )
+    _rm(spark, tmp_dir)
+    return added
 
 
 def _move_tmp_files(
@@ -4449,6 +4646,12 @@ def snapshot_delete_by_key(
             "scanned_files": 0,
             "delete_files": len(log.delete_files(base_version)),
         }
+    # up to MERGE_KEY_PROBE_CAP unique keys are collected ONCE, and
+    # both the scope probe and the entry's keys/ write use them on the
+    # driver; past it both stay distributed
+    unique = keys.dropDuplicates().limit(MERGE_KEY_PROBE_CAP + 1).toArrow()
+    if unique.num_rows <= MERGE_KEY_PROBE_CAP:
+        keys = unique
     # optimistic retry: the whole commit is metadata (scope probe +
     # key rows), so losing the race re-derives the scope against the
     # NEW latest — a concurrent compact's rewritten file names and a
@@ -4915,6 +5118,24 @@ def _eq_scope(
     return [p for p in relpaths if p in may]
 
 
+def _distinct_keys(keys_df: DataFrame, keys) -> int:
+    """Distinct rows of a batch's keys: counted on the driver-held
+    Arrow `keys` when the batch collected them, as Spark's distinct
+    counts (a NULL equals a NULL), else by a Spark job. Floating keys
+    always take the job: Spark's distinct folds NaNs and -0.0 into one
+    value each, Arrow's grouping does not."""
+    import pyarrow as pa
+
+    if isinstance(keys, DataFrame) or any(
+        pa.types.is_floating(t) for t in keys.schema.types
+    ):
+        return keys_df.distinct().count()
+    try:
+        return keys.group_by(keys.column_names).aggregate([]).num_rows
+    except pa.ArrowNotImplementedError:
+        return keys_df.distinct().count()
+
+
 def snapshot_upsert_mor(
     spark: SparkSession,
     table_root: str,
@@ -4949,7 +5170,17 @@ def snapshot_upsert_mor(
     log = SnapshotLog(spark, table_root)
     log.bootstrap()
     base_version = log.latest() if version is None else version
-    n_source = source_df.count()
+    # up to MERGE_KEY_PROBE_CAP keys, the bound the merge probe already
+    # collects, are collected ONCE: the batch's size, its uniqueness
+    # check, the scope probe and the entry's keys/ write all use them
+    # on the driver; past it the counts and both writes stay
+    # distributed
+    keys_df = source_df.select(*key_cols)
+    keys = keys_df.limit(MERGE_KEY_PROBE_CAP + 1).toArrow()
+    if keys.num_rows <= MERGE_KEY_PROBE_CAP:
+        n_source = keys.num_rows
+    else:
+        n_source, keys = source_df.count(), keys_df
     if n_source == 0:
         return {
             "version": base_version,
@@ -4958,18 +5189,12 @@ def snapshot_upsert_mor(
             "rewritten_files": 0,
             "scanned_files": 0,
         }
-    keys_df = source_df.select(*key_cols)
-    if keys_df.distinct().count() != n_source:
+    if _distinct_keys(keys_df, keys) != n_source:
         raise ValueError("source keys must be unique for UPSERT")
     base_files = log.files(base_version)
     added = _land_spec_files(spark, log, table_root, source_df, base_version)
     if not added:
         raise ValueError("snapshot_upsert_mor: the frame wrote no files")
-    # the keys are unique (checked above): up to MERGE_KEY_PROBE_CAP of
-    # them are collected ONCE, the bound the merge probe already
-    # collects, and both the scope probe and the entry's keys/ write
-    # use them on the driver; past it both stay distributed
-    keys = keys_df.toArrow() if n_source <= MERGE_KEY_PROBE_CAP else keys_df
     # optimistic retry: the EXPENSIVE half (landing the batch's data
     # files) happened exactly once above and stays valid — a lost race
     # re-derives only the metadata half (delete-entry scope + carried
@@ -5890,10 +6115,12 @@ def maintain_mor(
     only), or (r14) pending entry ROWS exceed `max_pending_ratio` of
     the table's live rows (choose_write_mode's pressure signal — the
     read-tax-dominates threshold), run `snapshot_compact`, which
-    always rewrites partitions
-    holding affected files, physically applies the entries, and
-    retires them. Below both thresholds this is a metadata-only
-    no-op — the probe reads version JSONs, never a manifest row.
+    always rewrites partitions holding affected files, physically
+    applies the entries, and retires them. On a local table whose
+    partitions and pending entries fit the driver-side kernel's caps
+    (see snapshot_compact) the triggered maintenance launches no
+    Spark job. Below both thresholds this is a metadata-only no-op —
+    the probe reads version JSONs, never a manifest row.
 
     Returns {"triggered", "pending_before", "pending_after",
     "version", "rewritten"} — `triggered=False` rows cost O(history)

@@ -1,5 +1,6 @@
-"""Parity of the driver-side rewrite kernel (executor._rewrite_arrow)
-with the Spark rewrite it stands in for.
+"""Parity of the driver-side rewrite kernel (executor._arrow_kernel,
+run by compact_table's _rewrite_arrow) with the Spark rewrite it
+stands in for.
 
 Each staged table is compacted twice from identical hard-link copies:
 once as compact_table runs by default, where every partition under
@@ -144,6 +145,15 @@ def staged(spark, tmp_path_factory) -> str:
     return base
 
 
+def _encoding(path: str) -> tuple:
+    """A file's footer schema and metadata (_parquet_layout) and the
+    columns it dictionary-encodes."""
+    meta = pq.read_metadata(path)
+    chunks = [meta.row_group(0).column(i) for i in range(meta.num_columns)]
+    dictionary = {c.path_in_schema for c in chunks if c.has_dictionary_page}
+    return ex._parquet_layout(meta), dictionary
+
+
 def _copy(src: str, dest: str) -> None:
     shutil.copytree(src, dest, copy_function=os.link)
 
@@ -177,8 +187,7 @@ def test_kernel_matches_spark_rewrite(spark, staged, tmp_path, monkeypatch, tabl
     src = os.path.join(staged, table)
     source = {rel: _fingerprint(d) for rel, d in _partitions(src).items()}
     layouts = {
-        rel: ex._parquet_layout(pq.read_metadata(_data_files(d)[0]))
-        for rel, d in _partitions(src).items()
+        rel: _encoding(_data_files(d)[0]) for rel, d in _partitions(src).items()
     }
     real = ex._compact_one
     handed: list[str] = []
@@ -210,8 +219,7 @@ def test_kernel_matches_spark_rewrite(spark, staged, tmp_path, monkeypatch, tabl
             for rel, (d, _fp, _n) in out[side].items():
                 if rel not in to_spark:  # the kernel kept the encoding
                     for path in _data_files(d):
-                        layout = ex._parquet_layout(pq.read_metadata(path))
-                        assert layout == layouts[rel], (rel, path)
+                        assert _encoding(path) == layouts[rel], (rel, path)
     for rel, fp in source.items():
         _dk, fp_k, n_k = out["kernel"][rel]
         _ds, fp_s, n_s = out["spark"][rel]
@@ -260,6 +268,24 @@ def test_kernel_failure_leaves_table_untouched(spark, staged, tmp_path, monkeypa
         monkeypatch.setattr(ex, "_arrow_equal", lambda a, b: False)
         match = "verification failed"
     with pytest.raises(RuntimeError, match=match):
+        ex.compact_table(spark, work, target_bytes=BIG_TARGET)
+    assert not [d for d in os.listdir(work) if d.startswith("_compact_tmp_")]
+    assert _tree(work) == before
+
+
+def test_spark_swap_failure_leaves_no_tmp_dir(spark, staged, tmp_path, monkeypatch):
+    """The same rule on the Spark path: a swap that fails before its
+    manifest leaves every source file in place and no tmp dir."""
+    work = str(tmp_path / "w")
+    _copy(os.path.join(staged, "multi"), work)
+    before = _tree(work)
+
+    def swap_fails(*a, **kw):
+        raise RuntimeError("injected swap failure")
+
+    monkeypatch.setattr(ex, "_ARROW_REWRITE_MAX_BYTES", 0)
+    monkeypatch.setattr(ex, "_swap_files", swap_fails)
+    with pytest.raises(RuntimeError, match="injected"):
         ex.compact_table(spark, work, target_bytes=BIG_TARGET)
     assert not [d for d in os.listdir(work) if d.startswith("_compact_tmp_")]
     assert _tree(work) == before

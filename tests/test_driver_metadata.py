@@ -288,3 +288,71 @@ def test_keys_one_pyarrow_write_cannot_encode_go_through_spark(spark, tmp_path):
     df.write.parquet(spark_keys)
     assert pq.read_table(keys_dir).schema.types == pq.read_table(spark_keys).schema.types
     assert [tuple(r) for r in spark.read.parquet(keys_dir).collect()] == [(ts, ts)]
+
+
+DUPLICATE_BATCHES = {
+    "plain": ([(3, "a", 1.0), (3, "b", 2.0), (4, "c", 3.0)], ["id"]),
+    "null": ([(None, "a", 1.0), (None, "a", 2.0)], ["id", "cat"]),
+    # Spark's distinct folds -0.0 into 0.0; Arrow's grouping does not
+    "zero": ([(1, "a", 0.0), (2, "b", -0.0)], ["v"]),
+}
+
+
+@pytest.mark.parametrize("cap", ["as_is", 0])
+@pytest.mark.parametrize("batch", sorted(DUPLICATE_BATCHES))
+def test_upsert_rejects_duplicate_keys(spark, tmp_path, monkeypatch, cap, batch):
+    root = str(tmp_path / "t")
+    _seed(spark, root)
+    if cap == 0:
+        monkeypatch.setattr(S, "MERGE_KEY_PROBE_CAP", 0)
+    rows, key_cols = DUPLICATE_BATCHES[batch]
+    before = SnapshotLog(spark, root).latest()
+    with pytest.raises(ValueError, match="unique"):
+        S.snapshot_upsert_mor(spark, root, spark.createDataFrame(rows, ROW_SCHEMA), key_cols)
+    assert SnapshotLog(spark, root).latest() == before
+
+
+def test_upsert_collects_its_keys_once(spark, tmp_path, monkeypatch):
+    """Under MERGE_KEY_PROBE_CAP one collect of the keys gives the
+    batch's size and its uniqueness check: no count jobs."""
+    jobs, reads = {}, {}
+    for cap in ("as_is", 0):
+        root = str(tmp_path / f"cap_{cap}")
+        _seed(spark, root)
+        src = spark.createDataFrame(_rows([1, 11, 21, 105], 0.5), ROW_SCHEMA)
+        with monkeypatch.context() as m:
+            if cap == 0:
+                m.setattr(S, "MERGE_KEY_PROBE_CAP", 0)
+            with _JobCounter(spark) as c:
+                res = S.snapshot_upsert_mor(spark, root, src, ["id"])
+        assert res["upserted_keys"] == 4
+        jobs[cap] = c.jobs
+        reads[cap] = sorted(map(tuple, read_table_at(spark, root).collect()))
+    assert reads["as_is"] == reads[0]
+    # one job collects the keys, one lands the batch
+    assert jobs["as_is"] <= 2 < jobs[0], jobs
+
+
+def test_delete_by_key_collects_its_keys_once(spark, tmp_path, monkeypatch):
+    """Under MERGE_KEY_PROBE_CAP the keys are collected once, for the
+    scope probe and the entry's keys/ write alike; past it both stay
+    distributed. Both write the same entry and give the same reads."""
+    states, jobs = {}, {}
+    for cap in ("as_is", 0):
+        root = str(tmp_path / f"cap_{cap}")
+        _seed(spark, root)
+        keys = spark.createDataFrame([(3,), (13,), (3,)], "id long")
+        with monkeypatch.context() as m:
+            if cap == 0:
+                m.setattr(S, "MERGE_KEY_PROBE_CAP", 0)
+            with _JobCounter(spark) as c:
+                res = S.snapshot_delete_by_key(spark, root, keys)
+        assert res["deleted_keys"] == 2
+        jobs[cap] = c.jobs
+        states[cap] = _state(spark, root)
+    for field in ("manifest", "pos_rows", "eq_keys", "read_at", "where", "pending"):
+        assert states["as_is"][field] == states[0][field], field
+    # the capped run never probes the scope: it may only be wider
+    assert states["as_is"]["scope"] <= states[0]["scope"]
+    assert states["as_is"]["eq_keys"] == {(3,), (13,)}
+    assert jobs["as_is"] < jobs[0], jobs
