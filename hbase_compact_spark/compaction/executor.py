@@ -77,6 +77,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -445,7 +446,9 @@ def _compact_one(
     (multi-column min/max pruning) instead of the plain
     repartition + per-file sort."""
     part_dir = posixpath.join(table_root, rel) if rel else table_root
-    src = spark.read.parquet(*[p for p, _ in files])
+    # every column any planned file holds: the fingerprint below hashes
+    # all of them, so a rewrite that lost one fails verification
+    src = _read_every_column(spark.read, [p for p, _ in files])
     # Pack the small-file scan into byte-capped partitions: Spark's
     # openCostInBytes weighting turns a 64-small-file partition into
     # ~dozens of near-empty scan tasks, and with many partitions
@@ -531,6 +534,43 @@ def _compact_one(
         spark, tmp_dir, part_dir, [p for p, _ in files], trash_dir, rel
     )
     return n_after, new_names
+
+
+def _read_every_column(reader, paths: list[str]) -> DataFrame:
+    """`reader.parquet(*paths)` with every column any of the files
+    holds. Spark infers a file list's schema from one footer, so files
+    whose columns differ read with mergeSchema instead: a rewrite of a
+    partition whose schema drifted keeps every file's columns (a type
+    conflict fails the read). Local files compare their footers' column
+    paths on the driver; a list holding any other file always reads
+    merged, at the cost of one footer job."""
+    local = [_local_root(p) for p in paths]
+    if all(local):
+        columns = set()
+        for path in local:
+            schema = pq.read_metadata(path).schema
+            columns.add(frozenset(schema.column(i).path for i in range(len(schema))))
+        if len(columns) == 1:
+            return reader.parquet(*paths)
+    return reader.option("mergeSchema", "true").parquet(*paths)
+
+
+def _field_paths(dtype, prefix: str = "") -> set[str]:
+    """Dotted paths of every field of a Spark type, at any depth."""
+    from pyspark.sql.types import ArrayType, MapType
+
+    if isinstance(dtype, StructType):
+        out = set()
+        for f in dtype.fields:
+            out |= {prefix + f.name} | _field_paths(f.dataType, f"{prefix}{f.name}.")
+        return out
+    if isinstance(dtype, ArrayType):
+        return _field_paths(dtype.elementType, prefix)
+    if isinstance(dtype, MapType):
+        return _field_paths(dtype.keyType, prefix + "key.") | _field_paths(
+            dtype.valueType, prefix + "value."
+        )
+    return set()
 
 
 def _parquet_layout(meta: pq.FileMetaData) -> tuple[str, dict]:
@@ -629,11 +669,8 @@ def _arrow_kernel(
     Files whose Parquet schemas or key-value metadata differ go to
     Spark, which owns schema merging; so do files pyarrow 16 cannot
     write alike: int32/int64 decimals (Spark's encoding up to
-    precision 18) and codecs outside _ARROW_CODECS. With a declared
-    Spark `schema`, the files' columns must be exactly its fields, by
-    name and Spark type in order, or Spark reads them through it.
-    `row_filter(i, table)`, given the rows of `paths[i]` as read,
-    returns the rows to keep, or None to hand the files to Spark. The
+    precision 18) and codecs outside _ARROW_CODECS. The files are read
+    by _read_arrow, with its `schema` gate and `row_filter`. The
     kept rows are concatenated in file order, stably ordered by
     `sort_by` (Spark's ascending NULLS FIRST, _sort_indices), and cut
     into min(n_bins, rows) contiguous slices of equal row count, one
@@ -663,28 +700,11 @@ def _arrow_kernel(
         for c in cols
     ):
         return None
-    int96 = {c.path for c in cols if c.physical_type == "INT96"}
-    # Spark reads INT96 at microseconds: the same values, and no
-    # nanosecond overflow outside 1677-2262
-    tables = [
-        pq.read_table(p, coerce_int96_timestamp_unit="us") for p in paths
-    ]
-    if any(not t.schema.equals(tables[0].schema) for t in tables[1:]):
+    tables = _read_arrow(paths, metas, rel, schema=schema, row_filter=row_filter)
+    if tables is None or any(
+        not t.schema.equals(tables[0].schema) for t in tables[1:]
+    ):
         return None
-    if schema is not None and _spark_fields(tables[0].schema, int96) != [
-        (f.name, f.dataType) for f in schema.fields
-    ]:
-        return None
-    n_read = sum(t.num_rows for t in tables)
-    if n_read != sum(m.num_rows for m in metas):
-        raise RuntimeError(
-            f"compaction verification failed for {rel}: read {n_read} rows, "
-            f"footers hold {sum(m.num_rows for m in metas)}"
-        )
-    if row_filter is not None:
-        tables = [row_filter(i, t) for i, t in enumerate(tables)]
-        if any(t is None for t in tables):
-            return None
     src = pa.concat_tables(tables)
     n = src.num_rows
     if sort_by:
@@ -707,7 +727,7 @@ def _arrow_kernel(
         ]
         if first.num_row_groups
         else True,
-        "use_deprecated_int96_timestamps": bool(int96),
+        "use_deprecated_int96_timestamps": bool(_int96_columns(first)),
         # pyarrow 16 drops ALL key-value metadata unless it also stores
         # its Arrow schema; the read-back check below shows that entry
         # changes no type pyarrow reads, and Spark ignores it
@@ -740,6 +760,59 @@ def _arrow_kernel(
         if not done:
             shutil.rmtree(tmp, ignore_errors=True)
     return n
+
+
+def _int96_columns(meta: pq.FileMetaData) -> set[str]:
+    """Paths of the columns a Parquet footer stores as INT96."""
+    schema = meta.schema
+    return {
+        schema.column(i).path
+        for i in range(len(schema))
+        if schema.column(i).physical_type == "INT96"
+    }
+
+
+def _read_arrow(
+    paths: list[str],
+    metas: list[pq.FileMetaData],
+    rel: str,
+    *,
+    schema: StructType | None = None,
+    row_filter=None,
+) -> list[pa.Table] | None:
+    """The rows of the local Parquet files `paths`, whose footers are
+    `metas`, read with pyarrow as Spark's reader types them: INT96 at
+    microseconds, Spark's precision (the same values, and no nanosecond
+    overflow outside 1677-2262). One table per file. Shared by the
+    rewrite kernel and the snapshot log's driver-side read.
+
+    With a declared Spark `schema`, each file's columns must be exactly
+    its fields, by name and Spark type in order (_spark_fields), or
+    None is returned. The rows read must equal the footers' row total,
+    or RuntimeError is raised. `row_filter(i, table)`, given the rows of
+    `paths[i]`, returns the rows to keep, or None to return None."""
+    tables = [
+        pq.read_table(p, coerce_int96_timestamp_unit="us") for p in paths
+    ]
+    if schema is not None:
+        want = [(f.name, f.dataType) for f in schema.fields]
+        if any(
+            _spark_fields(t.schema, _int96_columns(m)) != want
+            for t, m in zip(tables, metas)
+        ):
+            return None
+    n_read = sum(t.num_rows for t in tables)
+    n_footer = sum(m.num_rows for m in metas)
+    if n_read != n_footer:
+        raise RuntimeError(
+            f"verification failed for {rel}: read {n_read} rows, "
+            f"footers hold {n_footer}"
+        )
+    if row_filter is not None:
+        tables = [row_filter(i, t) for i, t in enumerate(tables)]
+        if any(t is None for t in tables):
+            return None
+    return tables
 
 
 def _spark_fields(schema: pa.Schema, int96: set[str]) -> list | None:
@@ -806,9 +879,11 @@ def _compact_batch(
     trash_dir: str | None,
     ckpt,
     dirs_ok: bool,
-) -> None:
+) -> bool:
     """Rewrite MANY single-bin partitions in ONE read-shuffle-write
-    pass plus one read-back verification.
+    pass plus one read-back verification. Returns False, having
+    rewritten nothing, when the batched files' columns differ (one
+    footer job checks): those partitions take _compact_one instead.
 
     The per-partition path pays driver-side planning + job scheduling
     per partition — right for big partitions, but a fragmented table
@@ -870,13 +945,21 @@ def _compact_batch(
     bspark.conf.set("spark.sql.files.openCostInBytes", str(64 << 10))
     bspark.conf.set("spark.sql.files.maxPartitionBytes", str(32 << 20))
     if dirs_ok:
-        src = bspark.read.parquet(
-            *[posixpath.join(table_root, rel) for rel, _f, _n, _r in items]
-        )
+        inputs = [posixpath.join(table_root, rel) for rel, _f, _n, _r in items]
+        src = bspark.read.parquet(*inputs)
     else:
-        all_files = [p for _rel, files, _n, _r in items for p, _ in files]
-        schema = bspark.read.parquet(all_files[0]).schema
-        src = bspark.read.schema(schema).parquet(*all_files)
+        inputs = [p for _rel, files, _n, _r in items for p, _ in files]
+        schema = bspark.read.parquet(inputs[0]).schema
+        src = bspark.read.schema(schema).parquet(*inputs)
+    # that one footer's schema would drop a column only other files
+    # hold, unseen by the hashes below: a batch whose files' columns
+    # differ is left to the per-partition rewrites (_read_every_column)
+    try:
+        merged = bspark.read.option("mergeSchema", "true").parquet(*inputs)
+    except PySparkException:
+        return False  # conflicting types: each partition fails alone
+    if _field_paths(merged.schema) != _field_paths(src.schema):
+        return False
     bcol = "__hcs_rel"
     while bcol in src.columns:  # never shadow a real column
         bcol += "_"
@@ -1149,6 +1232,7 @@ def _compact_batch(
             )
     finally:
         _rm(spark, tmp_batch)
+    return True
 
 
 def _xor_all(vals) -> int:
@@ -1324,16 +1408,15 @@ def compact_table(
             and t[3].bytes_total < _BATCH_MAX_PARTITION_BYTES
             and not on_driver(t[3])
         ]
-        if len(batchable) >= 2:
-            _compact_batch(
-                spark,
-                table_root,
-                batchable,
-                sort_by,
-                trash_dir,
-                ckpt,
-                dirs_ok=all(purity[t[0]] for t in batchable),
-            )
+        if len(batchable) >= 2 and _compact_batch(
+            spark,
+            table_root,
+            batchable,
+            sort_by,
+            trash_dir,
+            ckpt,
+            dirs_ok=all(purity[t[0]] for t in batchable),
+        ):
             batched = {id(t) for t in batchable}
             todo = [t for t in todo if id(t) not in batched]
 

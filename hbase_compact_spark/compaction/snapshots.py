@@ -436,6 +436,16 @@ def _spec_derived_predicates(
     return out
 
 
+def _hive_keys(relpath: str) -> list[str]:
+    """The keys of a relpath's LEGACY hive `k=v` directory components,
+    in path order; `_hp_` spec dirs are layout, not hive columns."""
+    return [
+        comp.split("=", 1)[0]
+        for comp in posixpath.dirname(relpath).split("/")
+        if "=" in comp and not comp.startswith(PARTITION_DIR_PREFIX)
+    ]
+
+
 def _path_partition_values(relpath: str) -> dict[str, str]:
     """{column: raw string value} parsed from a relpath's
     `_hp_<col>=<value>` directory components (percent-decoded — the
@@ -973,11 +983,9 @@ class SnapshotLog:
             return None
         pcols: list[str] = []
         for relpath in relpaths:
-            for comp in posixpath.dirname(relpath).split("/"):
-                if "=" in comp and not comp.startswith(PARTITION_DIR_PREFIX):
-                    name = comp.split("=", 1)[0]
-                    if name not in pcols:
-                        pcols.append(name)
+            for name in _hive_keys(relpath):
+                if name not in pcols:
+                    pcols.append(name)
         try:
             inferred = _read_relpaths(
                 self.spark, self.table_root, relpaths, None
@@ -1706,12 +1714,7 @@ def _read_relpaths(
                 )
     groups: dict[frozenset, list[str]] = {}
     for p in relpaths:
-        keys = frozenset(
-            comp.split("=", 1)[0]
-            for comp in posixpath.dirname(p).split("/")
-            if "=" in comp and not comp.startswith(PARTITION_DIR_PREFIX)
-        )
-        groups.setdefault(keys, []).append(p)
+        groups.setdefault(frozenset(_hive_keys(p)), []).append(p)
     group_frames = {}
     for keys in sorted(groups, key=sorted):
         paths = [posixpath.join(table_root, p) for p in groups[keys]]
@@ -3074,24 +3077,36 @@ def read_table_where(
     predicate on a OR b skips whole files from the scan list before
     Spark plans anything (on top of parquet's own row-group pruning
     inside the files that remain). Pruning is conservative, the filter
-    is exact, so results always equal full-scan + filter."""
+    is exact, so results always equal full-scan + filter.
+
+    A small pruned read runs on the driver (_read_on_driver): the kept
+    files of a local root, at most the executor's
+    _ARROW_REWRITE_MAX_BYTES in all, are read with pyarrow into a local
+    relation, so building and collecting a lookup launches no Spark
+    job; the filters then fold on the driver. Every other read — and
+    any the driver cannot read as Spark does — scans the files with
+    Spark (_read_relpaths). A read that prunes every file returns an
+    empty frame of the declared schema."""
     plan = scan_plan(spark, table_root, predicates, version)
     paths = plan["paths"]
     log = SnapshotLog(spark, table_root)
-    if not paths:
-        # every file provably disjoint: scan one file (filter makes it
-        # empty) purely to preserve the schema of the result
-        paths = [log.files(plan["version"])[0][0]]
     # apply the snapshot's declared schema exactly like read_table_at:
     # an evolved table must present the same columns through BOTH read
     # paths (added columns as NULL, dropped columns hidden); the
     # layout-generation grouping also matches, so spec-evolved tables
     # read identically pruned or not
-    declared, _pcols = log.schema(plan["version"])
-    df = _read_relpaths(
-        spark, table_root, paths, declared,
-        mor=_mor_info(log, plan["version"]),
-    )
+    declared, pcols = log.schema(plan["version"])
+    df = _read_on_driver(spark, log, plan["version"], paths, declared, pcols)
+    if df is None:
+        if not paths:
+            # every file provably disjoint, no declared schema to build
+            # an empty frame of: scan one file (the filter makes it
+            # empty) purely to preserve the schema of the result
+            paths = [log.files(plan["version"])[0][0]]
+        df = _read_relpaths(
+            spark, table_root, paths, declared,
+            mor=_mor_info(log, plan["version"]),
+        )
     for col, pred in predicates.items():
         if not isinstance(pred, tuple):
             df = df.filter(F.col(col) == F.lit(pred))
@@ -3102,6 +3117,100 @@ def read_table_where(
         if hi is not None:
             df = df.filter(F.col(col) <= F.lit(hi))
     return df
+
+
+def _nullable(dtype):
+    """`dtype` with every field, element and value nullable at any
+    depth: the schema Spark's file reader gives a declared one."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dtype, StructType):
+        return StructType(
+            [
+                StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dtype.fields
+            ]
+        )
+    if isinstance(dtype, ArrayType):
+        return ArrayType(_nullable(dtype.elementType), True)
+    if isinstance(dtype, MapType):
+        return MapType(_nullable(dtype.keyType), _nullable(dtype.valueType), True)
+    return dtype
+
+
+def _read_on_driver(
+    spark: SparkSession,
+    log: SnapshotLog,
+    version: int,
+    relpaths: list[str],
+    declared,
+    pcols: list[str],
+) -> DataFrame | None:
+    """The kept files `relpaths` of `version` as a local relation read
+    with pyarrow on the driver, or None when Spark must scan them. The
+    frame is what _read_relpaths returns for the same files: the
+    declared schema with every field nullable, pending delete entries
+    applied.
+
+    It needs a declared schema. With no kept file it is an empty frame
+    of that schema (unless the table has hive partition columns, which
+    Spark's reader places itself). Otherwise the root must be local, no
+    kept file may sit under a legacy hive `k=v` directory, the files
+    may hold at most the executor's _ARROW_REWRITE_MAX_BYTES (the
+    driver-memory bound the rewrite kernel holds a partition to), and
+    the pending delete entries at most MOR_BROADCAST_ROWS rows. Each
+    file is read by the kernel's own read step (executor._read_arrow):
+    its columns must be the declared fields by name and Spark type, its
+    rows the footer's, and the pending entries are applied by
+    _driver_mor_filter, which hands an entry it cannot apply alike to
+    Spark. TIMESTAMP columns become tz-aware UTC, as INT96 and
+    UTC-adjusted files store them: createDataFrame would otherwise read
+    a naive one in the session time zone."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if declared is None:
+        return None
+    schema = _nullable(declared)
+    try:
+        arrow_schema = to_arrow_schema(schema)
+    except TypeError:
+        return None  # a type with no Arrow form: Spark reads it
+    if not relpaths:
+        if pcols:
+            return None
+        return spark.createDataFrame(arrow_schema.empty_table(), schema)
+    root = _local_root(log.table_root)
+    if root is None or any(_hive_keys(p) for p in relpaths):
+        return None
+    sizes = dict(log.files(version))
+    if sum(sizes[p] for p in relpaths) > executor._ARROW_REWRITE_MAX_BYTES:
+        return None
+    entries = log.delete_files(version)
+    if sum(n for _, n in entries) > MOR_BROADCAST_ROWS:
+        return None
+    mor_drop = _driver_mor_filter(log, version) if entries else None
+    paths = [os.path.join(root, p) for p in relpaths]
+    tables = executor._read_arrow(
+        paths,
+        [pq.read_metadata(p) for p in paths],
+        log.table_root,
+        schema=declared,
+        row_filter=None
+        if mor_drop is None
+        else lambda i, t: mor_drop(relpaths[i], t),
+    )
+    if tables is None:
+        return None
+    try:
+        tbl = pa.concat_tables([t.cast(arrow_schema) for t in tables])
+    except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+        return None
+    # one chunk: createDataFrame sends a chunk per Arrow batch, and the
+    # JVM stops reading at an empty batch (an empty file, or a file
+    # whose rows the deletes all dropped), losing every later row
+    return spark.createDataFrame(tbl.combine_chunks(), schema)
 
 
 # --------------------------------------------------------------------
@@ -3574,7 +3683,7 @@ def _spark_compact_partition(
     src = (
         spark.read.schema(data_schema).parquet(*srcs)
         if data_schema is not None
-        else spark.read.parquet(*srcs)
+        else executor._read_every_column(spark.read, srcs)
     )
     src = _mor_filter_scan(spark, table_root, src, pending)
     if cluster_by:
@@ -4206,8 +4315,10 @@ def _write_eq_delete_dir(
             # naive Arrow timestamps are TIMESTAMP_NTZ keys (toArrow
             # gives TIMESTAMP ones a zone)
             schema = from_arrow_schema(keys.schema, prefer_timestamp_ntz=True)
+            # one chunk: the JVM stops reading at an empty Arrow batch
             return _write_eq_delete_dir(
-                spark, log, spark.createDataFrame(keys, schema), scope
+                spark, log, spark.createDataFrame(keys.combine_chunks(), schema),
+                scope,
             )
         _write_entry_part(keys, keys_dir, **opts)
         n = keys.num_rows

@@ -303,3 +303,59 @@ def test_arrow_equal_is_nan_aware():
     assert ex._arrow_equal(t, table())
     assert not ex._arrow_equal(t, pa.table({"d": [1.0, 2.0], "l": t["l"]}))
     assert not ex._arrow_equal(pa.table({"d": [0.0]}), pa.table({"d": [-0.0]}))
+
+
+def _drift_partition(d: str, wide_first: bool) -> None:
+    """f0 and f1: 50 rows each, one file with column a only, the other
+    with a and b; `wide_first` puts (a, b) in f0."""
+    narrow = pa.table({"a": pa.array(range(50), pa.int64())})
+    wide = pa.table(
+        {"a": pa.array(range(50, 100), pa.int64()), "b": [f"b{i}" for i in range(50)]}
+    )
+    os.makedirs(d, exist_ok=True)
+    first, second = (wide, narrow) if wide_first else (narrow, wide)
+    pq.write_table(first, os.path.join(d, "f0.parquet"))
+    pq.write_table(second, os.path.join(d, "f1.parquet"))
+
+
+def _with_columns(rows: list[dict], cols: set[str]) -> list[str]:
+    return sorted(repr(sorted({c: r.get(c) for c in cols}.items())) for r in rows)
+
+
+@pytest.mark.parametrize("wide_first", [False, True], ids=["narrow_first", "wide_first"])
+@pytest.mark.parametrize("layout", ["one", "batch", "across"])
+def test_spark_rewrite_keeps_every_column(spark, tmp_path, monkeypatch, layout, wide_first):
+    """A Spark rewrite writes every column its files hold, whichever
+    file Spark would infer the schema from. `one`: a drifted partition
+    the kernel hands to _compact_one. `batch`: two drifted partitions
+    with the cap at 0, which the batch must leave to _compact_one.
+    `across`: with the cap at 0, a partition of (a) files beside one of
+    (a, b) files. Each partition keeps its own columns and rows; the
+    batch may add a column other partitions hold, all NULL."""
+    root = str(tmp_path / "t")
+    if layout == "across":
+        for rel, wide in (("p=0", wide_first), ("p=1", not wide_first)):
+            t = pa.table({"a": pa.array(range(50), pa.int64())})
+            if wide:
+                t = t.append_column("b", pa.array([f"b{i}" for i in range(50)]))
+            _write_files(os.path.join(root, rel), [t.slice(0, 25), t.slice(25)])
+    else:
+        for rel in ("p=0", "p=1") if layout == "batch" else ("p=0",):
+            _drift_partition(os.path.join(root, rel), wide_first)
+    if layout != "one":
+        monkeypatch.setattr(ex, "_ARROW_REWRITE_MAX_BYTES", 0)
+    before = {}
+    for rel, d in _partitions(root).items():
+        cols = {n for p in _data_files(d) for n in pq.read_schema(p).names}
+        before[rel] = (cols, _with_columns(_rows(d), cols))
+    report = ex.compact_table(spark, root, target_bytes=BIG_TARGET)
+    assert {r.partition: r.rows for r in report.compacted} == {
+        rel: len(rows) for rel, (_c, rows) in before.items()
+    }
+    for rel, d in _partitions(root).items():
+        (path,) = _data_files(d)
+        cols, rows = before[rel]
+        written = set(pq.read_schema(path).names)
+        assert written == cols or layout == "across" and written > cols, rel
+        assert _with_columns(_rows(d), cols) == rows, rel
+        assert all(r[c] is None for r in _rows(d) for c in written - cols), rel
