@@ -38,7 +38,6 @@ import shutil
 import time
 import uuid
 from typing import NamedTuple
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,10 +46,7 @@ from hbase_compact_spark.compaction import executor
 from hbase_compact_spark.compaction.executor import (
     _arrow_kernel,
     _fingerprint,
-    _hadoop_fs,
     _local_root,
-    _rm,
-    _uri_path,
 )
 
 SNAPSHOT_DIR = "_snapshots"
@@ -388,7 +384,7 @@ def _spec_derived_predicates(
 
             rel = log.files(version)[0][0]
             arrow = pq.read_schema(
-                posixpath.join(_uri_path(log.table_root), rel)
+                posixpath.join(log.root_local, rel)
             )
             t = arrow.field(source).type
             if pa.types.is_string(t) or pa.types.is_large_string(t):
@@ -598,13 +594,74 @@ def _load_manifest(local_path: str) -> dict:
     return out
 
 
-def _remove_local(path: str) -> None:
-    """Remove a local file or directory tree; a missing path is a
-    no-op."""
+def _remove_local(path: str) -> bool:
+    """Remove a local directory tree, or a local file with the
+    `.<name>.crc` checksum sidecar Hadoop's local filesystem writes
+    beside each file Spark writes; returns whether `path` existed."""
     if os.path.isdir(path):
         shutil.rmtree(path, ignore_errors=True)
-    elif os.path.exists(path):
+        return True
+    head, name = os.path.split(path)
+    try:
+        os.remove(os.path.join(head, f".{name}.crc"))
+    except FileNotFoundError:
+        pass
+    try:
         os.remove(path)
+    except FileNotFoundError:
+        return False
+    return True
+
+
+def _land_files(
+    tmp: str, root: str, part_rel: str, prefix: str
+) -> list[tuple[str, int]]:
+    """Move the parquet files of the local dir `tmp` (a Spark or
+    kernel write, flat or in a partition-dir layout, which is kept)
+    into `root/part_rel` as `<prefix>-<batch>-<i>.parquet`, each with
+    its `.crc` sidecar, then remove `tmp`. Hidden names
+    (executor._hidden) are skipped, and a file whose footer holds no
+    row is dropped, not landed. Returns [(relpath, size)] of what
+    landed; a failed rename raises, after removing what this call
+    landed."""
+    import pyarrow.parquet as pq
+
+    batch = uuid.uuid4().hex[:10]
+    out: list[tuple[str, int]] = []
+    try:
+        for d, dirs, names in os.walk(tmp):
+            dirs[:] = sorted(n for n in dirs if not executor._hidden(n))
+            sub = os.path.relpath(d, tmp)
+            rel_dir = part_rel if sub == "." else posixpath.join(part_rel, sub)
+            for name in sorted(names):
+                src = os.path.join(d, name)
+                if (
+                    executor._hidden(name)
+                    or not name.endswith(".parquet")
+                    or pq.read_metadata(src).num_rows == 0
+                ):
+                    continue
+                dest_name = f"{prefix}-{batch}-{len(out):05d}.parquet"
+                rel = posixpath.join(rel_dir, dest_name)
+                dest_dir = os.path.join(root, rel_dir)
+                dest = os.path.join(dest_dir, dest_name)
+                os.makedirs(dest_dir, exist_ok=True)
+                os.rename(src, dest)
+                out.append((rel, os.path.getsize(dest)))
+                try:
+                    os.rename(
+                        os.path.join(d, f".{name}.crc"),
+                        os.path.join(dest_dir, f".{dest_name}.crc"),
+                    )
+                except FileNotFoundError:
+                    pass
+    except BaseException:
+        for rel, _ in out:
+            _remove_local(os.path.join(root, rel))
+        raise
+    finally:
+        _remove_local(tmp)
+    return out
 
 
 class SnapshotConflictError(RuntimeError):
@@ -626,9 +683,12 @@ class SnapshotLog:
     methods need it (`manifest_df`, `commit_current`, and
     `commit_append` past DISTRIBUTED_PRUNE_THRESHOLD files), and
     shared code (scan_plan) branches on it to skip the distributed
-    manifest scan. Manifests and delete entries are read as local
-    paths, so a remote-scheme root raises here instead of being
-    silently misread.
+    manifest scan. Data files are os I/O too: the snapshot functions
+    land, stat and delete them on `root_local`, the root's path as
+    executor._local_root resolves it (a relative root against the
+    JVM's working directory, as Spark resolves it). A root that rule
+    maps to None (a remote scheme, a `file:` URI with an authority)
+    raises here instead of being silently misread.
 
     Manifests and merge-on-read delete entries are WRITTEN on the
     driver too while they are bounded, by the caps the read path
@@ -641,15 +701,15 @@ class SnapshotLog:
     by a distributed Spark job."""
 
     def __init__(self, spark: SparkSession | None, table_root: str):
-        scheme = urlparse(table_root).scheme
-        if scheme not in ("", "file"):
+        self.root_local = _local_root(table_root)
+        if self.root_local is None:
             raise ValueError(
                 f"SnapshotLog is local-filesystem only; got {table_root!r}"
             )
         self.spark = spark
         self.table_root = table_root
         self.log_dir = posixpath.join(table_root, SNAPSHOT_DIR)
-        self._local_log = posixpath.join(_uri_path(table_root), SNAPSHOT_DIR)
+        self._local_log = posixpath.join(self.root_local, SNAPSHOT_DIR)
 
     def _local(self, *parts: str) -> str:
         return posixpath.join(self._local_log, *parts)
@@ -1290,27 +1350,28 @@ def _mor_info(log: SnapshotLog, version: int) -> _MorPending | None:
     )
 
 
-def _relpath_expr(spark: SparkSession, table_root: str, path_col):
+def _relpath_expr(table_root: str, path_col):
     """Column mapping a file-path URI (e.g. `_metadata.file_path`) to
     the manifest-relative path. Same decode discipline as the
     compaction executor's batch tagger: the URI is percent-ENCODED
     ('x y' -> 'x%20y'), so decode (with literal '+' shielded from
-    form-decoding) before anchoring on the qualified root — or
-    encoded-name partitions silently fail to match their manifest
-    relpath (the r7 input_file_name lesson)."""
-    fs, root_path, _ = _hadoop_fs(spark, table_root)
-    root_abs = _uri_path(str(fs.makeQualified(root_path))).rstrip("/")
+    form-decoding) before anchoring on the root's absolute path —
+    or encoded-name partitions silently fail to match their manifest
+    relpath (the r7 input_file_name lesson). The anchor is
+    _local_root's: like Hadoop's qualification it resolves a relative
+    root against the JVM's working directory and no symlink."""
+    root_abs = _local_root(table_root).rstrip("/")
     decoded = F.url_decode(F.regexp_replace(path_col, r"\+", "%2B"))
     # anchor with plain string search, not regex (r14: the sf10
     # profile measured the old scheme-strip + \Q..\E regexp_extract
     # at ~3 µs/row — 6.3 s of the MOR read tax on a 2M-row file;
     # locate+substr is ~3× cheaper and the explicit-file-list callers
     # now avoid per-row mapping entirely via literal tags). The
-    # qualified root's first occurrence in the decoded URI is the
+    # root path's first occurrence in the decoded URI is the
     # true anchor — scheme and authority cannot contain '/',
     # so nothing before the path can first-match a '/'-leading root.
     # guard the miss (ADVICE r14): locate()==0 — e.g. a
-    # symlink-canonicalization mismatch between makeQualified and
+    # symlink-canonicalization mismatch between the root and
     # _metadata.file_path — must map to '' (matches nothing) like the
     # old regexp_extract did, NOT to a garbage suffix that could make
     # a positional-delete anti-join silently resurrect deleted rows
@@ -1423,7 +1484,7 @@ def _eq_keys_schema(keys_path: str, df: DataFrame):
     from pyspark.sql.pandas.types import from_arrow_type
     from pyspark.sql.types import StructType, TimestampType
 
-    local = _local_meta_path(keys_path)
+    local = _local_root(keys_path)
     if local is None:
         return None
     row = {f.name: f for f in df.schema.fields}
@@ -1482,7 +1543,7 @@ def _mor_filter_scan(
     rel, pos = _mor_cols(df)
     df = df.select(
         "*",
-        _relpath_expr(spark, table_root, F.col("_metadata.file_path")).alias(rel),
+        _relpath_expr(table_root, F.col("_metadata.file_path")).alias(rel),
         F.col("_metadata.row_index").alias(pos),
     )
     df = _apply_mor(spark, df, rel, pos, pending)
@@ -1594,18 +1655,6 @@ _MOR_SPLIT_MAX_TOUCHED = int(
 _MOR_LIT_TAG_MAX = int(os.environ.get("HCS_MOR_LIT_TAG_MAX", 64))
 
 
-def _local_meta_path(p: str) -> str | None:
-    """Local-filesystem path of a metadata file/dir, or None when the
-    path is on a non-local scheme (callers then fall back to a
-    distributed read) — the `_manifest_local` discipline for paths
-    that arrive as URIs."""
-    if p.startswith("/"):
-        return p
-    if p.startswith("file:"):
-        return _uri_path(p)
-    return None
-
-
 def _entry_relpaths(
     spark: SparkSession, paths: list[str], cap: int | None = None
 ) -> set[str] | None:
@@ -1624,7 +1673,7 @@ def _entry_relpaths(
     try:
         out: set[str] = set()
         for p in paths:
-            local = _local_meta_path(p)
+            local = _local_root(p)
             if local is None:
                 raise OSError(f"non-local metadata path: {p}")
             tbl = pq.read_table(local, columns=["relpath"])
@@ -1772,7 +1821,7 @@ def _read_relpaths(
                 f.select(
                     "*",
                     _relpath_expr(
-                        spark, table_root, F.col("_metadata.file_path")
+                        table_root, F.col("_metadata.file_path")
                     ).alias(rel),
                     F.col("_metadata.row_index").alias(pos),
                 )
@@ -2284,16 +2333,14 @@ def append_partitioned(
     log = SnapshotLog(spark, table_root)
     log.bootstrap()
     v = log.latest()
-    added = _land_spec_files(spark, log, table_root, df, v)
+    added = _land_spec_files(log, df, v)
     if not added:
         raise ValueError("append_partitioned: the frame wrote no files")
     return log.commit_append(added, op="append-partitioned", parent=v)
 
 
 def _land_spec_files(
-    spark: SparkSession,
     log: SnapshotLog,
-    table_root: str,
     df: DataFrame,
     base_version: int | None,
 ) -> list[tuple[str, int]]:
@@ -2308,12 +2355,7 @@ def _land_spec_files(
     # declared table sort order (set_sort_order): every landing write
     # range-clusters + sorts, so new files arrive pre-prunable
     df = _apply_sort_order(log, df, base_version)
-    fs, _, jvm = _hadoop_fs(spark, table_root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    tmp = posixpath.join(
-        table_root, f"_tmp_append-{uuid.uuid4().hex[:10]}"
-    )
-    added: list[tuple[str, int]] = []
+    tmp = os.path.join(log.root_local, f"_tmp_append-{uuid.uuid4().hex[:10]}")
     try:
         if spec:
             hp_cols = []
@@ -2324,37 +2366,12 @@ def _land_spec_files(
                 aug = aug.withColumn(hp, _partition_field_expr(df, fld))
                 hp_cols.append(hp)
             aug.write.partitionBy(*hp_cols).mode("overwrite").parquet(tmp)
-            # move each dir's parquet files under the root, layout
-            # preserved (recursive walk handles multi-column specs)
-            stack = [("", fs.listStatus(Path(tmp)))]
-            while stack:
-                rel, entries = stack.pop()
-                for st in entries:
-                    name = st.getPath().getName()
-                    if st.isDirectory():
-                        stack.append(
-                            (
-                                posixpath.join(rel, name) if rel else name,
-                                fs.listStatus(st.getPath()),
-                            )
-                        )
-                if any(not s.isDirectory() for s in entries):
-                    added.extend(
-                        _move_tmp_files(
-                            fs,
-                            Path,
-                            posixpath.join(tmp, rel) if rel else tmp,
-                            table_root,
-                            rel,
-                            "append",
-                        )
-                    )
         else:
             df.write.mode("overwrite").parquet(tmp)
-            added = _move_tmp_files(fs, Path, tmp, table_root, "", "append")
-    finally:
-        fs.delete(Path(tmp), True)
-    return added
+    except BaseException:
+        _remove_local(tmp)
+        raise
+    return _land_files(tmp, log.root_local, "", "append")
 
 
 def _footer_stats(local_path: str, cols: list[str] | None) -> tuple[int, dict]:
@@ -2461,7 +2478,7 @@ def _annotate_df(
     ON EXECUTORS (footer pass for `stat_cols` unless False, bloom
     column pass for `bloom_cols` if given) — payloads go straight from
     the pass into the output rows without visiting the driver."""
-    root_local = _uri_path(log.table_root)
+    root_local = log.root_local
 
     def gen(batches):
         import pandas as pd
@@ -2619,7 +2636,6 @@ def shard_manifest(
         "_shard", ntile_expr(F.col("_rn"), F.col("_n"), shards) - 1
     ).select("relpath", "size", "stats", "blooms", "_shard")
     name = f"m-{uuid.uuid4().hex[:12]}"
-    dest = posixpath.join(log.manifest_dir, name)
     dest_local = log._manifest_local(name)
     os.makedirs(dest_local, exist_ok=True)
 
@@ -2676,7 +2692,7 @@ def shard_manifest(
     ).collect():
         parts[r["part"]] = _json.loads(r["meta"])
     if sum(m[3] for m in parts.values()) != n_files:
-        _rm(spark, dest)
+        _remove_local(dest_local)
         raise RuntimeError(
             f"manifest shard verification failed under {table_root}: "
             f"{sum(m[3] for m in parts.values())} != {n_files}"
@@ -2941,9 +2957,7 @@ def scan_plan(
             "shards_total": len(sharding["parts"]),
             "shards_opened": len(kept_parts),
             "paths": [
-                posixpath.join(
-                    _uri_path(log.manifest_dir), snap["manifest"], part
-                )
+                posixpath.join(log._manifest_local(snap["manifest"]), part)
                 for part in kept_parts
             ],
         }
@@ -3154,10 +3168,10 @@ def _read_on_driver(
 
     It needs a declared schema. With no kept file it is an empty frame
     of that schema (unless the table has hive partition columns, which
-    Spark's reader places itself). Otherwise the root must be local, no
-    kept file may sit under a legacy hive `k=v` directory, the files
-    may hold at most the executor's _ARROW_REWRITE_MAX_BYTES (the
-    driver-memory bound the rewrite kernel holds a partition to), and
+    Spark's reader places itself). Otherwise no kept file may sit
+    under a legacy hive `k=v` directory, the files may hold at most
+    the executor's _ARROW_REWRITE_MAX_BYTES (the driver-memory bound
+    the rewrite kernel holds a partition to), and
     the pending delete entries at most MOR_BROADCAST_ROWS rows. Each
     file is read by the kernel's own read step (executor._read_arrow):
     its columns must be the declared fields by name and Spark type, its
@@ -3181,8 +3195,8 @@ def _read_on_driver(
         if pcols:
             return None
         return spark.createDataFrame(arrow_schema.empty_table(), schema)
-    root = _local_root(log.table_root)
-    if root is None or any(_hive_keys(p) for p in relpaths):
+    root = log.root_local
+    if any(_hive_keys(p) for p in relpaths):
         return None
     sizes = dict(log.files(version))
     if sum(sizes[p] for p in relpaths) > executor._ARROW_REWRITE_MAX_BYTES:
@@ -3438,7 +3452,7 @@ def _commit_rewrite(
             base_entry_names = {n for n, _ in log.delete_files(cur)}
             for n, _cnt in (extra or {}).get("delete_files", []):
                 if n not in base_entry_names:
-                    _rm(spark, posixpath.join(log.deletes_dir, n))
+                    _remove_local(log._local(DELETES_SUBDIR, n))
             new_latest = log.latest()
             cur_keep = _rebase_keep_or_raise(
                 spark, log, cur, new_latest, replaced
@@ -3454,13 +3468,7 @@ def _commit_rewrite(
     if changelog_entry is not None:
         # the rewrite is abandoned: reclaim its change artifact so
         # retries never leak changelog dirs into the tree
-        _rm(
-            spark,
-            posixpath.join(
-                log.table_root, SNAPSHOT_DIR, CHANGES_SUBDIR,
-                changelog_entry[0],
-            ),
-        )
+        _remove_local(log._local(CHANGES_SUBDIR, changelog_entry[0]))
     raise SnapshotConflictError(
         f"rewrite commit kept conflicting after {retries} rebases "
         f"under {log.log_dir}"
@@ -3516,8 +3524,6 @@ def snapshot_compact(
     log.bootstrap()
     base_version = log.latest()
     base = log.files(base_version)
-    fs, _, jvm = _hadoop_fs(spark, table_root)
-    Path = jvm.org.apache.hadoop.fs.Path
 
     # evolved tables rewrite THROUGH the declared schema: added
     # columns materialize physically (as nulls where absent), dropped
@@ -3572,10 +3578,9 @@ def snapshot_compact(
     # a partition under the executor's cap takes its driver-side
     # kernel, pending deletes applied by _driver_mor_filter, when the
     # entries fit the bound every MOR read already holds them to
-    local_root = _local_root(table_root)
+    root = log.root_local
     kernel_ok = (
-        local_root is not None
-        and not cluster_by
+        not cluster_by
         and sum(n for _, n in log.delete_files(base_version))
         <= MOR_BROADCAST_ROWS
     )
@@ -3598,13 +3603,13 @@ def snapshot_compact(
                 "_snapcompact_tmp_"
                 + hashlib.md5(part_rel.encode()).hexdigest()[:12]
             )
-            tmp_dir = posixpath.join(table_root, tmp_name)
+            tmp_dir = os.path.join(root, tmp_name)
             n = None
             if kernel_ok and total <= executor._ARROW_REWRITE_MAX_BYTES:
                 rels = [p for p, _ in files]
                 n = _arrow_kernel(
-                    [os.path.join(local_root, p) for p in rels],
-                    os.path.join(local_root, tmp_name),
+                    [os.path.join(root, p) for p in rels],
+                    tmp_dir,
                     n_bins,
                     sort_by or declared_sort,
                     part_rel,
@@ -3616,12 +3621,7 @@ def snapshot_compact(
                     spark, table_root, part_rel, files, tmp_dir, n_bins,
                     data_schema, pending, sort_by, cluster_by, declared_sort,
                 )
-            added.extend(
-                _move_tmp_files(
-                    fs, Path, tmp_dir, table_root, part_rel, "compacted"
-                )
-            )
-            _rm(spark, tmp_dir)
+            added.extend(_land_files(tmp_dir, root, part_rel, "compacted"))
             rewritten += 1
         migrated = 0
         if migrate:
@@ -3636,7 +3636,7 @@ def snapshot_compact(
     except BaseException:
         # no snapshot references what this call landed so far
         for p, _ in added:
-            fs.delete(Path(posixpath.join(table_root, p)), False)
+            _remove_local(os.path.join(root, p))
         raise
     if not rewritten:
         return {
@@ -3705,7 +3705,7 @@ def _spark_compact_partition(
     writer.write.mode("overwrite").parquet(tmp_dir)
     out = spark.read.parquet(tmp_dir)
     if _fingerprint(src) != _fingerprint(out):
-        _rm(spark, tmp_dir)
+        _remove_local(tmp_dir)
         raise RuntimeError(
             f"snapshot compaction verification failed: {part_rel}"
         )
@@ -3725,8 +3725,6 @@ def _migrate_spec(
     [(relpath, size)] of what landed."""
     import math
 
-    fs, _, jvm = _hadoop_fs(spark, table_root)
-    Path = jvm.org.apache.hadoop.fs.Path
     relpaths = [p for p, _ in migrate]
     src = _read_relpaths(spark, table_root, relpaths, data_schema, mor=pending)
     total = sum(s for _, s in migrate)
@@ -3738,9 +3736,8 @@ def _migrate_spec(
         hp = PARTITION_DIR_PREFIX + fld.name
         aug = aug.withColumn(hp, _partition_field_expr(src, fld))
         hp_cols.append(hp)
-    tmp_dir = posixpath.join(
-        table_root, f"_snapmigrate_tmp_{uuid.uuid4().hex[:10]}"
-    )
+    root = _local_root(table_root)
+    tmp_dir = os.path.join(root, f"_snapmigrate_tmp_{uuid.uuid4().hex[:10]}")
     (
         aug.repartition(n_bins, *hp_cols)
         .write.partitionBy(*hp_cols)
@@ -3749,65 +3746,11 @@ def _migrate_spec(
     )
     out = spark.read.parquet(tmp_dir).select(*src.columns)
     if _fingerprint(src) != _fingerprint(out):
-        _rm(spark, tmp_dir)
+        _remove_local(tmp_dir)
         raise RuntimeError(
             f"spec-migration verification failed under {table_root}"
         )
-    # move each `_hp_` value dir under the root, layout preserved
-    # (same recursive walk as append_partitioned's spec write)
-    added: list[tuple[str, int]] = []
-    stack = [("", fs.listStatus(Path(tmp_dir)))]
-    while stack:
-        rel, entries = stack.pop()
-        for st in entries:
-            name = st.getPath().getName()
-            if st.isDirectory():
-                stack.append(
-                    (
-                        posixpath.join(rel, name) if rel else name,
-                        fs.listStatus(st.getPath()),
-                    )
-                )
-        if any(not s.isDirectory() for s in entries):
-            added.extend(
-                _move_tmp_files(
-                    fs,
-                    Path,
-                    posixpath.join(tmp_dir, rel) if rel else tmp_dir,
-                    table_root,
-                    rel,
-                    "compacted",
-                )
-            )
-    _rm(spark, tmp_dir)
-    return added
-
-
-def _move_tmp_files(
-    fs, Path, tmp_dir: str, table_root: str, part_rel: str, prefix: str
-) -> list[tuple[str, int]]:
-    """Move a tmp-dir's parquet output into the partition dir under
-    fresh uuid-batch names; returns [(relpath, size)] of what landed.
-    Rename failures raise — never a silent duplicate."""
-    part_dir = posixpath.join(table_root, part_rel) if part_rel else table_root
-    fs.mkdirs(Path(part_dir))
-    batch = uuid.uuid4().hex[:10]
-    out = []
-    for i, st in enumerate(
-        s for s in fs.listStatus(Path(tmp_dir))
-        if s.getPath().getName().endswith(".parquet")
-    ):
-        dest_name = f"{prefix}-{batch}-{i:05d}.parquet"
-        dest = Path(part_dir, dest_name)
-        if not fs.rename(st.getPath(), dest):
-            raise RuntimeError(f"rename failed: {st.getPath()} -> {dest}")
-        out.append(
-            (
-                posixpath.join(part_rel, dest_name) if part_rel else dest_name,
-                int(fs.getFileStatus(dest).getLen()),
-            )
-        )
-    return out
+    return _land_files(tmp_dir, root, "", "compacted")
 
 
 def _parent_meta_cols(log: SnapshotLog, version: int) -> tuple[list, list]:
@@ -3936,7 +3879,7 @@ def _carried_manifest(
                     value_set=pa.array([p for p, _ in keep], pa.string()),
                 )
             )
-        root_local = _uri_path(log.table_root)
+        root_local = log.root_local
         metas = [
             _meta_row(root_local, p, None, None, stat_cols, bloom_cols)
             for p, _ in added
@@ -4079,7 +4022,7 @@ def _snapshot_delete_mor(
         # the published delete file belongs to no committed version —
         # remove it before the caller re-derives against the new
         # latest (otherwise each retry would leak one orphan)
-        _rm(spark, posixpath.join(log.deletes_dir, name))
+        _remove_local(log._local(DELETES_SUBDIR, name))
         raise
     return {
         "version": v,
@@ -4154,8 +4097,7 @@ def _write_delete_file(spark: SparkSession, log: SnapshotLog, entries):
     (name, n_rows); (None, 0) when there are no entries — callers
     then commit an empty delete_files list instead of referencing a
     vacuous file."""
-    tmp_uri = posixpath.join(log.deletes_dir, f"_tmp-{uuid.uuid4().hex[:10]}")
-    tmp = _uri_path(tmp_uri)
+    tmp = log._local(DELETES_SUBDIR, f"_tmp-{uuid.uuid4().hex[:10]}")
     if isinstance(entries, DataFrame):
         (
             entries.select(
@@ -4164,7 +4106,7 @@ def _write_delete_file(spark: SparkSession, log: SnapshotLog, entries):
             .repartition(1)
             .sortWithinPartitions("relpath", "pos")
             .write.mode("overwrite")
-            .parquet(tmp_uri)
+            .parquet(tmp)
         )
         n = _parquet_rows(tmp)
     else:
@@ -4295,8 +4237,7 @@ def _write_eq_delete_dir(
     of relpaths (a file list the caller already holds), written on
     the driver, or a DataFrame, written by Spark. With table + list
     the entry costs no Spark job."""
-    tmp_uri = posixpath.join(log.deletes_dir, f"_tmp-{uuid.uuid4().hex[:10]}")
-    tmp = _uri_path(tmp_uri)
+    tmp = log._local(DELETES_SUBDIR, f"_tmp-{uuid.uuid4().hex[:10]}")
     keys_dir = posixpath.join(tmp, "keys")
     scope_dir = posixpath.join(tmp, "scope")
     if isinstance(keys, str):
@@ -4304,7 +4245,7 @@ def _write_eq_delete_dir(
         n = _parquet_rows(keys_dir)
     elif isinstance(keys, DataFrame):
         keys.dropDuplicates().repartition(1).write.mode("overwrite").parquet(
-            posixpath.join(tmp_uri, "keys")
+            keys_dir
         )
         n = _parquet_rows(keys_dir)
     else:
@@ -4329,7 +4270,7 @@ def _write_eq_delete_dir(
             .repartition(1)
             .sortWithinPartitions("relpath")
             .write.mode("overwrite")
-            .parquet(posixpath.join(tmp_uri, "scope"))
+            .parquet(scope_dir)
         )
     else:
         import pyarrow as pa
@@ -4504,8 +4445,7 @@ def _snapshot_delete_cow(
     for relpath, size in cand:
         by_part.setdefault(posixpath.dirname(relpath), []).append((relpath, size))
 
-    fs, _, jvm = _hadoop_fs(spark, table_root)
-    Path = jvm.org.apache.hadoop.fs.Path
+    root = log.root_local
     added: list[tuple[str, int]] = []
     deleted_rows = 0
     rewritten = 0
@@ -4532,23 +4472,19 @@ def _snapshot_delete_cow(
         keep_rows = src.filter(~F.coalesce(pred, F.lit(False)))
         if pcols:
             keep_rows = keep_rows.drop(*[c for c in pcols if c in src.columns])
-        tmp_dir = posixpath.join(
-            table_root,
+        tmp_dir = os.path.join(
+            root,
             f"_snapdelete_tmp_{hashlib.md5(part_rel.encode()).hexdigest()[:12]}",
         )
         keep_rows.write.mode("overwrite").parquet(tmp_dir)
         n_keep = spark.read.parquet(tmp_dir).count()
         if n_keep != n_src - n_match:
-            _rm(spark, tmp_dir)
+            _remove_local(tmp_dir)
             raise RuntimeError(
                 f"delete verification failed in {part_rel}: "
                 f"{n_src} - {n_match} != {n_keep}"
             )
-        if n_keep:
-            added.extend(
-                _move_tmp_files(fs, Path, tmp_dir, table_root, part_rel, "deleted")
-            )
-        _rm(spark, tmp_dir)
+        added.extend(_land_files(tmp_dir, root, part_rel, "deleted"))
         deleted_rows += n_match
         rewritten += len(files)
     if not deleted_rows:
@@ -4589,7 +4525,7 @@ def _snapshot_delete_cow(
         # this attempt's rewritten output is about to be re-derived —
         # remove it so retries never leak data files into the tree
         for p, _s in added:
-            fs.delete(Path(posixpath.join(table_root, p)), False)
+            _remove_local(os.path.join(root, p))
         raise
     return {
         "version": v,
@@ -4785,7 +4721,7 @@ def snapshot_delete_by_key(
             }
         name, n_keys = _write_eq_delete_dir(spark, log, keys, scope_rels)
         if n_keys == 0:
-            _rm(spark, posixpath.join(log.deletes_dir, name))
+            _remove_local(log._local(DELETES_SUBDIR, name))
             return {
                 "version": base_version,
                 "deleted_keys": 0,
@@ -4806,7 +4742,7 @@ def snapshot_delete_by_key(
                 extra={"delete_files": new_list},
             )
         except SnapshotConflictError:
-            _rm(spark, posixpath.join(log.deletes_dir, name))
+            _remove_local(log._local(DELETES_SUBDIR, name))
             if version is not None:
                 raise
             base_version = log.latest()
@@ -4910,8 +4846,7 @@ def _snapshot_update_once(
             (relpath, size)
         )
 
-    fs, _, jvm = _hadoop_fs(spark, table_root)
-    Path = jvm.org.apache.hadoop.fs.Path
+    root = log.root_local
     added: list[tuple[str, int]] = []
     updated_rows = 0
     rewritten = 0
@@ -4951,25 +4886,20 @@ def _snapshot_update_once(
             else:
                 out_cols.append(F.col(c))
         out = src.select(*out_cols)
-        tmp_dir = posixpath.join(
-            table_root,
+        tmp_dir = os.path.join(
+            root,
             f"_snapupdate_tmp_"
             f"{hashlib.md5(part_rel.encode()).hexdigest()[:12]}",
         )
         out.write.mode("overwrite").parquet(tmp_dir)
         n_out = spark.read.parquet(tmp_dir).count()
         if n_out != n_src:
-            _rm(spark, tmp_dir)
+            _remove_local(tmp_dir)
             raise RuntimeError(
                 f"update verification failed in {part_rel}: "
                 f"{n_src} rows in, {n_out} out"
             )
-        added.extend(
-            _move_tmp_files(
-                fs, Path, tmp_dir, table_root, part_rel, "updated"
-            )
-        )
-        _rm(spark, tmp_dir)
+        added.extend(_land_files(tmp_dir, root, part_rel, "updated"))
         updated_rows += n_match
         rewritten += len(files)
     if not updated_rows:
@@ -5009,7 +4939,7 @@ def _snapshot_update_once(
         )
     except SnapshotConflictError:
         for p, _s in added:
-            fs.delete(Path(posixpath.join(table_root, p)), False)
+            _remove_local(os.path.join(root, p))
         raise
     return {
         "version": v,
@@ -5088,11 +5018,7 @@ def snapshot_rollback(
         # artifact dir still lets the tail cross with zero partitions
         changelog_entry = [f"c-{uuid.uuid4().hex[:12]}", 0, 0]
         os.makedirs(
-            posixpath.join(
-                _uri_path(table_root), SNAPSHOT_DIR, CHANGES_SUBDIR,
-                changelog_entry[0],
-            ),
-            exist_ok=True,
+            log._local(CHANGES_SUBDIR, changelog_entry[0]), exist_ok=True
         )
     else:
         if old_df is None:
@@ -5155,13 +5081,7 @@ def snapshot_rollback(
     except SnapshotConflictError:
         # losing racer: reclaim the change artifact with the manifest
         # (commit()'s abort removed the latter) — no orphans
-        _rm(
-            spark,
-            posixpath.join(
-                table_root, SNAPSHOT_DIR, CHANGES_SUBDIR,
-                changelog_entry[0],
-            ),
-        )
+        _remove_local(log._local(CHANGES_SUBDIR, changelog_entry[0]))
         raise
     return {"version": v, "rolled_back_to": to_version, "noop": False}
 
@@ -5303,7 +5223,7 @@ def snapshot_upsert_mor(
     if _distinct_keys(keys_df, keys) != n_source:
         raise ValueError("source keys must be unique for UPSERT")
     base_files = log.files(base_version)
-    added = _land_spec_files(spark, log, table_root, source_df, base_version)
+    added = _land_spec_files(log, source_df, base_version)
     if not added:
         raise ValueError("snapshot_upsert_mor: the frame wrote no files")
     # optimistic retry: the EXPENSIVE half (landing the batch's data
@@ -5339,7 +5259,7 @@ def snapshot_upsert_mor(
             )
         except SnapshotConflictError:
             if name is not None:
-                _rm(spark, posixpath.join(log.deletes_dir, name))
+                _remove_local(log._local(DELETES_SUBDIR, name))
             if version is not None:
                 raise
             base_version = log.latest()
@@ -5518,8 +5438,7 @@ def snapshot_merge(
     else:
         src_parts = {"": None}
 
-    fs, _, jvm = _hadoop_fs(spark, table_root)
-    Path = jvm.org.apache.hadoop.fs.Path
+    root = log.root_local
     added: list[tuple[str, int]] = []
     matched_total = 0
     data_cols = [c for c in source_df.columns if c not in pcols]
@@ -5572,24 +5491,20 @@ def snapshot_merge(
         if old_minus is not None:
             new_content = old_minus.unionByName(new_content)
         matched_total += n_old - n_kept
-        tmp_dir = posixpath.join(
-            table_root,
+        tmp_dir = os.path.join(
+            root,
             f"_snapmerge_tmp_{hashlib.md5(part_rel.encode()).hexdigest()[:12]}",
         )
         new_content.write.mode("overwrite").parquet(tmp_dir)
         n_new = spark.read.parquet(tmp_dir).count()
         n_part_source = part_source.count()
         if n_new != n_kept + n_part_source:
-            _rm(spark, tmp_dir)
+            _remove_local(tmp_dir)
             raise RuntimeError(
                 f"merge verification failed in {part_rel!r}: "
                 f"{n_kept} + {n_part_source} != {n_new}"
             )
-        if n_new:
-            added.extend(
-                _move_tmp_files(fs, Path, tmp_dir, table_root, part_rel, "merged")
-            )
-        _rm(spark, tmp_dir)
+        added.extend(_land_files(tmp_dir, root, part_rel, "merged"))
     v = _commit_rewrite(
         spark,
         log,
@@ -5805,8 +5720,7 @@ def _snapshot_merge_full_once(
         else None
     )
 
-    fs, _, jvm = _hadoop_fs(spark, table_root)
-    Path = jvm.org.apache.hadoop.fs.Path
+    root = log.root_local
     added: list[tuple[str, int]] = []
     n_upd_total = n_del_matched = n_del_unmatched = 0
     for part_rel in sorted(set(by_part) | set(ins_parts)):
@@ -5892,8 +5806,8 @@ def _snapshot_merge_full_once(
             new_content = result
         if new_content is None:
             continue
-        tmp_dir = posixpath.join(
-            table_root,
+        tmp_dir = os.path.join(
+            root,
             "_snapmergefull_tmp_"
             + hashlib.md5(part_rel.encode()).hexdigest()[:12],
         )
@@ -5904,18 +5818,12 @@ def _snapshot_merge_full_once(
             + n_ins_here
         )
         if n_new != want:
-            _rm(spark, tmp_dir)
+            _remove_local(tmp_dir)
             raise RuntimeError(
                 f"full-merge verification failed in {part_rel!r}: "
                 f"expected {want}, wrote {n_new}"
             )
-        if n_new:
-            added.extend(
-                _move_tmp_files(
-                    fs, Path, tmp_dir, table_root, part_rel, "merged"
-                )
-            )
-        _rm(spark, tmp_dir)
+        added.extend(_land_files(tmp_dir, root, part_rel, "merged"))
 
     if not added and len(keep) == len(all_files):
         # every candidate partition carried and nothing landed:
@@ -5980,7 +5888,7 @@ def _snapshot_merge_full_once(
         )
     except SnapshotConflictError:
         for p, _s in added:
-            fs.delete(Path(posixpath.join(table_root, p)), False)
+            _remove_local(os.path.join(root, p))
         raise
     return {
         "version": v,
@@ -6321,34 +6229,31 @@ def sweep_orphans(
         .join(referenced, "relpath", "left_anti")
         .collect()
     ]
-    fs, _, jvm = _hadoop_fs(spark, table_root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    now_ms = jvm.java.lang.System.currentTimeMillis()
+    now = time.time()
     deleted = 0
     for relpath in sorted(orphans):
-        p = Path(posixpath.join(table_root, relpath))
-        age_s = (now_ms - fs.getFileStatus(p).getModificationTime()) / 1000.0
-        if age_s < grace_seconds:
+        p = os.path.join(log.root_local, relpath)
+        if now - os.stat(p).st_mtime < grace_seconds:
             continue  # possibly an in-flight commit
-        if fs.delete(p, False):
+        if _remove_local(p):
             deleted += 1
     # MOR delete entries (d- files / e- dirs) and their _tmp- staging
     # referenced by NO version at all — the leftovers of a delete or
     # upsert commit that crashed after landing its entry; the same
     # grace period protects in-flight commits
     orphan_entries = 0
-    ddir = Path(log.deletes_dir)
-    if fs.exists(ddir):
+    ddir = log._local(DELETES_SUBDIR)
+    if os.path.isdir(ddir):
         referenced_entries = {
             n for v in log.versions() for n, _ in log.delete_files(v)
         }
-        for st in fs.listStatus(ddir):
-            name = st.getPath().getName()
+        for name in os.listdir(ddir):
+            p = os.path.join(ddir, name)
             if name in referenced_entries:
                 continue
-            if (now_ms - st.getModificationTime()) / 1000.0 < grace_seconds:
+            if now - os.stat(p).st_mtime < grace_seconds:
                 continue
-            if fs.delete(st.getPath(), True):
+            if _remove_local(p):
                 orphan_entries += 1
     return {"deleted_files": deleted, "deleted_delete_entries": orphan_entries}
 
@@ -6377,11 +6282,9 @@ def expire_snapshots(
     dead = {
         p for v in drop_vs for p, _ in log.files(v) if p not in live
     }
-    fs, _, jvm = _hadoop_fs(spark, table_root)
-    Path = jvm.org.apache.hadoop.fs.Path
     deleted = 0
     for p in sorted(dead):
-        if fs.delete(Path(posixpath.join(table_root, p)), False):
+        if _remove_local(os.path.join(log.root_local, p)):
             deleted += 1
     # MOR delete files are shared across versions (carried forward by
     # commits), so reclaim only those referenced by NO kept version —
@@ -6393,7 +6296,7 @@ def expire_snapshots(
         n for v in drop_vs for n, _ in log.delete_files(v)
     } - live_dels
     for n in sorted(dead_dels):
-        fs.delete(Path(log.deletes_dir, n), True)
+        _remove_local(log._local(DELETES_SUBDIR, n))
     for v in drop_vs:
         # manifests are 1:1 with versions (copy_manifest guarantees it
         # even for metadata-only commits), so a dropped version's

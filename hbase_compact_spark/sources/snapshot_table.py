@@ -64,19 +64,13 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from hbase_compact_spark.compaction.executor import _hidden, _local_root
+
 FORMAT_NAME = "snapshot_table"
 # IN-lists longer than this skip pruning (Spark still filters
 # exactly): each value costs one cached-manifest pruning pass at
 # planning, which stops paying for itself on huge literal lists
 IN_PRUNE_MAX = 64
-
-
-def _local_path(root: str) -> str:
-    if root.startswith("file://"):
-        return root[len("file://"):] or "/"
-    if root.startswith("file:"):
-        return root[len("file:"):]
-    return root
 
 
 def _claim_scan(token: str, fingerprint: str) -> bool:
@@ -269,6 +263,7 @@ class SnapshotTableReader(DataSourceReader):
         so tests can interrogate the plan (shards_opened, kept_files)
         in-process with the same code the worker runs."""
         from hbase_compact_spark.compaction.snapshots import (
+            DELETES_SUBDIR,
             EQ_DELETE_PREFIX,
             SnapshotLog,
             scan_plan,
@@ -309,9 +304,7 @@ class SnapshotTableReader(DataSourceReader):
         # exactly the entries that may kill its rows
         import pyarrow.parquet as pq
 
-        deletes_local = posixpath.join(
-            _local_path(self._root), "_snapshots", "deletes"
-        )
+        deletes_local = log._local(DELETES_SUBDIR)
         entry_touch: list[tuple[dict, set]] = []
         for name, _n in log.delete_files(v):
             if name.startswith(EQ_DELETE_PREFIX):
@@ -342,7 +335,7 @@ class SnapshotTableReader(DataSourceReader):
                 }
             entry_touch.append((ent, touched))
 
-        root_local = _local_path(self._root)
+        root_local = log.root_local
         parts: list[InputPartition] = [
             _ScanFilePartition(
                 posixpath.join(root_local, rp),
@@ -469,7 +462,7 @@ def table_schema(table_root: str, version=None):
 
     schema = from_arrow_schema(
         pq.read_schema(
-            posixpath.join(_local_path(table_root), files[0][0])
+            posixpath.join(log.root_local, files[0][0])
         )
     )
     for comp in posixpath.dirname(files[0][0]).split("/"):
@@ -791,7 +784,7 @@ class SnapshotTableWriter(DataSourceArrowWriter):
             rel = posixpath.join(
                 dir_rel, f"part-{uuid.uuid4().hex[:12]}.parquet"
             )
-            abs_path = posixpath.join(_local_path(self._root), rel)
+            abs_path = posixpath.join(_local_root(self._root), rel)
             os.makedirs(posixpath.dirname(abs_path), exist_ok=True)
             pq.write_table(sub, abs_path)
             stats = _json.dumps(
@@ -898,7 +891,7 @@ class SnapshotTableWriter(DataSourceArrowWriter):
             SNAPSHOT_DIR,
         )
 
-        root = _local_path(self._root)
+        root = _local_root(self._root)
         rels, sizes = [], []
         for dirpath, dirnames, filenames in os.walk(root):
             rel_dir = os.path.relpath(dirpath, root)
@@ -912,9 +905,7 @@ class SnapshotTableWriter(DataSourceArrowWriter):
                 and not d.startswith("_tmp")
             ]
             for name in filenames:
-                if not name.endswith(".parquet") or name.startswith(
-                    "_"
-                ):
+                if not name.endswith(".parquet") or _hidden(name):
                     continue
                 rel = (
                     name
@@ -945,7 +936,7 @@ class SnapshotTableWriter(DataSourceArrowWriter):
         # remove exactly the files the succeeded tasks reported
         # (failed tasks' files are manifest-invisible orphans for
         # sweep_orphans), then drop the flat staging dir
-        root = _local_path(self._root)
+        root = _local_root(self._root)
         for m in messages or []:
             for rel, _, _ in getattr(m, "files", None) or []:
                 try:
@@ -958,7 +949,7 @@ class SnapshotTableWriter(DataSourceArrowWriter):
         import shutil
 
         shutil.rmtree(
-            posixpath.join(_local_path(self._root), self._write_dir),
+            posixpath.join(_local_root(self._root), self._write_dir),
             ignore_errors=True,
         )
 

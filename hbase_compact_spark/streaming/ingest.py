@@ -21,14 +21,17 @@ concurrency, so ingest and compaction interleave without locks.
 
 from __future__ import annotations
 
-import posixpath
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from hbase_compact_spark.compaction.executor import _hadoop_fs, _rm
-from hbase_compact_spark.compaction.snapshots import SnapshotLog
+from hbase_compact_spark.compaction.snapshots import (
+    SnapshotConflictError,
+    SnapshotLog,
+    _land_files,
+)
 
 
 def snapshot_sink_batch(
@@ -56,39 +59,15 @@ def _commit_batch(
     *,
     op: str,
 ) -> int:
-    fs, _, jvm = _hadoop_fs(spark, table_root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    tmp_dir = posixpath.join(table_root, f"_ingest_tmp_{uuid.uuid4().hex[:10]}")
+    tmp_dir = os.path.join(
+        log.root_local, f"_ingest_tmp_{uuid.uuid4().hex[:10]}"
+    )
     batch_df.write.mode("overwrite").parquet(tmp_dir)
-    part_dir = posixpath.join(table_root, partition) if partition else table_root
-    fs.mkdirs(Path(part_dir))
-    batch = uuid.uuid4().hex[:10]
-    added: list[tuple[str, int]] = []
-    i = 0
-    for st in fs.listStatus(Path(tmp_dir)):
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        dest_name = f"ingest-{batch}-{i:05d}.parquet"
-        dest = Path(part_dir, dest_name)
-        if not fs.rename(st.getPath(), dest):
-            raise RuntimeError(f"ingest rename failed: {name} -> {dest}")
-        added.append(
-            (
-                posixpath.join(partition, dest_name) if partition else dest_name,
-                int(fs.getFileStatus(dest).getLen()),
-            )
-        )
-        i += 1
-    _rm(spark, tmp_dir)
+    added = _land_files(tmp_dir, log.root_local, partition, "ingest")
     # optimistic-concurrency loop: a concurrent committer (compaction,
     # another ingest) moving the base raises SnapshotConflictError;
     # the batch's files are already physically placed, so the retry is
     # metadata-only — re-read the new latest and re-derive its listing
-    from hbase_compact_spark.compaction.snapshots import (
-        SnapshotConflictError,
-    )
-
     for _ in range(50):
         base = log.latest()
         try:
